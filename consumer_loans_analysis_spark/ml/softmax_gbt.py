@@ -495,13 +495,7 @@ class SoftmaxGBTClassifier(Estimator, DefaultParamsReadable, DefaultParamsWritab
                 < F.lit(int(vf * 1_000_003)),
             )
         best_dev, best_round = float("inf"), -1
-        # opt-in per-phase wall breakdown (profiling deep configs); zero
-        # cost when the env var is unset
-        import os as _os
-        import time as _time
-        _prof = bool(_os.environ.get("SPARK_GRAFT_GBT_PROFILE"))
         for m in range(g(self.maxIter)):
-            _t = _time.perf_counter() if _prof else 0.0
             # 0. DART (Rashmi & Gilad-Bachrach 2015, XGBoost dart booster):
             # drop each prior round independently w.p. dropoutRate, then
             # REBUILD _F from the kept rounds' weighted trees (weights are
@@ -537,9 +531,6 @@ class SoftmaxGBTClassifier(Estimator, DefaultParamsReadable, DefaultParamsWritab
             frame = frame.select(
                 "*", *[F.element_at("_r", k + 1).alias(f"_r_{k}") for k in range(K)]
             ).localCheckpoint(eager=True)
-            if _prof:
-                print(f"[gbt-prof] m={m} residuals+ckpt {_time.perf_counter() - _t:.2f}s", flush=True)
-                _t = _time.perf_counter()
 
             # 2. K residual trees against the one materialized frame
             # (held-out rows never reach the tree fits or the gammas)
@@ -573,15 +564,8 @@ class SoftmaxGBTClassifier(Estimator, DefaultParamsReadable, DefaultParamsWritab
 
             with ThreadPoolExecutor(n_fit_threads) as pool:
                 models = list(pool.map(fit_one, range(K)))
-            if _prof:
-                print(f"[gbt-prof] m={m} tree fits {_time.perf_counter() - _t:.2f}s", flush=True)
-                _t = _time.perf_counter()
             with ThreadPoolExecutor(n_fit_threads) as pool:
                 structs = list(pool.map(_extract_tree_from_save, models))
-            if _prof:
-                nn = sum(len(s["left"]) for s in structs)
-                print(f"[gbt-prof] m={m} extract {_time.perf_counter() - _t:.2f}s ({nn} nodes)", flush=True)
-                _t = _time.perf_counter()
 
             # 3. Newton gammas, one distributed aggregation
             leaves = _leaves_udf(structs)
@@ -615,9 +599,6 @@ class SoftmaxGBTClassifier(Estimator, DefaultParamsReadable, DefaultParamsWritab
                     for i in range(len(tr["value"]))
                 ]
             rounds.append(structs)
-            if _prof:
-                print(f"[gbt-prof] m={m} gammas {_time.perf_counter() - _t:.2f}s", flush=True)
-                _t = _time.perf_counter()
 
             # 4a. DART weight bookkeeping (XGBoost normalize_type="tree"):
             # k dropped → new round weight 1/(k+lr), each dropped round
@@ -642,8 +623,6 @@ class SoftmaxGBTClassifier(Estimator, DefaultParamsReadable, DefaultParamsWritab
                     "_feat", "_farr", "_y", *extra,
                     F.zip_with("_F", step(F.col("_farr")), lambda a, b: a + b).alias("_F"),
                 )
-            if _prof:
-                print(f"[gbt-prof] m={m} F-update {_time.perf_counter() - _t:.2f}s", flush=True)
 
             # 5. OOF deviance on the held-out slice (one small agg per
             # round); XGBoost early_stopping_rounds semantics — stop when
@@ -678,8 +657,6 @@ class SoftmaxGBTClassifier(Estimator, DefaultParamsReadable, DefaultParamsWritab
                     .first()
                 )
                 dev = row["d"] if row is not None else None
-                if _prof:
-                    print(f"[gbt-prof] m={m} oof-dev {dev}", flush=True)
                 if dev is not None and dev < best_dev - 1e-12:
                     best_dev, best_round = dev, m
                 if es_rounds > 0 and m - best_round >= es_rounds:

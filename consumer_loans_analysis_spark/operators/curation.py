@@ -374,14 +374,14 @@ def pca_whiten_score(
 ) -> DataFrame:
     """Whitened PCA projection + Mahalanobis outlier score over the PINNED
     transform (``operators/pca_components.py`` — fitted once driver-side,
-    frozen as literals; re-pin with ``probe_refit_pca_components.py``).
+    frozen as literals; re-pin with ``tools/probe_refit_pca_components.py``).
     The covariance-aware companion to dq4's per-cluster distance rank:
     ``maha2 = Σ_j ((v·w_j − c_j)·inv_sd_j)²`` is the squared Mahalanobis
     distance in the top-k principal subspace, and ``is_outlier`` flags
     rows beyond ``threshold`` (default: the chi²₈ 0.99 quantile — the
     classical whitening-then-threshold embedding audit; the registered
     query pins the 0.90 quantile instead because this corpus's tails are
-    sub-Gaussian, see ``probe_refit_pca_components.py``).
+    sub-Gaussian, see ``tools/probe_refit_pca_components.py``).
 
     Numerics are SQL-portable BY CONSTRUCTION: each dot is the same
     left-to-right accumulation (Spark ``aggregate`` / DuckDB
@@ -454,14 +454,13 @@ def nb_seed_classifier(
     doc_id-keyed aggregation — the only corpus shuffles are the count
     build and the score build. The model is VOCABULARY-sized: Heaps'
     law bounds it far below corpus size, but at 100 TB that is still
-    ~10^8 tokens — past any broadcast threshold. The scoring join is
-    therefore strategy-hinted via ``text.vocab_join_side``: broadcast
-    the model by default; ``SPARK_GRAFT_VOCAB_JOIN=shuffle_hash`` builds
-    a ShuffledHashJoin on the model side instead. (The r12 un-hinted
-    variant was measured-wrong: the static planner broadcast the CORPUS
-    token stream — BuildLeft — 1.26× slower at sf0.1 and strictly worse
-    at scale; AQE cannot demote a static broadcast join.) The
-    EXACTLY-bounded production variant is ``nb_seed_classifier_hashed``.
+    ~10^8 tokens — past any broadcast threshold. The scoring join
+    broadcasts the model side explicitly. (The r12 un-hinted variant was
+    measured-wrong: the static planner broadcast the CORPUS token stream
+    — BuildLeft — 1.26× slower at sf0.1 and strictly worse at scale; AQE
+    cannot demote a static broadcast join.) Where the vocabulary
+    outgrows the broadcast threshold, use the EXACTLY-bounded variant
+    ``nb_seed_classifier_hashed``.
 
     Returns (doc_id, source, n_tokens, log_odds rounded 6dp, kept).
     """
@@ -504,7 +503,7 @@ def nb_seed_classifier(
         ).alias("llr"),
     )
     scored = (
-        tok.join(text.vocab_join_side(model), "w")
+        tok.join(F.broadcast(model), "w")
         .groupBy("doc_id", "source")
         .agg(F.count(F.lit(1)).alias("n_tokens"), F.sum("llr").alias("s_llr"))
     )

@@ -15,8 +15,6 @@ deterministic and engine-portable.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
@@ -731,11 +729,8 @@ def recon_int4_block(
 
 
 # Estimated serial multiply-adds below which _fit_subspace_codebooks runs
-# its loop in-process instead of as a Spark job (see its docstring; env
-# knob for hosts with different job-dispatch overhead).
-_PARALLEL_FIT_MIN_FLOPS = float(
-    os.environ.get("SPARK_GRAFT_PARALLEL_FIT_MIN_FLOPS", "2e9")
-)
+# its loop in-process instead of as a Spark job (see its docstring).
+_PARALLEL_FIT_MIN_FLOPS = 2e9
 
 
 def _kmeanspp_lloyd(X, ks: int, seed: int, iters: int = 25):
@@ -801,7 +796,7 @@ def _fit_subspace_codebooks(spark, Xs, m_subs: int, ks: int, seed: int):
     flagged). Each task runs the IDENTICAL ``_kmeanpp_lloyd`` call the
     serial loop ran (same slice, same ``seed + s``) in the same
     numpy/OpenBLAS build, so the codebooks are bit-identical — pinned-
-    literal provenance (probe_refit_pq_codebooks.py) is unaffected. The
+    literal provenance (tools/probe_refit_pq_codebooks.py) is unaffected. The
     sample ships once as a broadcast (fit_sample-bounded: ≤16384×dim
     doubles, ~8 MB).
 
@@ -1000,6 +995,13 @@ def pq_topk(
     q_rows = queries.select(
         F.col(id_col).alias("query_id"), unit(F.col(vec_col)).alias("v")
     ).collect()
+    if not q_rows:
+        # empty query set: np.asarray([]) is 1-D, so the LUT build below
+        # would IndexError — the right answer is an empty result with the
+        # contract schema (the scan's id types)
+        return queries.sparkSession.createDataFrame(
+            [], "query_id long, neighbor_id long, cos double, rank int"
+        )
     q_ids = np.array([r["query_id"] for r in q_rows])
     Q = np.asarray([r["v"] for r in q_rows], dtype=np.float64)
     Qs = Q.reshape(len(q_rows), m_subs, dsub)

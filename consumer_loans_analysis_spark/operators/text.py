@@ -1,41 +1,17 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
-All pure Column expressions (JVM-side, whole-stage-codegen) — no Python in
-the hot path. The portable hash is md5-based so results are reproducible
-across engines and across Spark versions (murmur3 `F.hash` is
+Mostly pure Column expressions (JVM-side, whole-stage-codegen). Per-document
+operators whose state does not fit a Column fold — Kneser-Ney scoring, the
+Gopher repetition battery, the subword encoders — run as map-only Arrow
+``mapInPandas`` passes. The portable hash is md5-based so results are
+reproducible across engines and across Spark versions (murmur3 `F.hash` is
 JVM-implementation-specific; md5 is a fixed standard).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def vocab_join_side(small: DataFrame) -> DataFrame:
-    """Join-strategy hint for a VOCABULARY-sized build side (distinct-word
-    encode tables, NB token models): Heaps-bounded — orders of magnitude
-    below corpus size, but not broadcast-bounded at 100 TB (~10^8 rows).
-
-    Default is an explicit broadcast of this side. The r12 attempt to drop
-    the hint and "let AQE decide" was MEASURED-WRONG both locally and at
-    scale: with no hint the static planner sized the aggregated vocab side
-    LARGER than the raw scan side and planned ``BroadcastHashJoin
-    BuildLeft`` — broadcasting the posexploded CORPUS token stream (see
-    plans/r12/t20_*_after pre-fix; paired r11/r12 A/B: t20 1.34×, t21
-    1.46×, dq8 1.26× slower). AQE cannot demote a statically planned
-    broadcast join, so the un-hinted plan is the scale-killer, not the
-    hinted one. For deployments where the vocabulary genuinely outgrows
-    the broadcast threshold, set ``SPARK_GRAFT_VOCAB_JOIN=shuffle_hash``:
-    a ShuffledHashJoin BUILDING on this (smaller) side — no corpus sort,
-    no corpus broadcast. The no-join production encode paths
-    (``wordpiece_encode_broadcast`` / ``unigram_encode_broadcast`` /
-    ``nb_seed_classifier_hashed``) avoid the question structurally."""
-    if os.environ.get("SPARK_GRAFT_VOCAB_JOIN") == "shuffle_hash":
-        return small.hint("shuffle_hash")
-    return F.broadcast(small)
 
 
 def portable_hash(col: Column, seed: int | None = None, hex_chars: int = 8) -> Column:
@@ -200,45 +176,23 @@ def kneser_ney_score(
     passthrough_cols: tuple = (),
 ) -> DataFrame:
     """Interpolated Kneser-Ney bigram scoring (t19) — see the
-    ``t19_kneser_ney_score`` query docstring for the formula, smoothing
-    rationale, and scale shape. Returns (id, n_bigrams,
-    kn_cross_entropy); documents with fewer than 2 words score no rows
-    (no bigrams), matching the oracle's join semantics.
+    ``t19_kneser_ney_score`` query docstring for the formula and
+    smoothing rationale. Returns (id, n_bigrams, kn_cross_entropy);
+    documents with fewer than 2 words score no rows (no bigrams),
+    matching the oracle's join semantics.
 
-    Model build (r13): the continuation/discount statistics are exact
-    integer aggregations of the bigram-counts table — the table the
-    scoring join broadcasts anyway — so by default they are computed in
-    ONE driver-side pandas pass (``SPARK_GRAFT_KN_MODEL=driver``),
-    deleting three shuffled aggregations, two joins and a checkpoint
-    from the plan. ``SPARK_GRAFT_KN_MODEL=dist`` restores the
-    distributed build for bigram tables past driver memory; pair it
-    with ``SPARK_GRAFT_VOCAB_JOIN=shuffle_hash`` past the broadcast
-    threshold. Both paths share the ``_logp`` expression and are
-    bit-identical (pytest-pinned).
+    Model build: the continuation/discount statistics are exact integer
+    aggregations of the bigram-counts table, so they are computed in ONE
+    driver-side pandas pass over that table — no shuffled aggregation,
+    join or checkpoint in the plan. The log-probabilities are evaluated
+    by Spark's ``log`` over the local model relation (``_logp``).
 
-    ``passthrough_cols`` (r13, the pipe2 precedent): per-doc constant
-    columns copied onto the output — zero compute in the driver path
-    (they ride the Arrow batch), ``F.first`` in the dist aggregation —
+    ``passthrough_cols`` (the pipe2 precedent): per-doc constant columns
+    copied onto the output — zero compute (they ride the Arrow batch) —
     so callers need no doc-keyed join to re-attach them."""
-    w = F.split(F.col(text_col), " ")
-    bigrams = F.when(
-        F.size(w) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - 1),
-            lambda i: F.struct(
-                F.element_at(w, i).alias("w1"),
-                F.element_at(w, i + F.lit(1)).alias("w2"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
-    doc_big = df.select(
-        F.col(id_col), F.explode(bigrams).alias("b")
-    ).select(id_col, F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
 
     def _logp(disc: Column, types: Column) -> Column:
-        # the interpolated-KN log-probability — ONE expression shared by
-        # both model-build paths below, so they are the same IEEE754
-        # doubles by construction (same implicit casts: c1/n1p_w1/
+        # the interpolated-KN log-probability (implicit casts: c1/n1p_w1/
         # n1p_pre stay LONG, disc/types DOUBLE)
         return F.log(
             (
@@ -248,191 +202,112 @@ def kneser_ney_score(
             / F.col("c1")
         )
 
-    if os.environ.get("SPARK_GRAFT_KN_MODEL", "driver") == "driver":
-        # r13 (the VERDICT r12 pipe5 lever), two parts:
-        #
-        # (1) The model-statistics tables (uc, pre, scal) are pure
-        # aggregations of the bigram-counts table — which is EXACTLY the
-        # table the r12 scoring join broadcast to every executor, so
-        # materializing it on the driver costs no memory the broadcast
-        # did not already imply. Folding the three consumers into exact
-        # pandas integer aggregations deletes three shuffled
-        # aggregations, two joins, a crossJoin, and the counts-table
-        # localCheckpoint from the plan (r12: that sequential stage
-        # chain ran over a vocab²-bounded table).
-        #
-        # (2) Both corpus passes become map-only Arrow passes — the r12
-        # profile showed each 5M-row bigram explode+hash-agg pass
-        # costing ~3 s at sf0.1 while every model stage ran over ≤10³
-        # rows. Pass one counts (w1,w2) pairs per batch (C-level dict
-        # ops; partials collected and final-summed exactly in pandas
-        # int64); pass two scores each doc against the model dict in the
-        # closure. ZERO Exchange, zero joins, two corpus reads — the
-        # information-theoretic floor for self-trained scoring. The
-        # per-doc sum is the same left-to-right accumulation the
-        # hash-agg partial performed (explode keeps a doc's bigrams in
-        # one partition), and logp itself is still evaluated by Spark's
-        # log over the local model relation, so scores stay
-        # bit-identical to the dist path (pytest-pinned).
-        from collections import Counter
+    # Two map-only Arrow corpus passes. Pass one counts (w1,w2) pairs per
+    # batch (C-level dict ops; partials collected and final-summed
+    # exactly in pandas int64); the model statistics (unigram totals,
+    # left/right continuation counts, the count-of-counts discount) are
+    # pandas aggregations of that bigram-TYPES table on the driver. Pass
+    # two scores each doc against the model dict in the closure. ZERO
+    # Exchange, zero joins — the floor for self-trained scoring. The
+    # per-doc sum is the left-to-right accumulation a hash-agg partial
+    # would perform (a doc's bigrams stay in one batch).
+    from collections import Counter
 
-        import pandas as pd
+    import pandas as pd
 
-        spark = df.sparkSession
-        id_t = df.schema[id_col].dataType.simpleString()
+    spark = df.sparkSession
+    id_t = df.schema[id_col].dataType.simpleString()
 
-        def count_pairs(batches):
-            for pdf in batches:
-                cnt: Counter = Counter()
-                for txt in pdf[text_col]:
-                    ws = txt.split(" ") if txt is not None else []
-                    if len(ws) >= 2:
-                        cnt.update(zip(ws, ws[1:]))
-                if cnt:
-                    yield pd.DataFrame(
-                        {
-                            "w1": [k[0] for k in cnt],
-                            "w2": [k[1] for k in cnt],
-                            "c": pd.Series(list(cnt.values()), dtype="int64"),
-                        }
-                    )
+    def count_pairs(batches):
+        for pdf in batches:
+            cnt: Counter = Counter()
+            for txt in pdf[text_col]:
+                ws = txt.split(" ") if txt is not None else []
+                if len(ws) >= 2:
+                    cnt.update(zip(ws, ws[1:]))
+            if cnt:
+                yield pd.DataFrame(
+                    {
+                        "w1": [k[0] for k in cnt],
+                        "w2": [k[1] for k in cnt],
+                        "c": pd.Series(list(cnt.values()), dtype="int64"),
+                    }
+                )
 
-        part = df.select(text_col).mapInPandas(
-            count_pairs, "w1 string, w2 string, c long"
-        )
-        pc = part.toPandas()  # ≤ bigram-types × partitions partial rows
-        counts = (
-            pc.groupby(["w1", "w2"], as_index=False)["c"]
-            .sum()
-            .rename(columns={"c": "c12"})
-        )
-        schema = (
-            "w1 string, w2 string, c12 long, c1 long, n1p_w1 long, n1p_pre long"
-        )
-        if len(counts) == 0:
-            model_rows = []
-        else:
-            g1 = counts.groupby("w1")["c12"]
-            counts["c1"] = g1.transform("sum")
-            counts["n1p_w1"] = g1.transform("size")
-            counts["n1p_pre"] = counts.groupby("w2")["c12"].transform("size")
-            c12v = counts["c12"]
-            n1 = float((c12v == 1).sum())
-            n2 = float((c12v == 2).sum())
-            types_f = float(len(counts))
-            # same guarded count-of-counts discount as the dist path;
-            # with literal scalars Catalyst constant-folds the identical
-            # double division
-            disc = (
-                F.lit(n1) / (F.lit(n1) + 2 * F.lit(n2))
-                if n1 + 2 * n2 > 0
-                else F.lit(0.0)
-            )
-            model_src = spark.createDataFrame(
-                counts[["w1", "w2", "c12", "c1", "n1p_w1", "n1p_pre"]], schema
-            )
-            model_rows = model_src.select(
-                "w1", "w2", _logp(disc, F.lit(types_f)).alias("logp")
-            ).collect()  # LocalTableScan — no cluster job
-        logp_map = {(r[0], r[1]): r[2] for r in model_rows}
-
-        def score(batches):
-            for pdf in batches:
-                keep_idx: list = []
-                nb: list = []
-                ce: list = []
-                for i, txt in enumerate(pdf[text_col]):
-                    ws = txt.split(" ") if txt is not None else []
-                    if len(ws) < 2:
-                        continue  # no bigrams -> no row (join semantics)
-                    s = 0.0
-                    n = 0
-                    for pair in zip(ws, ws[1:]):
-                        s += logp_map[pair]
-                        n += 1
-                    keep_idx.append(i)
-                    nb.append(n)
-                    ce.append(_spark_round6(-(s / n)))
-                out = {
-                    id_col: pdf[id_col].iloc[keep_idx].reset_index(drop=True),
-                    "n_bigrams": pd.Series(nb, dtype="int64"),
-                    "kn_cross_entropy": pd.Series(ce, dtype="float64"),
-                }
-                for c in passthrough_cols:
-                    out[c] = pdf[c].iloc[keep_idx].reset_index(drop=True)
-                yield pd.DataFrame(out)
-
-        pt_schema = "".join(
-            f", {c} {df.schema[c].dataType.simpleString()}"
-            for c in passthrough_cols
-        )
-        return df.select(id_col, text_col, *passthrough_cols).mapInPandas(
-            score,
-            f"{id_col} {id_t}, n_bigrams long, kn_cross_entropy double"
-            + pt_schema,
-        )
+    part = df.select(text_col).mapInPandas(
+        count_pairs, "w1 string, w2 string, c long"
+    )
+    pc = part.toPandas()  # ≤ bigram-types × partitions partial rows
+    counts = (
+        pc.groupby(["w1", "w2"], as_index=False)["c"]
+        .sum()
+        .rename(columns={"c": "c12"})
+    )
+    schema = (
+        "w1 string, w2 string, c12 long, c1 long, n1p_w1 long, n1p_pre long"
+    )
+    if len(counts) == 0:
+        model_rows = []
     else:
-        # SPARK_GRAFT_KN_MODEL=dist — the distributed model build, for
-        # deployments whose bigram-TYPES table outgrows driver memory
-        # (it then also outgrows the broadcast threshold: pair with
-        # SPARK_GRAFT_VOCAB_JOIN=shuffle_hash below).
-        # The counts table is localCheckpointed DELIBERATELY: its four
-        # consumers (uc, pre, scal, the model join) sit in one plan, but
-        # column pruning gives each branch a canonically DIFFERENT bc
-        # subtree, so ReusedExchange does not fire — measured r12:
-        # removing this checkpoint recomputed the explode+count subtree
-        # 4x (16 -> 28 Exchanges, pipe5 6.7 s -> 13.3 s) and starved AQE
-        # of the size stats that make the model joins broadcast.
-        bc = (
-            doc_big.groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).alias("c12"))
-            .localCheckpoint()
-        )
-        uc = bc.groupBy("w1").agg(
-            F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n1p_w1")
-        )
-        pre = bc.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p_pre"))
-        scal = bc.agg(
-            F.sum((F.col("c12") == 1).cast("int")).cast("double").alias("n1"),
-            F.sum((F.col("c12") == 2).cast("int")).cast("double").alias("n2"),
-            F.count(F.lit(1)).cast("double").alias("types"),
-        )
+        g1 = counts.groupby("w1")["c12"]
+        counts["c1"] = g1.transform("sum")
+        counts["n1p_w1"] = g1.transform("size")
+        counts["n1p_pre"] = counts.groupby("w2")["c12"].transform("size")
+        c12v = counts["c12"]
+        n1 = float((c12v == 1).sum())
+        n2 = float((c12v == 2).sum())
+        types_f = float(len(counts))
         # a corpus dense enough that NO bigram has count 1 or 2 gives the
         # count-of-counts estimate no evidence: D = 0/0. The correct limit
-        # is D = 0 (no discount -> plain MLE).
-        disc = F.when(
-            F.col("n1") + 2 * F.col("n2") > 0,
-            F.col("n1") / (F.col("n1") + 2 * F.col("n2")),
-        ).otherwise(F.lit(0.0))
-        model = (
-            bc.join(uc, "w1")
-            .join(pre, "w2")
-            .crossJoin(F.broadcast(scal))
-            .select("w1", "w2", _logp(disc, F.col("types")).alias("logp"))
+        # is D = 0 (no discount -> plain MLE). With literal scalars
+        # Catalyst constant-folds the double division.
+        disc = (
+            F.lit(n1) / (F.lit(n1) + 2 * F.lit(n2))
+            if n1 + 2 * n2 > 0
+            else F.lit(0.0)
         )
-    # The model-side build hint is KEPT deliberately (r12 A/B): un-hinted,
-    # the static planner re-plans the scoring join as a SortMergeJoin — a
-    # corpus-sized (w1,w2) shuffle+sort of doc_big that AQE's runtime BHJ
-    # conversion did not recover (measured: pipe5 6.7 s -> 13.6 s, t19
-    # plan 6 BHJ -> 0). The model is bigram-TYPES-sized (vocab²/Heaps-
-    # bounded); where it outgrows the broadcast threshold, set
-    # SPARK_GRAFT_VOCAB_JOIN=shuffle_hash (r13, VERDICT r12 #4): a
-    # ShuffledHashJoin BUILDING on the model side — no corpus sort, no
-    # corpus broadcast.
-    score_src = df.select(
-        F.col(id_col), *passthrough_cols, F.explode(bigrams).alias("b")
-    ).select(
-        id_col, *passthrough_cols,
-        F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"),
+        model_src = spark.createDataFrame(
+            counts[["w1", "w2", "c12", "c1", "n1p_w1", "n1p_pre"]], schema
+        )
+        model_rows = model_src.select(
+            "w1", "w2", _logp(disc, F.lit(types_f)).alias("logp")
+        ).collect()  # LocalTableScan — no cluster job
+    logp_map = {(r[0], r[1]): r[2] for r in model_rows}
+
+    def score(batches):
+        for pdf in batches:
+            keep_idx: list = []
+            nb: list = []
+            ce: list = []
+            for i, txt in enumerate(pdf[text_col]):
+                ws = txt.split(" ") if txt is not None else []
+                if len(ws) < 2:
+                    continue  # no bigrams -> no row (join semantics)
+                s = 0.0
+                n = 0
+                for pair in zip(ws, ws[1:]):
+                    s += logp_map[pair]
+                    n += 1
+                keep_idx.append(i)
+                nb.append(n)
+                ce.append(_spark_round6(-(s / n)))
+            out = {
+                id_col: pdf[id_col].iloc[keep_idx].reset_index(drop=True),
+                "n_bigrams": pd.Series(nb, dtype="int64"),
+                "kn_cross_entropy": pd.Series(ce, dtype="float64"),
+            }
+            for c in passthrough_cols:
+                out[c] = pdf[c].iloc[keep_idx].reset_index(drop=True)
+            yield pd.DataFrame(out)
+
+    pt_schema = "".join(
+        f", {c} {df.schema[c].dataType.simpleString()}"
+        for c in passthrough_cols
     )
-    return (
-        score_src.join(vocab_join_side(model), ["w1", "w2"])
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.round(-F.avg("logp"), 6).alias("kn_cross_entropy"),
-            *[F.first(c).alias(c) for c in passthrough_cols],
-        )
+    return df.select(id_col, text_col, *passthrough_cols).mapInPandas(
+        score,
+        f"{id_col} {id_t}, n_bigrams long, kn_cross_entropy double"
+        + pt_schema,
     )
 
 
@@ -555,7 +430,10 @@ def gopher_repetition_rules(
                                     cov += e_i - lo
                                 if e_i > pmax:
                                     pmax = e_i
-                        cols[nm].append(_spark_round6(float(cov) / total))
+                        # an empty document covers nothing: 0.0, not 0/0
+                        cols[nm].append(
+                            _spark_round6(float(cov) / total) if total else 0.0
+                        )
             out = {id_col: pdf[id_col].reset_index(drop=True)}
             for nm in frac_names:
                 out[nm] = pd.Series(cols[nm], dtype="float64")
@@ -1632,259 +1510,7 @@ def mg_heavy_hitters(
     )
 
 
-def wordpiece_encode(
-    df: DataFrame,
-    vocab: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """WordPiece-style GREEDY longest-match subword encoding with a pinned
-    vocabulary (Wu et al. 2016 / BERT's tokenizer family — the other
-    production tokenizer class next to BPE; HuggingFace WordPiece uses the
-    same longest-match-first walk). Per word, repeatedly take the LONGEST
-    vocab piece matching at the cursor (length DESC, piece ASC — the
-    equal-length tie can only be the identical string, the tie-break is
-    belt-and-braces determinism), falling back to the single character when
-    nothing matches — so segmentation is total and LOSSLESS (concat of
-    pieces == word; no [UNK] information loss), which the roundtrip pytest
-    pins.
-
-    Returns per document: (id, n_words, n_pieces, fertility = pieces/word
-    rounded 6dp, pieces_digest = md5 of the full in-order piece sequence,
-    space-joined) — the digest pins the SEGMENTATION itself under the hash
-    oracle, not just its statistics.
-
-    Scale shape (the t14b/t15c tokenizer contract): the greedy walk runs
-    once per DISTINCT word (Heaps-bounded table), as pure Column
-    expressions — an ``aggregate`` fold over character positions whose step
-    is a vocab-literal ``filter`` + ``element_at`` (no UDF, whole-stage
-    codegen) — and the corpus only pays one posexplode + a broadcast join
-    of the encoded distinct-word table + one per-doc aggregation. Encode
-    cost is O(distinct_words × word_len × |vocab|), corpus-size-invariant;
-    the corpus-scan side is O(tokens).
-    """
-    pieces = sorted(set(vocab), key=lambda p: (-len(p), p))
-    piece_arr = F.array(
-        *[
-            F.struct(F.lit(p).alias("p"), F.lit(len(p)).alias("l"))
-            for p in pieces
-        ]
-    )
-
-    tok = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "word"),
-    ).filter(F.length("word") > 0)
-    dw = tok.select("word").distinct().withColumn("_pieces", piece_arr)
-
-    def step(acc, i):
-        # act only when the cursor sits at this character position —
-        # positions consumed by an earlier multi-char piece no-op through
-        matched = F.filter(
-            F.col("_pieces"),
-            lambda v: F.col("word").substr(acc["pos"], v["l"]) == v["p"],
-        )
-        # try_element_at: NULL (not an ANSI error) when nothing matched,
-        # which is exactly the coalesce-to-fallback case
-        best = F.try_element_at(matched, F.lit(1))  # length-DESC order → longest
-        piece = F.coalesce(best["p"], F.col("word").substr(acc["pos"], F.lit(1)))
-        return F.when(i != acc["pos"], acc).otherwise(
-            F.struct(
-                (acc["pos"] + F.length(piece)).cast("int").alias("pos"),
-                F.concat(acc["ps"], F.array(piece)).alias("ps"),
-            )
-        )
-
-    enc = dw.select(
-        "word",
-        F.aggregate(
-            F.sequence(F.lit(1), F.length("word")),
-            F.struct(
-                F.lit(1).cast("int").alias("pos"),
-                F.array().cast("array<string>").alias("ps"),
-            ),
-            step,
-            lambda acc: acc["ps"],
-        ).alias("ps"),
-    ).select(
-        "word",
-        F.size("ps").cast("long").alias("np"),
-        F.array_join("ps", " ").alias("pstr"),
-    )
-
-    # deliberate build-side choice (guide §3; see vocab_join_side): the
-    # encode table is the vocabulary-sized side — broadcast it (default)
-    # or shuffle-hash-build on it (SPARK_GRAFT_VOCAB_JOIN=shuffle_hash).
-    # Un-hinted, the static planner broadcast the CORPUS token stream
-    # (BuildLeft) — measured 1.34× slower at sf0.1 and a scale-killer.
-    joined = tok.join(vocab_join_side(enc), "word")
-    return joined.groupBy(F.col(id_col)).agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum("np").alias("n_pieces"),
-        F.round(
-            F.sum("np").cast("double") / F.count(F.lit(1)).cast("double"), 6
-        ).alias("fertility"),
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "pstr"))),
-                    lambda s: s["pstr"],
-                ),
-                " ",
-            )
-        ).alias("pieces_digest"),
-    )
-
-
 UNIGRAM_FALLBACK_COST = 1500  # centi-nats for any single char outside the vocab
-
-
-def unigram_encode(
-    df: DataFrame,
-    vocab: list[tuple[str, int]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Unigram-LM subword encoding with a pinned vocabulary — the
-    SentencePiece family (Kudo 2018): per word, the segmentation that
-    MINIMIZES the summed piece costs, found by Viterbi dynamic
-    programming (vs ``wordpiece_encode``'s greedy longest-match — the
-    two genuinely differ: a cheap 2-piece split beats an expensive
-    whole-word piece, which the pytest pins). Costs are INTEGER
-    centi-nats (the production serving trick: integer-quantized scores
-    make the DP exact, deterministic, and engine-portable — no float
-    comparison ever happens), with every out-of-vocab single character
-    available at ``UNIGRAM_FALLBACK_COST`` so segmentation is total and
-    lossless. Tie-break at equal cost: longer piece, then lexicographic.
-
-    Returns per document: (id, n_words, n_pieces, fertility,
-    total_cost = Σ word Viterbi costs — an exact BIGINT, so the oracle
-    compares the OPTIMUM ITSELF, pieces_digest = md5 of the in-order
-    piece sequence, pinning the argmin segmentation too).
-
-    Scale shape: identical to ``wordpiece_encode`` — the DP runs once
-    per DISTINCT word as pure Column expressions (forward fold over
-    character positions building the best-cost table, backward fold
-    reading it; no UDF), the corpus pays one posexplode + broadcast
-    join + one aggregation.
-    """
-    pieces = sorted({(p, int(c)) for p, c in vocab}, key=lambda x: (-len(x[0]), x[0]))
-    maxp = max(len(p) for p, _ in pieces) + 2
-    piece_arr = F.array(
-        *[
-            F.struct(
-                F.lit(p).alias("p"),
-                F.lit(len(p)).alias("l"),
-                F.lit(int(c)).cast("long").alias("c"),
-            )
-            for p, c in pieces
-        ]
-    )
-
-    tok = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "word"),
-    ).filter(F.length("word") > 0)
-    dw = tok.select("word").distinct().withColumn("_pieces", piece_arr)
-
-    def forward_step(acc, i):
-        # candidates: vocab pieces ending at position i (+ the fallback
-        # char), each scored best[i - len] + cost; the winner struct's
-        # field order (cost, maxp-len, piece) IS the tie-break
-        cands = F.transform(
-            F.filter(
-                F.col("_pieces"),
-                lambda v: (v["l"] <= i)
-                & (F.col("word").substr(i - v["l"] + 1, v["l"]) == v["p"]),
-            ),
-            lambda v: F.struct(
-                (F.element_at(acc, i - v["l"] + 1)["cost"] + v["c"]).alias("cost"),
-                (F.lit(maxp) - v["l"]).alias("nl"),
-                v["p"].alias("piece"),
-                v["l"].alias("plen"),
-            ),
-        )
-        fallback = F.struct(
-            (
-                F.element_at(acc, i)["cost"] + F.lit(UNIGRAM_FALLBACK_COST).cast("long")
-            ).alias("cost"),
-            F.lit(maxp - 1).alias("nl"),
-            F.col("word").substr(i, F.lit(1)).alias("piece"),
-            F.lit(1).alias("plen"),
-        )
-        win = F.array_min(F.concat(cands, F.array(fallback)))
-        return F.concat(
-            acc,
-            F.array(
-                F.struct(
-                    win["cost"].alias("cost"),
-                    win["plen"].alias("plen"),
-                    win["piece"].alias("piece"),
-                )
-            ),
-        )
-
-    dp_init = F.array(
-        F.struct(
-            F.lit(0).cast("long").alias("cost"),
-            F.lit(0).alias("plen"),
-            F.lit("").alias("piece"),
-        )
-    )
-    dw = dw.withColumn(
-        "_dp",
-        F.aggregate(F.sequence(F.lit(1), F.length("word")), dp_init, forward_step),
-    )
-
-    def back_step(acc, _):
-        at = F.element_at(F.col("_dp"), acc["pos"] + 1)
-        return F.when(acc["pos"] <= 0, acc).otherwise(
-            F.struct(
-                (acc["pos"] - at["plen"]).alias("pos"),
-                F.concat(F.array(at["piece"]), acc["ps"]).alias("ps"),
-            )
-        )
-
-    enc = dw.select(
-        "word",
-        F.element_at("_dp", F.length("word") + 1)["cost"].alias("wcost"),
-        F.aggregate(
-            F.sequence(F.lit(1), F.length("word")),
-            F.struct(
-                F.length("word").cast("int").alias("pos"),
-                F.array().cast("array<string>").alias("ps"),
-            ),
-            back_step,
-            lambda acc: acc["ps"],
-        ).alias("ps"),
-    ).select(
-        "word",
-        "wcost",
-        F.size("ps").cast("long").alias("np"),
-        F.array_join("ps", " ").alias("pstr"),
-    )
-
-    # deliberate build-side choice — same rationale and evidence as
-    # wordpiece_encode (un-hinted = corpus-side broadcast, 1.46× slower);
-    # see vocab_join_side. Production: unigram_encode_broadcast.
-    joined = tok.join(vocab_join_side(enc), "word")
-    return joined.groupBy(F.col(id_col)).agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum("np").alias("n_pieces"),
-        F.round(
-            F.sum("np").cast("double") / F.count(F.lit(1)).cast("double"), 6
-        ).alias("fertility"),
-        F.sum("wcost").alias("total_cost"),
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "pstr"))),
-                    lambda s: s["pstr"],
-                ),
-                " ",
-            )
-        ).alias("pieces_digest"),
-    )
 
 
 def _spark_round6(x: float) -> float:
@@ -1898,34 +1524,35 @@ def _spark_round6(x: float) -> float:
     return float(Decimal(x).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
 
 
-def wordpiece_encode_broadcast(
+def wordpiece_encode(
     df: DataFrame,
     vocab: list[str],
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """``wordpiece_encode`` for PRODUCTION-SIZE vocabularies: Arrow-batched
-    ``mapInPandas`` with the vocabulary broadcast once in the closure —
-    the t14b precedent (``bpe_encode_broadcast``). The Column-expression
-    twin embeds |vocab| literal structs in the plan and its per-character
-    fold scans all of them (O(word_len x |vocab|) per distinct word):
-    fine and fully codegen'd at the <100-piece oracle vocab, a plan-bloat
-    + constant-factor scale-killer at a BERT-scale 30k-piece vocab. Here
-    the pieces live in per-LENGTH hash sets, so the greedy longest-match
+    """WordPiece-style GREEDY longest-match subword encoding with a pinned
+    vocabulary (Wu et al. 2016 / BERT's tokenizer family — the other
+    production tokenizer class next to BPE; HuggingFace WordPiece uses the
+    same longest-match-first walk). Per word, repeatedly take the LONGEST
+    vocab piece matching at the cursor, falling back to the single
+    character when nothing matches — so segmentation is total and
+    LOSSLESS (concat of pieces == word; no [UNK] information loss).
+
+    Returns per document: (id, n_words, n_pieces, fertility = pieces/word
+    rounded 6dp, pieces_digest = md5 of the full in-order piece sequence,
+    space-joined) — the digest pins the SEGMENTATION itself under the hash
+    oracle, not just its statistics. Wordless documents (empty or
+    all-space text) produce no row. Fertility replicates Spark's HALF_UP
+    ``round(x, 6)`` via exact-decimal quantization.
+
+    Scale shape (the t14b precedent, ``bpe_encode_broadcast``):
+    Arrow-batched ``mapInPandas`` with the vocabulary broadcast once in
+    the closure. The pieces live in per-LENGTH hash sets, so the greedy
     probe is O(word_len x n_distinct_lengths) hash lookups per word —
-    and the per-word LRU cache makes the Zipf head free.
-
-    Same semantics and the SAME output schema/values as
-    ``wordpiece_encode`` (greedy longest-match, single-char fallback,
-    lossless segmentation; per-doc digest over the in-order piece
-    sequence) — equivalence is pytest-pinned on the shared vocab, and
-    t20b shares t20's full DuckDB oracle. Fertility replicates Spark's
-    HALF_UP ``round(x, 6)`` via exact-decimal quantization.
-
-    Plan shape: map-only — one python runner stage, ZERO Exchange (the
-    Column twin pays a distinct + broadcast join + final aggregation);
-    per-doc outputs are complete within the batch, so nothing shuffles
-    at any corpus size.
+    vocabulary size is out of the cost, and a per-word LRU cache makes
+    the Zipf head free. Map-only: one python runner stage, ZERO Exchange;
+    per-doc outputs are complete within the batch, so nothing shuffles at
+    any corpus size.
     """
     import hashlib
     from functools import lru_cache
@@ -1959,7 +1586,7 @@ def wordpiece_encode_broadcast(
             for doc_id, txt in zip(pdf[id_col], pdf[text_col]):
                 ws = [w for w in (txt or "").split(" ") if w]
                 if not ws:
-                    continue  # the Column twin's join drops wordless docs
+                    continue  # wordless docs produce no row
                 segs = [pieces_of(w) for w in ws]
                 n_pieces = sum(len(s) for s in segs)
                 ids.append(doc_id)
@@ -1985,28 +1612,34 @@ def wordpiece_encode_broadcast(
     return df.select(id_col, text_col).mapInPandas(encode_batches, schema=schema)
 
 
-def unigram_encode_broadcast(
+def unigram_encode(
     df: DataFrame,
     vocab: list[tuple[str, int]],
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """``unigram_encode`` for PRODUCTION-SIZE vocabularies: the same
-    Arrow ``mapInPandas`` broadcast-vocab shape as
-    ``wordpiece_encode_broadcast`` (t14b precedent), replacing the
-    |vocab|-literal plan + O(|vocab|)-per-character candidate scan with
-    a dict probe per (position, length) — O(word_len x max_piece_len)
-    per distinct word, vocabulary size out of the cost entirely.
+    """Unigram-LM subword encoding with a pinned vocabulary — the
+    SentencePiece family (Kudo 2018): per word, the segmentation that
+    MINIMIZES the summed piece costs, found by Viterbi dynamic
+    programming (vs ``wordpiece_encode``'s greedy longest-match — the
+    two genuinely differ: a cheap 2-piece split beats an expensive
+    whole-word piece, which the pytest pins). Costs are INTEGER
+    centi-nats (integer-quantized scores make the DP exact,
+    deterministic, and engine-portable — no float comparison ever
+    happens), with every out-of-vocab single character available at
+    ``UNIGRAM_FALLBACK_COST`` so segmentation is total and lossless.
+    Tie-break at equal cost: longer piece, then lexicographic.
 
-    Same semantics bit-for-bit: integer centi-nat Viterbi DP, the
-    out-of-vocab single-char fallback at ``UNIGRAM_FALLBACK_COST``, and
-    the IDENTICAL (cost ASC, length DESC, piece ASC) winner tie-break —
-    the Python ``min`` key mirrors the Column twin's array_min struct
-    field order (cost, maxp-len, piece). Equivalence is pytest-pinned
-    and t21b shares t21's full DuckDB oracle; integer costs mean no
-    float ever enters the DP in either engine.
+    Returns per document: (id, n_words, n_pieces, fertility,
+    total_cost = Σ word Viterbi costs — an exact BIGINT, so the oracle
+    compares the OPTIMUM ITSELF, pieces_digest = md5 of the in-order
+    piece sequence, pinning the argmin segmentation too). Wordless
+    documents produce no row.
 
-    Plan shape: map-only, zero Exchange, per-word LRU cache.
+    Scale shape: the same Arrow ``mapInPandas`` broadcast-vocab shape as
+    ``wordpiece_encode`` — a dict probe per (position, length), so
+    O(word_len x max_piece_len) per distinct word with vocabulary size
+    out of the cost; map-only, zero Exchange, per-word LRU cache.
     """
     import hashlib
     from functools import lru_cache
@@ -2015,8 +1648,7 @@ def unigram_encode_broadcast(
 
     costs: dict[str, int] = {}
     for p, c in set((p, int(c)) for p, c in vocab):
-        # duplicate pieces with different costs: keep the cheaper (the
-        # Column twin's (cost, maxp-len, piece) min picks it too)
+        # duplicate pieces with different costs: keep the cheaper
         if p not in costs or c < costs[p]:
             costs[p] = c
     maxp = max(len(p) for p in costs) + 2

@@ -38,7 +38,7 @@ from pyspark.ml.classification import (
 from pyspark.ml.feature import StringIndexer, VectorAssembler
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.ml.pipeline import Pipeline
-from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable, MLReadable, MLReader, MLWritable, MLWriter
+from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable, DefaultParamsWriter, MLReadable, MLReader, MLWritable, MLWriter
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -131,6 +131,9 @@ class ModelImputerModel(Model, MLWritable, MLReadable):
         class _W(MLWriter):
             def saveImpl(self, path: str) -> None:
                 os.makedirs(path, exist_ok=True)
+                # MLlib metadata/ (the class name) is what lets
+                # PipelineModel.load find this stage's reader
+                DefaultParamsWriter.saveMetadata(model, path, self.sparkSession)
                 with open(os.path.join(path, "spec.json"), "w") as f:
                     json.dump(model.spec, f)
                 model.inner.write().overwrite().save(os.path.join(path, "inner"))

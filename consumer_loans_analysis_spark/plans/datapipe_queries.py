@@ -2540,13 +2540,13 @@ def t19_kneser_ney_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-entropy convention; self-trained, so every scored bigram is in
     the model — smoothing changes the VALUES, not coverage).
 
-    Scale shape (identical cost class to t9): ONE corpus (w1,w2) count
-    shuffle; every derived table — unigram totals, left/right
-    continuation counts, the 1-row (n1, n2, types) scalar — aggregates
-    the vocab²-bounded counts table, not the corpus; the discount scalar
-    rides a sanctioned 1-row broadcast crossJoin; scoring joins
-    doc-bigrams to the broadcast model. Every arithmetic step is written
-    in the same order in both engines (single-division IEEE parity)."""
+    Scale shape: two map-only Arrow corpus passes and zero Exchange. Pass
+    one counts (w1,w2) pairs per batch; every derived table — unigram
+    totals, left/right continuation counts, the (n1, n2, types) scalars —
+    aggregates the vocab²-bounded counts table on the driver, not the
+    corpus; pass two scores each doc against the model dict in the
+    closure. Every arithmetic step is written in the same order in both
+    engines (single-division IEEE parity)."""
     docs = read_table(spark, sf_dir, "documents")
     return text.kneser_ney_score(docs)
 
@@ -4887,11 +4887,9 @@ def t20_wordpiece_greedy_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``pieces_digest`` puts the SEGMENTATION itself (every piece of every
     word, in order) under the hash compare, so a greedy-walk off-by-one,
     a wrong tie-break, or a broken fallback hash-mismatches rather than
-    just nudging counts. Pure Column expressions: the walk is an
-    ``aggregate`` fold over character positions on the DISTINCT-word
-    table (Heaps-bounded — encode cost is corpus-size-invariant); the
-    corpus pays one posexplode + broadcast join + one aggregation.
-    See ``operators/text.py::wordpiece_encode``."""
+    just nudging counts. Map-only Arrow pass with the vocabulary in the
+    closure (per-length hash sets, per-word LRU cache): zero Exchange at
+    any corpus size. See ``operators/text.py::wordpiece_encode``."""
     docs = read_table(spark, sf_dir, "documents")
     return text.wordpiece_encode(docs, WP_VOCAB)
 
@@ -5046,14 +5044,13 @@ def dq8b_seed_quality_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature space — the actual Brown et al. 2020 §A / fastText shape.
     The model is exactly n_buckets rows regardless of corpus size, so
     its broadcast is structurally justified at 100 TB (dq8's exact-vocab
-    model is Heaps-bounded but NOT broadcast-bounded; its join routes
-    through ``text.vocab_join_side`` — model-side build hint kept, with
-    the SPARK_GRAFT_VOCAB_JOIN=shuffle_hash fallback — because the r12
-    un-hinting experiment measured the static planner broadcasting the
-    CORPUS side instead). The bucket hash is the
-    engine-portable md5 prefix, so the full fit+score dataflow —
-    hashing-trick collisions included — sits under the external hash
-    oracle; smoothing is over the fixed feature space (v = 2^20).
+    model is Heaps-bounded but NOT broadcast-bounded; its join keeps an
+    explicit model-side broadcast because the r12 un-hinting experiment
+    measured the static planner broadcasting the CORPUS side instead).
+    The bucket hash is the engine-portable md5 prefix, so the full
+    fit+score dataflow — hashing-trick collisions included — sits under
+    the external hash oracle; smoothing is over the fixed feature space
+    (v = 2^20).
     Same marker plant as dq8, re-derived from data by both engines.
     See ``operators/curation.py::nb_seed_classifier_hashed``."""
     from consumer_loans_analysis_spark.operators import curation
@@ -5176,46 +5173,11 @@ def t21_unigram_viterbi_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     MINIMUM-COST segmentation by Viterbi DP over pinned integer
     centi-nat piece costs. ``total_cost`` is an exact BIGINT, so the
     oracle compares the optimum itself; ``pieces_digest`` pins the
-    argmin segmentation piece by piece. Pure Column expressions — a
-    forward ``aggregate`` fold builds the best-cost table per DISTINCT
-    word, a backward fold reads the stored choices; no UDF; corpus pays
-    one posexplode + broadcast join + one aggregation. See
+    argmin segmentation piece by piece. Map-only Arrow pass with the
+    (piece -> cost) dict in the closure: zero Exchange. See
     ``operators/text.py::unigram_encode``."""
     docs = read_table(spark, sf_dir, "documents")
     return text.unigram_encode(docs, UNI_VOCAB)
-
-
-@query("t20b_wordpiece_encode_broadcast", oracle=_t20_oracle())
-def t20b_wordpiece_encode_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION-vocab twin of t20 (r12, VERDICT r11 #1): the same
-    greedy longest-match WordPiece segmentation via Arrow ``mapInPandas``
-    with the vocabulary broadcast in the closure — the t14b precedent.
-    t20's Column-expression walk embeds |vocab| literal structs in the
-    plan and scans all of them per character: correct and codegen'd at
-    the oracle vocab, plan-bloat + a ~10^3x constant at a BERT-scale 30k
-    vocab. Here pieces sit in per-length hash sets (O(word_len x
-    n_lengths) probes, vocab size out of the cost) and the plan is
-    map-only — zero Exchange vs t20's distinct + broadcast join + agg.
-    Shares t20's full recursive-CTE oracle, so the digest equality of
-    the two plans is externally checked, not just pytest-pinned. See
-    ``operators/text.py::wordpiece_encode_broadcast``."""
-    docs = read_table(spark, sf_dir, "documents")
-    return text.wordpiece_encode_broadcast(docs, WP_VOCAB)
-
-
-@query("t21b_unigram_encode_broadcast", oracle=_t21_oracle())
-def t21b_unigram_encode_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION-vocab twin of t21 (r12, VERDICT r11 #1): the identical
-    integer centi-nat Viterbi DP — same (cost ASC, len DESC, piece ASC)
-    winner tie-break, same fallback — as an Arrow ``mapInPandas`` with
-    the (piece -> cost) dict broadcast in the closure. Replaces t21's
-    |vocab|-literal plan + O(|vocab|)/char candidate scan with a dict
-    probe per (position, length): O(word_len x max_piece_len) per
-    distinct word, map-only, zero Exchange. Shares t21's full oracle
-    (total_cost compares the optimum itself; pieces_digest the argmin
-    segmentation). See ``operators/text.py::unigram_encode_broadcast``."""
-    docs = read_table(spark, sf_dir, "documents")
-    return text.unigram_encode_broadcast(docs, UNI_VOCAB)
 
 
 # --- c2: train/eval split leakage audit ----------------------------------------

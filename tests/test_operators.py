@@ -1641,6 +1641,27 @@ def test_compaction_plan_conservation_and_fill(spark, sf_dir):
         assert 0.0 < r["fill_frac"] <= 1.0 + r["max_file"] / cap + 1e-9, r
 
 
+def test_pq_topk_empty_queries(spark, sf_dir):
+    """An empty query set yields an empty result with the same schema as
+    a non-empty search (the ivfadc_topk contract), not a worker
+    IndexError from a 1-D query matrix."""
+    from consumer_loans_analysis_spark.operators import similarity
+    from consumer_loans_analysis_spark.operators.pq_codebooks import PQ_CODEBOOKS
+    from consumer_loans_analysis_spark.sources.readers import read_table
+
+    emb = read_table(spark, sf_dir, "embeddings")
+
+    def search(queries):
+        return similarity.pq_topk(
+            emb, queries, k=5, m_subs=16, ks=64, codebooks=PQ_CODEBOOKS
+        )
+
+    empty = search(emb.limit(0))
+    assert empty.collect() == []
+    full = search(emb.filter(F.col("vec_id") < 2))
+    assert empty.schema.simpleString() == full.schema.simpleString()
+
+
 def test_gopher_repetition_rules_hand_computed(spark):
     """dq7's operator against hand-computed char fractions:
     - doc 0: 'a b' repeats 3x in 23 chars -> top_2gram 9/23; the two
@@ -1684,6 +1705,21 @@ def test_gopher_repetition_rules_hand_computed(spark):
     assert rows[2]["dup_5gram_frac"] == 1.0
     assert rows[2]["dup_10gram_frac"] == 1.0
     assert not rows[2]["keep"]
+
+
+def test_gopher_repetition_empty_text(spark):
+    """An empty document has zero characters: every fraction reads 0.0
+    (nothing is covered) rather than dividing by zero — including a
+    dup rule at n=1, where the single empty word is a 1-gram."""
+    from consumer_loans_analysis_spark.operators.text import (
+        gopher_repetition_rules,
+    )
+
+    df = spark.createDataFrame([(0, "")], "doc_id long, text string")
+    (row,) = gopher_repetition_rules(df, dup_ngram_max_frac=((1, 0.1),)).collect()
+    assert row["dup_1gram_frac"] == 0.0
+    assert all(row[c] == 0.0 for c in row.asDict() if c.endswith("_frac"))
+    assert row["keep"]
 
 
 def test_gopher_repetition_no_corpus_sized_window(spark, sf_dir):
@@ -1809,8 +1845,9 @@ def test_unigram_viterbi_hand_fixture(spark):
     """t21 semantics on hand-solvable DPs: the cheap split beats the
     whole-word piece (ba|tch 450 < batch 900 — where greedy WordPiece
     would take batch), the cheap whole word beats its split (data 320 <
-    da|ta 500), fallback chars price at UNIGRAM_FALLBACK_COST, and an
-    exact cost tie resolves to the LONGER piece."""
+    da|ta 500), fallback chars price at UNIGRAM_FALLBACK_COST, an exact
+    cost tie resolves to the LONGER piece, and wordless documents produce
+    no row."""
     import hashlib
 
     from consumer_loans_analysis_spark.operators.text import (
@@ -1824,7 +1861,8 @@ def test_unigram_viterbi_hand_fixture(spark):
         ("ab", 400), ("a", 200), ("b", 200),
     ]
     docs = spark.createDataFrame(
-        [(0, "batch"), (1, "data"), (2, "xy"), (3, "ab"), (4, "batch data")],
+        [(0, "batch"), (1, "data"), (2, "xy"), (3, "ab"), (4, "batch data"),
+         (5, ""), (6, "  ")],
         "doc_id long, text string",
     )
     rows = {r["doc_id"]: r for r in unigram_encode(docs, vocab).collect()}
@@ -1841,6 +1879,7 @@ def test_unigram_viterbi_hand_fixture(spark):
     assert rows[3]["pieces_digest"] == d("ab")          # tie -> longer piece
     assert rows[3]["total_cost"] == 400
     assert rows[4]["total_cost"] == 450 + 320 and rows[4]["n_pieces"] == 3
+    assert set(rows) == {0, 1, 2, 3, 4}  # wordless docs are dropped
 
 
 def test_nb_seed_classifier_hand_fixture(spark):
@@ -1951,7 +1990,8 @@ def test_wordpiece_greedy_hand_fixture(spark):
     (un|happi|ness, not the also-valid ha|p|p...), whole-word precedence
     (batch stays whole although ba+tch could cover it), single-char
     fallback keeps segmentation total and LOSSLESS (php -> p|h|p with h
-    unknown), and the per-doc digest is the in-order piece sequence."""
+    unknown), the per-doc digest is the in-order piece sequence, and
+    wordless documents produce no row."""
     import hashlib
 
     from consumer_loans_analysis_spark.operators.text import wordpiece_encode
@@ -1963,6 +2003,8 @@ def test_wordpiece_greedy_hand_fixture(spark):
             (1, "php"),
             (2, "batch"),
             (3, "unhappiness php batch"),
+            (4, ""),
+            (5, "  "),
         ],
         "doc_id long, text string",
     )
@@ -1977,149 +2019,45 @@ def test_wordpiece_greedy_hand_fixture(spark):
     assert rows[2]["pieces_digest"] == d("batch")  # longest match wins
     assert rows[3]["pieces_digest"] == d("un happi ness p h p batch")
     assert rows[3]["n_words"] == 3 and rows[3]["n_pieces"] == 7
+    assert set(rows) == {0, 1, 2, 3}  # wordless docs are dropped
 
 
-def test_broadcast_encode_twins_equal_column_twins(spark):
-    """t20b/t21b contract (r12, VERDICT r11 #1): the mapInPandas
-    broadcast-vocab encoders produce EXACTLY the frames of their
-    Column-expression twins — same rows, same digests, same costs, same
-    HALF_UP fertility rounding — on the real sf0.001 corpus plus the
-    hand-fixture edge vocabularies (tie-breaks, fallback, wordless doc).
-    Also pins the broadcast plans map-only: zero Exchange."""
-    from consumer_loans_analysis_spark.operators.text import (
-        unigram_encode,
-        unigram_encode_broadcast,
-        wordpiece_encode,
-        wordpiece_encode_broadcast,
-    )
-    from consumer_loans_analysis_spark.plans.datapipe_queries import (
-        UNI_VOCAB,
-        WP_VOCAB,
-    )
+@pytest.mark.parametrize(
+    "name",
+    [
+        "t19_kneser_ney_score",
+        "t20_wordpiece_greedy_encode",
+        "t21_unigram_viterbi_encode",
+    ],
+)
+def test_text_operator_matches_duckdb_oracle(spark, sf_dir, name):
+    """The map-only text operators against their external DuckDB oracles
+    on the sf0.001 corpus: same columns, same order-insensitive rounded
+    values (``verify_local.canon_pdf`` — the gate's compare). The pieces
+    digests and exact BIGINT costs put the segmentation itself under the
+    compare; the KN cross-entropy checks the driver-built model."""
+    import duckdb
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    from consumer_loans_analysis_spark.plans import registry
+    from consumer_loans_analysis_spark.schemas import TESTDATA_TABLES
+    from verify_local import canon_pdf
 
-    def frames_equal(a, b, key="doc_id"):
-        ra = {r[key]: r.asDict() for r in a.collect()}
-        rb = {r[key]: r.asDict() for r in b.collect()}
-        assert ra == rb
-
-    frames_equal(wordpiece_encode(docs, WP_VOCAB),
-                 wordpiece_encode_broadcast(docs, WP_VOCAB))
-    frames_equal(unigram_encode(docs, UNI_VOCAB),
-                 unigram_encode_broadcast(docs, UNI_VOCAB))
-
-    # edge vocabularies from the hand fixtures: exact cost ties (longer
-    # piece wins), single-char fallback, and a wordless doc that must be
-    # DROPPED by both (the Column twin's join drops it)
-    edge = spark.createDataFrame(
-        [(0, "batch"), (1, "data"), (2, "xy"), (3, "ab"), (4, ""), (5, "  ")],
-        "doc_id long, text string",
-    )
-    uv = [("batch", 900), ("ba", 200), ("tch", 250), ("data", 320),
-          ("da", 300), ("ta", 200), ("ab", 400), ("a", 200), ("b", 200)]
-    frames_equal(unigram_encode(edge, uv), unigram_encode_broadcast(edge, uv))
-    wv = ["un", "happi", "ness", "happy", "ha", "p", "batch", "ba", "tch"]
-    wedge = spark.createDataFrame(
-        [(0, "unhappiness"), (1, "php"), (2, "batch"), (3, "")],
-        "doc_id long, text string",
-    )
-    frames_equal(wordpiece_encode(wedge, wv),
-                 wordpiece_encode_broadcast(wedge, wv))
-
-    # map-only plan: the broadcast twins must shuffle NOTHING
-    for plan_df in (wordpiece_encode_broadcast(docs, WP_VOCAB),
-                    unigram_encode_broadcast(docs, UNI_VOCAB)):
-        plan = plan_df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-
-
-def test_vocab_join_side_strategies(spark, monkeypatch):
-    """The r12 join-strategy guard (guide §3): the distinct-word encode
-    join must BUILD on the vocabulary side. Default = broadcast of the
-    vocab side (never the corpus token stream — the un-hinted static
-    plan chose BuildLeft over the posexploded corpus, the measured r12
-    regression); SPARK_GRAFT_VOCAB_JOIN=shuffle_hash = ShuffledHashJoin
-    building on the vocab side, with identical results."""
-    import os
-
-    from consumer_loans_analysis_spark.operators.text import wordpiece_encode
-    from consumer_loans_analysis_spark.plans.datapipe_queries import WP_VOCAB
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-
-    monkeypatch.delenv("SPARK_GRAFT_VOCAB_JOIN", raising=False)
-    df_bc = wordpiece_encode(docs, WP_VOCAB)
-    plan_bc = df_bc._jdf.queryExecution().sparkPlan().toString()
-    # the ONE BroadcastExchange must sit over the vocab/encode subtree
-    # (contains the distinct-word aggregate), not over the corpus scan's
-    # posexplode: BuildRight in tok.join(enc) terms.
-    assert "BroadcastHashJoin" in plan_bc
-    assert "BuildRight" in plan_bc and "BuildLeft" not in plan_bc
-
-    monkeypatch.setenv("SPARK_GRAFT_VOCAB_JOIN", "shuffle_hash")
-    df_sh = wordpiece_encode(docs, WP_VOCAB)
-    plan_sh = df_sh._jdf.queryExecution().sparkPlan().toString()
-    assert "ShuffledHashJoin" in plan_sh and "BuildRight" in plan_sh
-
-    ra = {r["doc_id"]: r.asDict() for r in df_bc.collect()}
-    rb = {r["doc_id"]: r.asDict() for r in df_sh.collect()}
-    assert ra == rb
-
-
-def test_kn_model_build_modes_and_join_side(spark, monkeypatch):
-    """r13 (VERDICT r12 next-round #1/#4): kneser_ney_score's model
-    statistics (uc/pre/scal) fold into ONE driver-side exact-integer
-    pass by default — the plan must feed the scoring join from a local
-    relation with NO distributed model aggregations left (exactly the
-    final per-doc partial+final aggregate pair remains).
-    SPARK_GRAFT_KN_MODEL=dist keeps the r12 distributed build for
-    bigram tables past driver memory; the scoring-join build side now
-    routes through vocab_join_side, so
-    SPARK_GRAFT_VOCAB_JOIN=shuffle_hash gives a ShuffledHashJoin
-    BUILDING on the model side (never a corpus sort/broadcast). All
-    paths must produce IDENTICAL frames — the shared _logp expression
-    makes the scores bit-equal, not just round-equal."""
-    from consumer_loans_analysis_spark.operators.text import kneser_ney_score
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-
-    monkeypatch.delenv("SPARK_GRAFT_KN_MODEL", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_VOCAB_JOIN", raising=False)
-    df_drv = kneser_ney_score(docs)
-    plan_drv = df_drv._jdf.queryExecution().sparkPlan().toString()
-    # fully map-only: both corpus passes are Arrow (counts ran at
-    # construction), the model dict rides in the closure — no join, no
-    # exchange, no aggregate left in the scoring plan
-    assert "MapInPandas" in plan_drv, plan_drv
-    assert "Join" not in plan_drv, plan_drv
-    assert "Exchange" not in plan_drv, plan_drv
-
-    monkeypatch.setenv("SPARK_GRAFT_KN_MODEL", "dist")
-    df_dist = kneser_ney_score(docs)
-    plan_dist = df_dist._jdf.queryExecution().sparkPlan().toString()
-    # the dist scoring join builds on the MODEL side (BuildRight)
-    assert "BroadcastHashJoin" in plan_dist and "BuildRight" in plan_dist
-
-    monkeypatch.setenv("SPARK_GRAFT_VOCAB_JOIN", "shuffle_hash")
-    df_shj = kneser_ney_score(docs)
-    plan_shj = df_shj._jdf.queryExecution().sparkPlan().toString()
-    assert "ShuffledHashJoin" in plan_shj and "BuildRight" in plan_shj
-    monkeypatch.delenv("SPARK_GRAFT_VOCAB_JOIN")
-
-    ra = {r["doc_id"]: r.asDict() for r in df_drv.collect()}
-    assert ra == {r["doc_id"]: r.asDict() for r in df_shj.collect()}
-    assert ra == {r["doc_id"]: r.asDict() for r in df_dist.collect()}
-    assert len(ra) > 0
+    registry.load_all()
+    got = registry.QUERIES[name](spark, sf_dir).toPandas()
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    want = con.execute(registry.ORACLES[name]).df()
+    assert len(got) > 0
+    assert sorted(got.columns) == sorted(want.columns)
+    assert canon_pdf(got) == canon_pdf(want)
 
 
 def test_broadcast_encode_large_vocab_smoke(spark):
-    """The case the twins exist for: a synthetic 5k-piece vocabulary —
-    far past the literal-plan crossover — encodes through the broadcast
-    path without plan bloat, losslessly (concat of pieces == word)."""
-    from consumer_loans_analysis_spark.operators.text import (
-        wordpiece_encode_broadcast,
-    )
+    """A synthetic 5k-piece vocabulary — far past any literal-plan size —
+    encodes through the closure-broadcast path losslessly (concat of
+    pieces == word)."""
+    from consumer_loans_analysis_spark.operators.text import wordpiece_encode
 
     vocab = [f"w{i:04d}" for i in range(5000)] + ["alpha", "bet"]
     docs = spark.createDataFrame(
@@ -2127,7 +2065,7 @@ def test_broadcast_encode_large_vocab_smoke(spark):
         "doc_id long, text string",
     )
     rows = {r["doc_id"]: r for r in
-            wordpiece_encode_broadcast(docs, vocab).collect()}
+            wordpiece_encode(docs, vocab).collect()}
     # w0042 whole; alphabet -> alpha|bet; w4999x -> w4999... greedy takes
     # w4999 then fallback x; unknown -> all single chars
     assert rows[0]["n_pieces"] == 1 + 2 + 2

@@ -62,3 +62,34 @@ def test_model_imputer_roundtrip(spark, loans, tmp_path):
     _frame_equal(a, b)
     # no sentinel survives
     assert b.filter(F.col("AREA") == "Missing").count() == 0
+
+
+def test_model_imputer_pipeline_roundtrip_synthetic(spark, tmp_path):
+    """A ModelImputer fitted inside a Pipeline must reload through
+    ``PipelineModel.load``: the stage writes MLlib ``metadata/`` (the
+    class name the pipeline reader dispatches on) next to its spec and
+    inner model. Synthetic frame, so this runs on any host."""
+    from pyspark.ml import Pipeline
+
+    rows = []
+    for i in range(60):
+        x = float(i % 10)
+        label = "lo" if x < 5 else "hi"
+        rows.append((i, x, float(i % 3), "Missing" if i % 7 == 0 else label))
+    df = spark.createDataFrame(rows, "id long, x double, z double, cat string")
+    fitted = Pipeline(
+        stages=[
+            ModelImputer(
+                targetCol="cat", sentinel="Missing", classifierFamily="lr",
+                maxIter=20,
+            )
+        ]
+    ).fit(df)
+    path = str(tmp_path / "imp_pipe")
+    fitted.write().overwrite().save(path)
+    loaded = PipelineModel.load(path)
+    assert type(loaded.stages[0]).__name__ == "ModelImputerModel"
+    a = fitted.transform(df)
+    b = loaded.transform(df)
+    _frame_equal(a, b)
+    assert b.filter(F.col("cat") == "Missing").count() == 0

@@ -8,6 +8,7 @@ catch the regression even at test SF where the bad shapes are fast.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from consumer_loans_analysis_spark.operators import similarity, text
@@ -343,3 +344,48 @@ def test_pipe4_two_shuffles_and_clean_before_dedup(spark, sf_dir):
     registry.load_all()
     plan = _plan(registry.QUERIES["pipe4_clean_dedup_shard"](spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") == 2, plan
+
+
+def _registry_plan(spark, sf_dir, name: str) -> str:
+    from consumer_loans_analysis_spark.plans import registry
+
+    registry.load_all()
+    return _plan(registry.QUERIES[name](spark, sf_dir))
+
+
+@pytest.mark.parametrize("name", ["t19_kneser_ney_score", "dq7_gopher_repetition"])
+def test_kn_and_repetition_are_map_only(spark, sf_dir, name):
+    """t19 (model built on the driver, scored in the closure) and dq7
+    (the whole repetition battery per document) are one Arrow pass over
+    the corpus: no Exchange, no Join, exactly one MapInPandas."""
+    plan = _registry_plan(spark, sf_dir, name)
+    assert "Exchange" not in plan, plan
+    assert "Join" not in plan, plan
+    assert plan.count("MapInPandas") == 1, plan
+
+
+@pytest.mark.parametrize(
+    "name", ["t20_wordpiece_greedy_encode", "t21_unigram_viterbi_encode"]
+)
+def test_subword_encoders_shuffle_nothing(spark, sf_dir, name):
+    """t20/t21: the vocabulary rides the closure, so per-doc encoding is
+    complete within the batch — zero Exchange at any corpus size."""
+    plan = _registry_plan(spark, sf_dir, name)
+    assert "Exchange" not in plan, plan
+
+
+def test_nb_seed_scoring_join_broadcasts_model(spark, sf_dir):
+    """dq8: the scoring join builds on the vocabulary-sized MODEL side
+    (BroadcastHashJoin BuildRight over the llr table) and never on the
+    corpus token stream — un-hinted, the static planner chose BuildLeft
+    over the exploded corpus."""
+    plan = _registry_plan(spark, sf_dir, "dq8_seed_quality_classifier")
+    joins = [ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln]
+    assert len(joins) == 1 and "BuildRight" in joins[0], plan
+    assert "BuildLeft" not in plan, plan
+    lines = plan.splitlines()
+    i = next(
+        j for j, ln in enumerate(lines)
+        if "BroadcastExchange HashedRelationBroadcastMode" in ln
+    )
+    assert "AS llr" in lines[i + 1], plan

@@ -110,7 +110,7 @@ def main() -> None:
     print("svc_serving", results["svc_serving"], flush=True)
 
     # r7: the rbf-SVC substitution row proper — RFF (sklearn gamma='scale')
-    # → LinearSVC at the CV-selected point from probe_svc_rff.py
+    # → LinearSVC at the CV-selected point
     # (TUNING.json svc_rff_serving: D=2000, regParam=0.01, selected over
     # two waves of 4-fold CV on train only)
     from consumer_loans_analysis_spark.ml.rff import RandomFourierFeatures

@@ -5,7 +5,7 @@ pinned centroids in ``operators/ivf_centroids.py`` are a frozen artifact
 of the sf0.01 embeddings — see that module's provenance note). One
 command restores the pin:
 
-    python probe_refit_ivf_centroids.py [sf_dir]
+    python -m tools.probe_refit_ivf_centroids [sf_dir]
 
 It re-runs the exact fit ``similarity.ivf_topk`` performs when no
 centroids are passed (unit-normalize, hash-smallest 16384-row sample,

@@ -16,7 +16,7 @@ index). The per-component offset ``c_j = dot(mean, w_j)`` is computed with
 the same LEFT-TO-RIGHT accumulation both engines use for the row dots, so
 ``(v − mean)·w`` and ``v·w − c`` agree by construction of the pin.
 
-Run only after a driver testdata regen:  python probe_refit_pca_components.py
+Run only after a driver testdata regen:  python -m tools.probe_refit_pca_components
 """
 
 from __future__ import annotations
@@ -84,7 +84,7 @@ def main() -> None:
         "mean with component j: both engines compute row dots left-to-right",
         "(Spark aggregate / DuckDB list_dot_product), so (v*w - c) equals the",
         "centered projection bit-for-bit by construction of the pin.",
-        "Re-fit with probe_refit_pca_components.py after a testdata regen.",
+        "Re-fit with tools/probe_refit_pca_components.py after a testdata regen.",
         '"""',
         "",
         f"PCA_N_COMPONENTS = {N_COMPONENTS}",

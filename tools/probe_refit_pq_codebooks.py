@@ -5,7 +5,7 @@ pinned codebooks in ``operators/pq_codebooks.py`` are a frozen artifact
 of the sf0.01 embeddings — see that module's provenance note). One
 command restores the pin:
 
-    python probe_refit_pq_codebooks.py [sf_dir]
+    python -m tools.probe_refit_pq_codebooks [sf_dir]
 
 It re-runs the exact fit ``similarity.pq_topk`` performs when no
 codebooks are passed (unit-normalize, hash-smallest 16384-row sample,

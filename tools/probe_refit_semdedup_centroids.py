@@ -5,7 +5,7 @@ pinned centroids in ``operators/semdedup_centroids.py`` are a frozen
 artifact of the sf0.01 embeddings — see that module's provenance note).
 One command restores the pin:
 
-    python probe_refit_semdedup_centroids.py [sf_dir]
+    python -m tools.probe_refit_semdedup_centroids [sf_dir]
 
 It re-runs the exact featurization + fit the pin documents (spherical
 MLlib KMeans, k=8, seed=42, L2-normalized ``embeddings``), rewrites the
