@@ -97,22 +97,6 @@ def _widen_small_scan(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, shingle)."""
-    w = words(F.col(text_col))
-    sh = F.when(
-        F.size(w) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (n - 1)),
-            lambda i: F.array_join(F.slice(w, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return (
-        df.select(F.col(id_col).alias("id"), F.explode(F.array_distinct(sh)).alias("shingle"))
-        .distinct()
-    )
-
-
 def exact_dedup(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """Exact dedup: keep one row per key (hash-groupBy, single shuffle)."""
     return df.dropDuplicates(key_cols)
@@ -133,17 +117,12 @@ def shingle_hashes(
     first (round-robin, no key skew). At scale the scan already yields
     enough splits and this is a no-op.
     """
-    df = _widen_small_scan(df)
-    w = words(F.col(text_col))
-    sh = F.when(
-        F.size(w) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (n - 1)),
-            lambda i: F.xxhash64(F.array_join(F.slice(w, i, n), " ")),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    return df.select(
-        F.col(id_col).alias("id"), F.explode(F.array_distinct(sh)).alias("sh")
+    # explode the expression, not a projected ``arr`` column: exploding an
+    # attribute lets Spark infer a size(arr) > 0 filter below the
+    # projection, which evaluates the whole hashing expression twice more
+    return _widen_small_scan(df).select(
+        F.col(id_col).alias("id"),
+        F.explode(_shingle_hash_array(text_col, n)).alias("sh"),
     )
 
 
@@ -222,16 +201,24 @@ def shingle_hash_arrays(
     groupBy re-assembly shuffle. Documents with fewer than ``n`` words get
     an empty array (they cannot near-dup and are filtered by callers).
     """
-    w = words(F.col(text_col))
-    sh = F.when(
-        F.size(w) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (n - 1)),
-            lambda i: F.xxhash64(F.array_join(F.slice(w, i, n), " ")),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
     return df.select(
-        F.col(id_col).alias("id"), F.array_distinct(sh).alias("arr")
+        F.col(id_col).alias("id"), _shingle_hash_array(text_col, n).alias("arr")
+    )
+
+
+def _shingle_hash_array(text_col: str, n: int) -> Column:
+    """The distinct xxhash64 word n-grams of one document (empty below
+    ``n`` words) — the one shingle expression behind ``shingle_hashes``
+    and ``shingle_hash_arrays``."""
+    w = words(F.col(text_col))
+    return F.array_distinct(
+        F.when(
+            F.size(w) >= n,
+            F.transform(
+                F.sequence(F.lit(1), F.size(w) - (n - 1)),
+                lambda i: F.xxhash64(F.array_join(F.slice(w, i, n), " ")),
+            ),
+        ).otherwise(F.array().cast("array<bigint>"))
     )
 
 

@@ -1135,8 +1135,9 @@ def ivfadc_topk(
 
     corpus = corpus.filter(_norm(F.col(vec_col)) > 0)
     queries = queries.filter(_norm(F.col(vec_col)) > 0)
-    # staged norm → unit → assignment (the ivf_topk codegen lesson), kept
-    # as ONE checkpointed frame reused by fit-sample, encode and re-rank
+    # staged norm → unit → assignment (the ivf_topk codegen lesson); no
+    # checkpoint: the live fit sample and the fused scan below each read
+    # it once (see the note at c_routed)
     from consumer_loans_analysis_spark.operators.curation import kmeans_assign
 
     c_unit = (

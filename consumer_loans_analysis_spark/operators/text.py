@@ -189,7 +189,11 @@ def kneser_ney_score(
 
     ``passthrough_cols`` (the pipe2 precedent): per-doc constant columns
     copied onto the output — zero compute (they ride the Arrow batch) —
-    so callers need no doc-keyed join to re-attach them."""
+    so callers need no doc-keyed join to re-attach them.
+
+    The input is read twice (model pass, scoring pass), so it must be
+    deterministic: a bigram the model pass never saw raises a
+    ``ValueError`` naming that cause."""
 
     def _logp(disc: Column, types: Column) -> Column:
         # the interpolated-KN log-probability (implicit casts: c1/n1p_w1/
@@ -285,9 +289,19 @@ def kneser_ney_score(
                     continue  # no bigrams -> no row (join semantics)
                 s = 0.0
                 n = 0
-                for pair in zip(ws, ws[1:]):
-                    s += logp_map[pair]
-                    n += 1
+                try:
+                    for pair in zip(ws, ws[1:]):
+                        s += logp_map[pair]
+                        n += 1
+                except KeyError as e:
+                    # every corpus bigram is in the model unless the
+                    # upstream frame produced different rows this time
+                    raise ValueError(
+                        f"kneser_ney_score: bigram {e.args[0]!r} is missing "
+                        "from the model: the input changed between the model "
+                        "pass and the scoring pass. The input must be "
+                        "deterministic; checkpoint or cache it first."
+                    ) from None
                 keep_idx.append(i)
                 nb.append(n)
                 ce.append(_spark_round6(-(s / n)))
@@ -878,6 +892,12 @@ def bm25_search(
 
 # --- BPE merge-table application -------------------------------------------
 
+# GPT-2-style pretokenizer classes, simplified to the engine-portable
+# subset (letters / digits / other-symbol runs; Java regex, Python ``re``
+# and DuckDB/RE2 read this pattern identically). The BPE encoder and
+# trainer split text on it, and the t10/t14b/t15/t16 oracles import it.
+PRETOKEN_PATTERN = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]+"
+
 # Default merge table for the synthetic corpus (31 lowercase words): ranks
 # chosen so common words tokenize through MULTI-LEVEL merge chains
 # (t-a → ta-b → tab-l → tabl-e → "table") and so global-min-rank selection
@@ -892,15 +912,17 @@ DEFAULT_BPE_MERGES: list[tuple[str, str]] = [
 ]
 
 
-def _require_unique_merge_outputs(merges: list[tuple[str, str]], fn: str) -> None:
-    """Two merges with the same output string break the len(merges)-round
-    convergence argument (a later merge can recreate a symbol adjacent to a
-    previously-retired pair, silently under-merging) — both BPE encode
-    paths reject such tables so they can never silently diverge."""
+def _require_unique_merge_outputs(merges: list[tuple[str, str]]) -> None:
+    """Reject merge tables where two merges share an output string. The
+    ``_bpe_sql`` oracle replays encoding as ``len(merges)`` rank-ordered
+    replace rounds, and that fixed-round convergence argument needs unique
+    outputs: a later merge could recreate a symbol next to an
+    already-retired pair and silently under-merge. ``bpe_encode`` accepts
+    only the tables on which it and its oracle provably agree."""
     outs = [left + right for left, right in merges]
     if len(set(outs)) != len(outs):
         raise ValueError(
-            f"{fn} requires unique merge outputs; duplicate outputs: "
+            "bpe_encode requires unique merge outputs; duplicate outputs: "
             f"{sorted({o for o in outs if outs.count(o) > 1})}"
         )
 
@@ -922,106 +944,86 @@ def bpe_encode(
     merges: list[tuple[str, str]] | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    pretoken_pattern: str = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]+",
-    n_rounds: int | None = None,
+    passthrough_cols: list[str] | None = None,
 ) -> DataFrame:
     """Greedy BPE merge-table application (GPT-2 ``bpe()`` semantics): per
     pretoken, repeatedly merge ALL left-to-right non-overlapping
     occurrences of the lowest-ranked adjacent symbol pair present, until
     no table pair remains; emit the doc's token-id sequence.
 
-    Output: (doc_id, n_tokens, token_str) — token_str is the
-    space-joined id sequence, so the oracle hash-checks the exact
-    tokenization (see reference notebooks' sklearn-transformer analogue:
-    this engine's tokenize-for-training step has no reference counterpart
-    and follows t10's pretokenizer).
+    Output: (doc_id, n_tokens, token_str) — token_str is the space-joined
+    id sequence, so the t14b oracle hash-checks the exact tokenization,
+    and a hand-derived golden fixture pins it against paper-computed ids
+    (tests/test_operators.py::test_bpe_golden_fixture_hand_derived).
 
-    Plan shape — MAP-ONLY, zero shuffles, zero UDFs:
-    - each pretoken's symbol state is ONE string: symbols wrapped as
-      ``\\x01sym\\x01`` and concatenated, so "merge all non-overlapping
-      occurrences of (l, r)" is a single literal
-      ``replace(state, \\x01l\\x01\\x01r\\x01 → \\x01lr\\x01)`` — the
-      wrappers make boundary corruption impossible (a pattern can never
-      match a symbol suffix) and left-to-right literal replacement is
-      exactly the BPE non-overlap rule, with identical semantics in the
-      JVM and DuckDB (prototyped: ``\\x01a\\x01×3 → [aa, a]``);
-    - one merge ROUND = one ``transform`` over the doc's pretoken array
-      with a rank-ordered when-chain: the FIRST pattern contained in the
-      state is the min-rank pair present, and its branch replaces all its
-      occurrences;
-    - rounds are staged through successive ``select``s (lambda-built
-      arrays are not CSE'd — see t11's lesson), ``len(merges)`` rounds
-      total: a round eliminates its fired rank permanently (merging never
-      creates new adjacencies between pre-existing symbols, and the
-      merged symbol is strictly longer than either side), so after M
-      rounds NO table pair can remain — convergence is structural, not
-      heuristic (pytest re-applies an extra round and asserts a fixpoint).
+    Plan shape: map-only — one Arrow-batched ``mapInPandas`` with the rank
+    table in the closure, zero Exchange, and no plan growth with the merge
+    table (a real GPT-2 table is 50k merges); the per-word LRU cache makes
+    the Zipf head free, exactly like GPT-2's encoder cache.
 
-    At 100 TB this is scan-rate work: the merge table is a few hundred
-    plan literals (a real 50k-merge GPT-2 table would move to an
-    Arrow-batched ``mapInPandas`` with the table broadcast once — the
-    when-chain's compile cost grows with M, the right tool flips around
-    M ≈ 10³).
+    ``passthrough_cols`` copies the named input columns onto the output
+    rows inside the same Arrow batch (zero compute, zero shuffle) — the
+    "carry the shard key through the encoder" move that lets callers drop
+    a corpus-sized join-back to the source table (r12: pipe2's doc-level
+    source join removed this way).
     """
+    import re
+    from functools import lru_cache
+
+    import pandas as pd
+
     if merges is None:
         merges = DEFAULT_BPE_MERGES
-    _require_unique_merge_outputs(merges, "bpe_encode")
-    sep = "\x01"
+    _require_unique_merge_outputs(merges)
+    ranks = {pair: r for r, pair in enumerate(merges)}
     vocab = bpe_vocab(merges)
+    id_field = df.schema[id_col]
+    extra = list(passthrough_cols or [])
 
-    pretoks = F.regexp_extract_all(F.col(text_col), F.lit(pretoken_pattern), F.lit(0))
-    wrap = lambda w: F.concat(  # noqa: E731
-        F.lit(sep), F.array_join(F.split(w, ""), sep + sep), F.lit(sep)
-    )
-    out = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(pretoks, wrap).alias("state"),
-    )
-    pats = [
-        (f"{sep}{left}{sep}{sep}{right}{sep}", f"{sep}{left}{right}{sep}")
-        for left, right in merges
-    ]
+    def encode_batches(batches):
+        rx = re.compile(PRETOKEN_PATTERN)
 
-    def one_round(x):
-        # rank-ordered when-chain: the first contained pattern IS the
-        # min-rank pair present; its replace merges all its occurrences
-        chain = None
-        for pat, rep in pats:
-            branch_cond = F.contains(x, F.lit(pat))
-            branch_val = F.replace(x, F.lit(pat), F.lit(rep))
-            chain = (
-                F.when(branch_cond, branch_val)
-                if chain is None
-                else chain.when(branch_cond, branch_val)
-            )
-        return chain.otherwise(x)
+        @lru_cache(maxsize=65536)
+        def word_ids(word: str) -> tuple[int, ...]:
+            syms = list(word)
+            while len(syms) > 1:
+                best, best_rank = None, None
+                for i in range(len(syms) - 1):
+                    r = ranks.get((syms[i], syms[i + 1]))
+                    if r is not None and (best_rank is None or r < best_rank):
+                        best, best_rank = (syms[i], syms[i + 1]), r
+                if best is None:
+                    break
+                out, i = [], 0
+                while i < len(syms):
+                    if i + 1 < len(syms) and (syms[i], syms[i + 1]) == best:
+                        out.append(syms[i] + syms[i + 1])
+                        i += 2
+                    else:
+                        out.append(syms[i])
+                        i += 1
+                syms = out
+            return tuple(vocab.get(s, -1) for s in syms)
 
-    # len(merges) rounds always suffice (each round permanently retires
-    # one rank — see docstring); n_rounds exists for the fixpoint test
-    for _ in range(len(merges) if n_rounds is None else n_rounds):
-        out = out.select("doc_id", F.transform("state", one_round).alias("state"))
+        for pdf in batches:
+            ids = [
+                [t for w in rx.findall(text or "") for t in word_ids(w)]
+                for text in pdf[text_col]
+            ]
+            out = {
+                "doc_id": pdf[id_col],
+                "n_tokens": [len(x) for x in ids],
+                "token_str": [" ".join(map(str, x)) for x in ids],
+            }
+            for c in extra:
+                out[c] = pdf[c]
+            yield pd.DataFrame(out)
 
-    id_map = F.create_map(
-        *[F.lit(x) for kv in vocab.items() for x in kv]
-    )
-    ids = F.flatten(
-        F.transform(
-            "state",
-            lambda s: F.transform(
-                F.split(F.btrim(s, F.lit(sep)), sep + sep),
-                lambda t: F.coalesce(F.element_at(id_map, t), F.lit(-1)),
-            ),
-        )
-    )
-    # stage the lambda-built ids array before its two consumers (lambda
-    # expressions are not CSE'd — t11's lesson)
-    staged = out.select("doc_id", ids.alias("ids"))
-    return staged.select(
-        "doc_id",
-        F.size("ids").cast("long").alias("n_tokens"),
-        F.array_join(
-            F.transform("ids", lambda i: i.cast("string")), " "
-        ).alias("token_str"),
+    schema = f"doc_id {id_field.dataType.simpleString()}, n_tokens long, token_str string"
+    for c in extra:
+        schema += f", {c} {df.schema[c].dataType.simpleString()}"
+    return df.select(id_col, text_col, *extra).mapInPandas(
+        encode_batches, schema=schema
     )
 
 
@@ -1069,304 +1071,41 @@ def bpe_decode(
     )
 
 
-def bpe_encode_broadcast(
-    df: DataFrame,
-    merges: list[tuple[str, str]] | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    pretoken_pattern: str = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]+",
-    passthrough_cols: list[str] | None = None,
-) -> DataFrame:
-    """``bpe_encode`` for LARGE merge tables: Arrow-batched ``mapInPandas``
-    with the rank table broadcast once in the closure, instead of the
-    literal-replace when-chain (whose generated-code size grows with M —
-    the right tool flips around M ≈ 10³; a real GPT-2 table is 50k merges).
-
-    Same semantics (GPT-2 greedy ``bpe()``: min-rank adjacent pair, merge
-    all non-overlapping occurrences left-to-right, repeat) and the SAME
-    output schema/values as ``bpe_encode`` — equivalence is pytest-pinned
-    on the shared table, and both match the hand-derived golden fixture.
-
-    Plan shape: map-only (one python runner stage, zero Exchange); the
-    per-word LRU cache makes the Zipf head free, exactly like GPT-2's
-    encoder cache.
-
-    ``passthrough_cols`` copies the named input columns onto the output
-    rows inside the same Arrow batch (zero compute, zero shuffle) — the
-    "carry the shard key through the encoder" move that lets callers drop
-    a corpus-sized join-back to the source table (r12: pipe2's doc-level
-    source join removed this way).
-    """
-    import re
-    from functools import lru_cache
-
-    import pandas as pd
-
-    if merges is None:
-        merges = DEFAULT_BPE_MERGES
-    # the rank-based merge here would actually tolerate duplicate outputs,
-    # but this path is documented same-semantics with bpe_encode (and
-    # pytest-pinned equal on shared tables) — accept the same input domain
-    # so the two can never silently diverge
-    _require_unique_merge_outputs(merges, "bpe_encode_broadcast")
-    ranks = {pair: r for r, pair in enumerate(merges)}
-    vocab = bpe_vocab(merges)
-    pat = pretoken_pattern
-    id_field = df.schema[id_col]
-    extra = list(passthrough_cols or [])
-
-    def encode_batches(batches):
-        rx = re.compile(pat)
-
-        @lru_cache(maxsize=65536)
-        def word_ids(word: str) -> tuple[int, ...]:
-            syms = list(word)
-            while len(syms) > 1:
-                best, best_rank = None, None
-                for i in range(len(syms) - 1):
-                    r = ranks.get((syms[i], syms[i + 1]))
-                    if r is not None and (best_rank is None or r < best_rank):
-                        best, best_rank = (syms[i], syms[i + 1]), r
-                if best is None:
-                    break
-                out, i = [], 0
-                while i < len(syms):
-                    if i + 1 < len(syms) and (syms[i], syms[i + 1]) == best:
-                        out.append(syms[i] + syms[i + 1])
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                syms = out
-            return tuple(vocab.get(s, -1) for s in syms)
-
-        for pdf in batches:
-            ids = [
-                [t for w in rx.findall(text or "") for t in word_ids(w)]
-                for text in pdf[text_col]
-            ]
-            out = {
-                "doc_id": pdf[id_col],
-                "n_tokens": [len(x) for x in ids],
-                "token_str": [" ".join(map(str, x)) for x in ids],
-            }
-            for c in extra:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
-
-    schema = f"doc_id {id_field.dataType.simpleString()}, n_tokens long, token_str string"
-    for c in extra:
-        schema += f", {c} {df.schema[c].dataType.simpleString()}"
-    return df.select(id_col, text_col, *extra).mapInPandas(
-        encode_batches, schema=schema
-    )
-
-
 def bpe_train(
     df: DataFrame,
     n_merges: int = 10,
     text_col: str = "text",
-    pretoken_pattern: str = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]+",
 ) -> list[tuple[str, str, int]]:
     """Learn a BPE merge table from a corpus (the training counterpart of
-    ``bpe_encode``): repeat ``n_merges`` times — count all adjacent symbol
-    pairs across every pretoken OCCURRENCE (frequency-weighted, the
-    Sennrich et al. 2016 objective), take the most frequent (ties broken
-    by (left, right) lexicographically, so the table is deterministic in
-    any engine), merge it corpus-wide, recurse. Returns
-    ``[(left, right, pair_count), ...]`` in rank order.
+    ``bpe_encode``; Sennrich et al. 2016): repeat ``n_merges`` times —
+    count all adjacent symbol pairs across every pretoken OCCURRENCE
+    (frequency-weighted), take the most frequent (ties broken by
+    (left, right) lexicographically, so the table is deterministic in any
+    engine), merge it left-to-right non-overlapping, recurse; stop early
+    once no pair is left. Returns ``[(left, right, pair_count), ...]`` in
+    rank order.
 
-    Plan shape per round: symbols stay in the same wrapped-string state as
-    ``bpe_encode`` (one row per pretoken occurrence); pair counting is one
-    explode + groupBy over (8+8)-byte-ish symbol pairs — the ONLY shuffle —
-    and the argmax is a 1-row TakeOrdered action; the merge apply is one
-    map-side literal replace. Driver holds the merge table only, never
-    rows. At 100 TB each round is one scan-rate aggregation — the same
-    cost class as a word-count — and rounds chain on a localCheckpoint'ed
-    state so lineage stays flat.
+    Plan shape: ONE distributed aggregation — explode + groupBy(pretoken),
+    the word-count cost class — then every merge rank is trained
+    driver-side on that ``(pretoken, occurrence_count)`` table, as real
+    trainers (Sennrich's learn_bpe, the Hugging Face trainer,
+    SentencePiece's BPE mode) operate. Pair statistics are a pure function
+    of the table, which is bounded by WORD VOCABULARY, not corpus size
+    (Heaps' law: ~10⁶-10⁷ rows for a 100 TB web corpus vs 10¹³ tokens), so
+    the Spark job count does not grow with ``n_merges`` (pinned in
+    tests/test_plan_shapes.py). Per rank the driver does the fastBPE-style
+    incremental update: merging (l, r) only perturbs counts of pairs
+    adjacent to an (l, r) occurrence, so a rank costs O(affected words).
 
-    JOB-COUNT BOUND AND THE BATCH-MERGE UPGRADE PATH: this exact loop
-    runs ONE Spark job set per merge rank (count + argmax + checkpoint),
-    so a production 50k-merge vocabulary is ~50k sequential jobs —
-    correct but driver-round-trip-bound (fine for the ≤ 21-rank fixtures
-    this repo oracles). The standard fix is batched merging with
-    pair-count REUSE (the fastBPE/Hugging-Face-trainer strategy): keep
-    the per-pair counts materialized, and after merging pair (l, r)
-    update only the counts of pairs ADJACENT to an (l, r) occurrence
-    (merging touches no other pair), so one scan amortizes over many
-    ranks and the corpus is re-read only when accumulated deltas exceed
-    a rescan budget. IMPLEMENTED as ``bpe_train_incremental`` (t15b) in
-    the exact rank-by-rank form — counts maintained incrementally,
-    argmax per rank, affected-rows-only deltas — which keeps canonical
-    Sennrich tie-order at every rank (same oracle as t15, pytest
-    equality) while dropping the per-rank shuffle from corpus-scale to
-    affected-pairs-scale. This full-recount variant stays as the
-    oracle-shaped reference implementation.
+    The t15 oracle replays the per-rank full recount in DuckDB; Python and
+    Spark/DuckDB string comparison agree on the tie-break because UTF-8
+    byte order equals code-point order.
     """
-    sep = "\x01"
-    pretoks = F.regexp_extract_all(F.col(text_col), F.lit(pretoken_pattern), F.lit(0))
-    state = df.select(F.explode(pretoks).alias("w")).select(
-        F.concat(
-            F.lit(sep), F.array_join(F.split("w", ""), sep + sep), F.lit(sep)
-        ).alias("state")
-    ).localCheckpoint()
-
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        syms = F.split(F.btrim(F.col("state"), F.lit(sep)), sep + sep)
-        staged = state.select("state", syms.alias("_syms"))
-        pairs = staged.select(
-            F.explode(
-                F.zip_with(
-                    F.slice("_syms", 1, F.size("_syms") - 1),
-                    F.slice("_syms", 2, F.size("_syms") - 1),
-                    lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-                )
-            ).alias("p")
-        ).select("p.l", "p.r")
-        top = (
-            pairs.groupBy("l", "r")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.desc("n"), "l", "r")
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        l, r, n = top[0]["l"], top[0]["r"], top[0]["n"]
-        merges.append((l, r, int(n)))
-        pat, rep = f"{sep}{l}{sep}{sep}{r}{sep}", f"{sep}{l}{r}{sep}"
-        state = state.select(
-            F.replace("state", F.lit(pat), F.lit(rep)).alias("state")
-        ).localCheckpoint()
-    return merges
-
-
-def bpe_train_incremental(
-    df: DataFrame,
-    n_merges: int = 10,
-    text_col: str = "text",
-    pretoken_pattern: str = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]+",
-) -> list[tuple[str, str, int]]:
-    """``bpe_train`` with pair-count REUSE — the batch-merge upgrade path
-    its docstring describes, implemented (the fastBPE / HF-trainer
-    strategy). Output is IDENTICAL to ``bpe_train`` (same objective, same
-    (count desc, l, r) tie-break — pinned by pytest equality and by t15b
-    sharing t15's full-value DuckDB oracle).
-
-    Why it scales where ``bpe_train`` doesn't: the per-rank full pair
-    count is an explode+groupBy over EVERY adjacent symbol pair in the
-    corpus — a corpus-token-scale shuffle per merge rank, ~50k of them
-    for a production vocab. Merging pair (l, r) only changes counts of
-    pairs ADJACENT to an (l, r) occurrence, so this trainer materializes
-    the pair-count table ONCE and then per rank:
-
-    1. argmax from the COUNTS table (tiny TakeOrdered — no corpus scan);
-    2. delta-aggregate over the AFFECTED rows only
-       (``contains(state, pat)`` filter — a predicate scan, no shuffle of
-       unaffected rows): new-state pairs minus old-state pairs;
-    3. fold the delta into the counts table (bounded-vocabulary shuffle)
-       and apply the merge to the state with one map-side replace.
-
-    Per-rank shuffle volume drops from O(corpus tokens) to O(affected
-    pairs) + O(vocab²-bounded counts) — on skewed rank-frequency corpora
-    (all real text) affected rows shrink rapidly with rank. Exactness is
-    structural, not sampled: the counts table is exact bookkeeping, so
-    the argmax sequence — and therefore the merge table — is the
-    canonical Sennrich one at every rank.
-    """
-    sep = "\x01"
-    pretoks = F.regexp_extract_all(F.col(text_col), F.lit(pretoken_pattern), F.lit(0))
-    state = df.select(F.explode(pretoks).alias("w")).select(
-        F.concat(
-            F.lit(sep), F.array_join(F.split("w", ""), sep + sep), F.lit(sep)
-        ).alias("state")
-    ).localCheckpoint()
-
-    def pair_counts(frame: DataFrame, sign: int) -> DataFrame:
-        syms = F.split(F.btrim(F.col("state"), F.lit(sep)), sep + sep)
-        staged = frame.select(syms.alias("_syms"))
-        pairs = staged.select(
-            F.explode(
-                F.zip_with(
-                    F.slice("_syms", 1, F.size("_syms") - 1),
-                    F.slice("_syms", 2, F.size("_syms") - 1),
-                    lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-                )
-            ).alias("p")
-        )
-        return pairs.groupBy("p.l", "p.r").agg(
-            (F.count(F.lit(1)) * sign).alias("n")
-        )
-
-    counts = pair_counts(state, 1).localCheckpoint()
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        top = counts.orderBy(F.desc("n"), "l", "r").limit(1).collect()
-        if not top:
-            break
-        l, r, n = top[0]["l"], top[0]["r"], top[0]["n"]
-        merges.append((l, r, int(n)))
-        pat, rep = f"{sep}{l}{sep}{sep}{r}{sep}", f"{sep}{l}{r}{sep}"
-        affected = state.filter(F.contains(F.col("state"), F.lit(pat)))
-        replaced = affected.select(
-            F.replace("state", F.lit(pat), F.lit(rep)).alias("state")
-        )
-        counts = (
-            counts.unionByName(pair_counts(replaced, 1))
-            .unionByName(pair_counts(affected, -1))
-            .groupBy("l", "r")
-            .agg(F.sum("n").alias("n"))
-            .filter(F.col("n") > 0)
-            .localCheckpoint()
-        )
-        state = state.select(
-            F.replace("state", F.lit(pat), F.lit(rep)).alias("state")
-        ).localCheckpoint()
-    return merges
-
-
-def bpe_train_local(
-    df: DataFrame,
-    n_merges: int = 10,
-    text_col: str = "text",
-    pretoken_pattern: str = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]+",
-    min_frequency: int = 1,
-) -> list[tuple[str, str, int]]:
-    """The PRODUCTION-vocab BPE trainer: ONE distributed aggregation, then
-    every merge rank trained driver-side on the distinct-pretoken count
-    table — how real trainers (Sennrich's learn_bpe, the Hugging Face
-    trainer, SentencePiece's BPE mode) actually operate.
-
-    Why this is the scale path where t15/t15b are the oracle-shaped
-    references: pair statistics are a pure function of the
-    ``(pretoken, occurrence_count)`` table, which is bounded by WORD
-    VOCABULARY, not corpus size — Heaps' law puts it at ~10⁶-10⁷ rows
-    for a 100 TB web corpus (vs 10¹³ tokens), and ``min_frequency``
-    floors it further (rare pretokens can't win any merge rank whose
-    running winner already exceeds their total count; the floor is the
-    standard trainer knob, default off here to keep oracle equality).
-    So: one explode + one groupBy((pretoken)) — the word-count cost
-    class, the ONLY Spark jobs regardless of n_merges — then 50k ranks
-    cost zero cluster round-trips. Per rank the driver does the
-    fastBPE-style incremental update: merging (l, r) only perturbs
-    counts of pairs adjacent to an (l, r) occurrence, so each rank costs
-    O(affected words), not O(vocab).
-
-    Output is IDENTICAL to ``bpe_train``/``bpe_train_incremental`` (same
-    frequency-weighted Sennrich objective over pretoken OCCURRENCES,
-    same (count desc, l, r) lexicographic tie-break, same left-to-right
-    non-overlapping merge application) — pinned by pytest equality and
-    by t15c sharing t15's full-value DuckDB oracle. Python/Spark string
-    comparison agree on the tie-break because UTF-8 byte order equals
-    code-point order.
-    """
-    pretoks = F.regexp_extract_all(F.col(text_col), F.lit(pretoken_pattern), F.lit(0))
+    pretoks = F.regexp_extract_all(F.col(text_col), F.lit(PRETOKEN_PATTERN), F.lit(0))
     vocab_rows = (
         df.select(F.explode(pretoks).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= min_frequency)
         .collect()
     )
     return _bpe_train_from_vocab(
@@ -1377,7 +1116,7 @@ def bpe_train_local(
 def _bpe_train_from_vocab(
     vocab: dict[str, int], n_merges: int
 ) -> list[tuple[str, str, int]]:
-    """The driver-side rank loop of ``bpe_train_local`` over a
+    """The driver-side rank loop of ``bpe_train`` over a
     ``{pretoken: occurrence_count}`` table — factored out so hypothesis
     can property-test the incremental pair bookkeeping against a naive
     full-recount reference without a SparkSession."""
@@ -1545,7 +1284,7 @@ def wordpiece_encode(
     all-space text) produce no row. Fertility replicates Spark's HALF_UP
     ``round(x, 6)`` via exact-decimal quantization.
 
-    Scale shape (the t14b precedent, ``bpe_encode_broadcast``):
+    Scale shape (the t14b precedent, ``bpe_encode``):
     Arrow-batched ``mapInPandas`` with the vocabulary broadcast once in
     the closure. The pieces live in per-LENGTH hash sets, so the greedy
     probe is O(word_len x n_distinct_lengths) hash lookups per word —

@@ -2551,16 +2551,21 @@ def t19_kneser_ney_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.kneser_ney_score(docs)
 
 
-# GPT-2-style pretokenizer classes, simplified to the engine-portable
-# subset (letters / digits / other-symbol runs; both Java regex and
-# DuckDB/RE2 read this pattern identically).
-_T10_PATTERN = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]+"
+# the BPE operators' pretokenizer: one string for the engine and its oracles
+_T10_PATTERN = text.PRETOKEN_PATTERN
 
 
 def _bpe_sql() -> str:
-    """DuckDB twin of ``text.bpe_encode``: same wrapped-string state, same
-    rank-ordered CASE per round, same left-to-right literal ``replace``
-    (prototyped identical in both engines), one chained CTE per round."""
+    """DuckDB oracle of ``text.bpe_encode``, by a different algorithm:
+    each pretoken's symbols are wrapped as ``\\x01sym\\x01`` and
+    concatenated, so merging all non-overlapping occurrences of (l, r) is
+    one left-to-right literal ``replace`` (the wrappers stop a pattern
+    from matching a symbol suffix). One round is a rank-ordered CASE —
+    the first contained pair is the min-rank pair present — as one chained
+    CTE. ``len(merges)`` rounds always suffice: a round retires its rank
+    for good, since merging never creates a new adjacency between
+    pre-existing symbols. That argument needs unique merge outputs, which
+    ``text._require_unique_merge_outputs`` enforces."""
     from consumer_loans_analysis_spark.operators.text import (
         DEFAULT_BPE_MERGES,
         bpe_vocab,
@@ -2637,30 +2642,18 @@ def t10_regex_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("t14_bpe_encode", oracle=_bpe_sql())
-def t14_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy BPE merge-table application over t10's pretokens — the step
-    t10's docstring promised ("a real BPE merge table would follow"):
-    per-doc exact token-id sequence under a 21-rank merge table with
-    multi-level chains (t-a→ta-b→…→"table"). Map-only, zero UDFs: each
-    merge round is one literal replace on a wrapped-symbol string (see
-    ``text.bpe_encode`` for the convergence proof and 100 TB story);
-    oracle recomputes the full greedy tokenization round-by-round in
-    DuckDB and hash-checks the id sequence itself."""
-    docs = read_table(spark, sf_dir, "documents")
-    return text.bpe_encode(docs)
-
-
 @query("t14b_bpe_encode_broadcast", oracle=_bpe_sql())
 def t14b_bpe_encode_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t14's large-merge-table path: Arrow-batched ``mapInPandas`` with the
-    rank table broadcast in the closure (the right tool past M ≈ 10³ merges,
-    where the when-chain's generated code stops paying). Same greedy GPT-2
-    semantics — the SAME oracle as t14 hash-checks the id sequences, and a
-    hand-derived golden fixture pins both paths against paper-computed ids
+    """Greedy BPE merge-table application over t10's pretokens: per-doc
+    exact token-id sequence under a 21-rank merge table with multi-level
+    chains (t-a→ta-b→…→"table"). ``text.bpe_encode`` is one map-only
+    Arrow pass with the rank table broadcast in the closure, zero
+    Exchange. The oracle recomputes the greedy tokenization round by
+    round in DuckDB and hash-checks the id sequence itself; a hand-derived
+    golden fixture pins it against paper-computed ids
     (tests/test_operators.py::test_bpe_golden_fixture_hand_derived)."""
     docs = read_table(spark, sf_dir, "documents")
-    return text.bpe_encode_broadcast(docs)
+    return text.bpe_encode(docs)
 
 
 @query(
@@ -2687,13 +2680,13 @@ def t17_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     word and bytes per token — THE metrics tokenizer teams track across
     languages (high fertility = the vocabulary under-serves that language
     and its documents pay more sequence length per content). Uses t14b's
-    broadcast merge-table encoder (same oracle-pinned id sequences), so
-    this doubles as a composition check: encode → doc-level join →
-    bounded per-language aggregate. Map-only encode + one equi-join + a
+    encoder (the same oracle-pinned id sequences), so this doubles as a
+    composition check: encode → doc-level join → bounded per-language
+    aggregate. Map-only encode + one equi-join + a
     #langs-group aggregate; sums are exact integers, the two ratios
     divide once at the end."""
     docs = read_table(spark, sf_dir, "documents")
-    enc = text.bpe_encode_broadcast(docs).select("doc_id", "n_tokens")
+    enc = text.bpe_encode(docs).select("doc_id", "n_tokens")
     j = enc.join(
         docs.select(
             "doc_id",
@@ -2725,8 +2718,9 @@ _T15_ROUNDS = 8
 
 
 def _bpe_train_sql(n_merges: int = _T15_ROUNDS) -> str:
-    """DuckDB twin of ``text.bpe_train``: chained CTEs, one (pair-count →
-    deterministic top-1 → corpus-wide replace) block per round."""
+    """DuckDB oracle of ``text.bpe_train``: the per-rank full recount as
+    chained CTEs, one (pair-count → deterministic top-1 → corpus-wide
+    replace) block per round."""
     sep = "\x01"
     blocks, unions = [], []
     for i in range(n_merges):
@@ -2761,13 +2755,15 @@ def _bpe_train_sql(n_merges: int = _T15_ROUNDS) -> str:
 
 @query("t15_bpe_train", oracle=_bpe_train_sql())
 def t15_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE merge-table TRAINING (Sennrich et al. 2016): learn the top-8
-    merges from the corpus — per round, one explode+groupBy pair count
-    (the only shuffle, word-count cost class), a deterministic top-1
-    (count desc, then lexicographic), one map-side literal replace.
-    Returns the learned table (merge_rank, lhs, rhs, pair_count); the
-    oracle replays the identical training loop in DuckDB. Together with
-    t14 (application) this completes tokenizer construction in-engine."""
+    """BPE merge-table TRAINING (Sennrich et al., 2016): learn the top-8
+    merges from the corpus — per rank the most frequent adjacent pair
+    (count desc, then lexicographic), merged corpus-wide. ``text.bpe_train``
+    runs ONE explode+groupBy(pretoken) job (word-count cost class) and
+    trains every rank on the driver over that vocabulary table. Returns
+    the learned table (merge_rank, lhs, rhs, pair_count); the oracle
+    replays the per-rank full recount in DuckDB and checks every row.
+    Together with t14b (application) this completes tokenizer
+    construction in-engine."""
     docs = read_table(spark, sf_dir, "documents")
     merges = text.bpe_train(docs, n_merges=_T15_ROUNDS)
     return spark.createDataFrame(
@@ -3546,7 +3542,7 @@ def pipe3_audited_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- pipe2: the pretrain data-prep flagship ----------------------------------
 
 def _pipe2_sql() -> str:
-    """DuckDB twin of pipe2: t14's full BPE tokenization as a nested CTE,
+    """DuckDB twin of pipe2: t14b's full BPE tokenization as a nested CTE,
     then id-sequence chunking (chunk1's 32/stride-24 shape over token ids)
     and per-shard 512-token sequence packing (pack1's running-sum rule),
     with an order-pinned md5 over each training sequence's chunk hashes."""
@@ -3587,7 +3583,7 @@ def _pipe2_sql() -> str:
 @query("pipe2_pretrain_prep", oracle=_pipe2_sql())
 def pipe2_pretrain_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END pretrain data prep — the LLM-pipeline flagship (pipe1's
-    counterpart on the tokenize side): t10 regex pretokenization → t14
+    counterpart on the tokenize side): t10 regex pretokenization → t14b
     greedy BPE encode → chunk1-shaped context windows over the TOKEN-ID
     sequence (32 ids, stride 24) → pack1-shaped deterministic packing of
     chunks into 512-token training sequences per source shard. Output is
@@ -3597,20 +3593,18 @@ def pipe2_pretrain_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     four-operator composition sits under one hash compare.
 
     Plan shape: the encode+chunk half is map-only (the encoder is t14b's
-    Arrow-batched broadcast-merge-table path — the designated large-table
-    scale path, and ~20× faster than re-compiling t14's 21-round
-    when-chain per run; both are pinned to the same oracle); the shard
+    Arrow-batched pass with the merge table in the closure); the shard
     key rides THROUGH the encoder (``passthrough_cols`` — r12: this
     removed the doc-level source join-back entirely, one corpus-sized
     equi-join gone); packing is ONE window
     shuffle on the shard key (never a global sort) and the final
     per-sequence aggregate reuses bounded groups. Every stage is
-    individually oracled (t10/t14/t14b/chunk1/pack1) — this query proves
+    individually oracled (t10/t14b/chunk1/pack1) — this query proves
     they COMPOSE."""
     from pyspark.sql import Window
 
     docs = read_table(spark, sf_dir, "documents")
-    enc = text.bpe_encode_broadcast(docs, passthrough_cols=["source"])
+    enc = text.bpe_encode(docs, passthrough_cols=["source"])
     ids = F.split(F.col("token_str"), " ")
     starts = F.sequence(
         F.lit(1), F.greatest(F.size(ids) - 8, F.lit(1)), F.lit(24)
@@ -3658,7 +3652,7 @@ def pipe2_pretrain_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _t16_oracle() -> str:
-    """t16 oracle: t14's BPE tokenization (nested CTE), a literal
+    """t16 oracle: t14b's BPE tokenization (nested CTE), a literal
     id→symbol decode CASE (the inverse of _bpe_sql's encode CASE), and
     the lossy-roundtrip expectation — pretoken concatenation with every
     out-of-vocab character replaced by '?'."""
@@ -3707,7 +3701,7 @@ def t16_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the encode path breaks the fingerprint equality. Map-only both
     halves; one doc-level equi-join."""
     docs = read_table(spark, sf_dir, "documents")
-    enc = text.bpe_encode_broadcast(docs)
+    enc = text.bpe_encode(docs)
     dec = text.bpe_decode(enc)
     expected = docs.select(
         "doc_id",
@@ -3725,46 +3719,6 @@ def t16_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5("decoded").alias("decoded_fp"),
         F.md5("expected").alias("expected_fp"),
         (F.col("decoded") == F.col("expected")).alias("roundtrip_ok"),
-    )
-
-
-@query("t15b_bpe_train_incremental", oracle=_bpe_train_sql())
-def t15b_bpe_train_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t15's scale path: BPE training with pair-count REUSE
-    (``text.bpe_train_incremental``) — the counts table is materialized
-    once, each rank argmaxes it and folds in a delta aggregated over the
-    AFFECTED rows only, instead of re-counting every adjacent pair in
-    the corpus per rank (t15's per-rank corpus-scale shuffle; ~50k of
-    them for a production vocabulary). Exact bookkeeping, so the merge
-    table is the canonical Sennrich one — the SAME full-value oracle as
-    t15 hash-checks every (rank, lhs, rhs, pair_count) row, and pytest
-    pins trainer-vs-trainer equality."""
-    docs = read_table(spark, sf_dir, "documents")
-    merges = text.bpe_train_incremental(docs, n_merges=_T15_ROUNDS)
-    return spark.createDataFrame(
-        [(i, l, r, n) for i, (l, r, n) in enumerate(merges)],
-        "merge_rank int, lhs string, rhs string, pair_count bigint",
-    )
-
-
-@query("t15c_bpe_train_local", oracle=_bpe_train_sql())
-def t15c_bpe_train_local(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t15's PRODUCTION-vocab path (``text.bpe_train_local``): ONE
-    distributed aggregation — the distinct-pretoken count table, bounded
-    by word vocabulary (Heaps' law: ~10⁶-10⁷ rows at 100 TB), not corpus
-    size — then every merge rank trains driver-side with fastBPE-style
-    incremental pair updates, zero cluster round-trips per rank. This is
-    how real trainers (Sennrich learn_bpe, HF tokenizers, SentencePiece)
-    operate, and it removes t15/t15b's structural per-rank driver round:
-    a 50k-merge production vocabulary costs the SAME one Spark job as 8
-    merges. Output is the canonical Sennrich table — the SAME full-value
-    oracle as t15/t15b hash-checks every (rank, lhs, rhs, pair_count)
-    row, and pytest pins trainer-vs-trainer equality to exhaustion."""
-    docs = read_table(spark, sf_dir, "documents")
-    merges = text.bpe_train_local(docs, n_merges=_T15_ROUNDS)
-    return spark.createDataFrame(
-        [(i, l, r, n) for i, (l, r, n) in enumerate(merges)],
-        "merge_rank int, lhs string, rhs string, pair_count bigint",
     )
 
 
@@ -4883,7 +4837,7 @@ def _t20_oracle() -> str:
 def t20_wordpiece_greedy_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WordPiece-family tokenizer surface (r11): greedy longest-match
     subword encoding with a pinned vocabulary — BERT's tokenizer class,
-    the production alternative to the t14/t15 BPE family. The per-doc
+    the production alternative to the t14b/t15 BPE family. The per-doc
     ``pieces_digest`` puts the SEGMENTATION itself (every piece of every
     word, in order) under the hash compare, so a greedy-walk off-by-one,
     a wrong tie-break, or a broken fallback hash-mismatches rather than
@@ -5169,7 +5123,7 @@ def _t21_oracle() -> str:
 def t21_unigram_viterbi_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM tokenizer surface (r11) — SentencePiece's family (Kudo
     2018), completing the production tokenizer triad next to the BPE
-    family (t14/t15) and WordPiece greedy (t20): per word the
+    family (t14b/t15) and WordPiece greedy (t20): per word the
     MINIMUM-COST segmentation by Viterbi DP over pinned integer
     centi-nat piece costs. ``total_cost`` is an exact BIGINT, so the
     oracle compares the optimum itself; ``pieces_digest`` pins the

@@ -365,13 +365,41 @@ def test_kn_and_repetition_are_map_only(spark, sf_dir, name):
 
 
 @pytest.mark.parametrize(
-    "name", ["t20_wordpiece_greedy_encode", "t21_unigram_viterbi_encode"]
+    "name",
+    [
+        "t14b_bpe_encode_broadcast",
+        "t20_wordpiece_greedy_encode",
+        "t21_unigram_viterbi_encode",
+    ],
 )
 def test_subword_encoders_shuffle_nothing(spark, sf_dir, name):
-    """t20/t21: the vocabulary rides the closure, so per-doc encoding is
-    complete within the batch — zero Exchange at any corpus size."""
+    """t14b/t20/t21: the merge table or vocabulary rides the closure, so
+    per-doc encoding is complete within the batch — zero Exchange at any
+    corpus size."""
     plan = _registry_plan(spark, sf_dir, name)
     assert "Exchange" not in plan, plan
+
+
+def test_bpe_train_job_count_independent_of_merges(spark, sf_dir):
+    """t15: bpe_train runs one distributed aggregation and trains every
+    merge rank on the driver, so 20 merges launch exactly the Spark jobs
+    that 2 merges do — none per rank."""
+    docs = read_table(spark, sf_dir, "documents")
+    sc = spark.sparkContext
+
+    def train(n_merges):
+        group = f"bpe_train_{n_merges}"
+        sc.setJobGroup(group, "bpe_train job count")
+        try:
+            merges = text.bpe_train(docs, n_merges=n_merges)
+            return merges, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup(None, None)
+
+    few, jobs_few = train(2)
+    many, jobs_many = train(20)
+    assert len(many) == 20 and many[:2] == few
+    assert jobs_few == jobs_many > 0, (jobs_few, jobs_many)
 
 
 def test_nb_seed_scoring_join_broadcasts_model(spark, sf_dir):
