@@ -5,12 +5,15 @@ Scale design (the point of each variant):
 - **exact**: hash-groupBy on the dedup key — one shuffle, no comparison
   explosion. For 100 TB, group on a fingerprint (md5) instead of raw text so
   shuffle rows are ~32 bytes, not documents.
-- **n-gram Jaccard**: inverted-index join (explode shingles, equi-join on
-  shingle, count common) — never materializes the O(n²) pair space; cost is
-  Σ per-shingle df². Hot shingles are the skew risk → AQE skew-join + an
-  optional document-frequency cap.
+- **n-gram Jaccard**: posting lists (explode shingles, group each
+  shingle's documents into one sorted id list, read the pairs off the
+  list and count shared shingles per pair) — never materializes the
+  O(n²) pair space and never self-joins the index; cost is Σ per-shingle
+  df². Hot shingles are the skew risk → an optional document-frequency
+  cap on the posting lists.
 - **MinHash+LSH**: fixed-size signatures (num_hashes longs per doc) →
-  band-bucket equi-join → exact-Jaccard verification of candidates only.
+  one posting list per band bucket (the same pair generator) →
+  exact-Jaccard verification of candidates only.
   This is the 100 TB path: shuffle volume is #docs × signature, candidate
   pairs ≪ n². With r rows/band and b bands, a pair at similarity s is missed
   with probability (1−s^r)^b — at s=0.8, r=2, b=32: ~5·10⁻⁸.
@@ -34,24 +37,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from consumer_loans_analysis_spark.operators.text import portable_hash, words
-
-
-def _bytes_conf(spark, key: str, default: int) -> int:
-    """Parse a Spark byte-size conf value ('134217728', '134217728b',
-    '128m', '128MB') to bytes."""
-    raw = str(spark.conf.get(key, str(default))).strip().lower()
-    mult = 1
-    for suf, m in (
-        ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-        ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1),
-    ):
-        if raw.endswith(suf):
-            raw, mult = raw[: -len(suf)], m
-            break
-    try:
-        return int(float(raw) * mult)
-    except ValueError:
-        return default
 
 
 def _widen_small_scan(df: DataFrame) -> DataFrame:
@@ -81,7 +66,7 @@ def _widen_small_scan(df: DataFrame) -> DataFrame:
     except Exception:
         files = []
     if files:
-        mpb = max(1, _bytes_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20))
+        mpb = max(1, spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
         sc = spark.sparkContext
         hconf = sc._jsc.hadoopConfiguration()
         splits = 0
@@ -108,7 +93,7 @@ def shingle_hashes(
     """Distinct 64-bit-hashed word n-gram shingles per document: (id, sh).
 
     Hashing each shingle ONCE to a long (xxhash64, JVM-native) and doing all
-    downstream work (inverted-index joins, minhash, band keys) on 8-byte
+    downstream work (posting lists, minhash, band keys) on 8-byte
     longs instead of ~50-byte strings cuts shuffle volume ~6× and removes
     per-row md5 cost. Collisions (~|shingles|²/2⁶⁴) are negligible.
 
@@ -126,50 +111,33 @@ def shingle_hashes(
     )
 
 
-def _pair_jaccard(sh: DataFrame) -> DataFrame:
-    """Inverted-index pairwise Jaccard from a (id, sh) hashed-shingle table."""
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col("id").alias("id_a"), "sh")
-    b = sh.select(F.col("id").alias("id_b"), "sh")
-    common = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
+def _posting_pairs(keyed: DataFrame, max_df: int | None = None) -> DataFrame:
+    """Candidate pairs from an inverted index: ``(id, key…)`` rows →
+    ``(id_a, id_b, n)`` for every ``id_a ≤ id_b`` that share a key, ``n``
+    the number of keys they share; on the diagonal ``n`` is the
+    document's key count. Each key's ids are grouped into one sorted
+    posting list and the pairs are read off it — a shuffle of (key, id)
+    rows and one of the emitted pairs, no self-join of the index.
+
+    ``posexplode`` then ``explode(slice(...))`` emits the pairs row by row,
+    so no row holds more than one posting list (a nested transform would
+    build a d²-element array for a key in d documents). ``max_df`` drops
+    posting lists longer than the cap BEFORE pairs are emitted — a key in
+    d documents costs d² rows, and boilerplate keys carry no near-dup
+    signal; the diagonal then counts only keys under the cap."""
+    keys = [c for c in keyed.columns if c != "id"]
+    lists = keyed.groupBy(*keys).agg(F.array_sort(F.collect_list("id")).alias("ids"))
+    if max_df is not None:
+        lists = lists.filter(F.size("ids") <= max_df)
     return (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
+        lists.select("ids", F.posexplode("ids").alias("i", "id_a"))
+        .select(
+            "id_a",
+            F.explode(F.slice("ids", F.col("i") + 1, F.size("ids"))).alias("id_b"),
         )
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-
-
-def drop_hot_shingles(sh: DataFrame, max_df: int, key: str = "sh") -> DataFrame:
-    """Drop shingles whose document frequency exceeds ``max_df`` — the
-    standard skew guard for inverted-index joins: a shingle in d documents
-    contributes d² candidate rows, so boilerplate shingles (license
-    headers, navigation chrome) dominate Σdf² while carrying no near-dup
-    signal. The hot set is tiny BY CONSTRUCTION (only keys above the cap),
-    so the exclusion is a broadcast anti-join — map-only on the big side;
-    the df aggregation is one groupBy of the same (id, sh) rows the pair
-    join would shuffle anyway.
-
-    Semantics: Jaccard is then computed over the FILTERED shingle universe
-    (hot shingles leave both numerator and denominator) — results change
-    only for pairs containing above-cap shingles, and the capped variant
-    has its own oracle (d2b)."""
-    hot = (
-        sh.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_df)
-        .select(key)
-    )
-    return sh.join(F.broadcast(hot), key, "left_anti")
 
 
 def jaccard_near_dupes(
@@ -178,15 +146,22 @@ def jaccard_near_dupes(
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs ≥ threshold (inverted index).
 
-    ``max_shingle_df`` bounds the worst-case join skew: with a cap c the
-    per-shingle candidate volume is ≤ c² regardless of how pathological
-    the corpus boilerplate is (see ``drop_hot_shingles``). None = exact
-    over the full shingle universe (d2's oracle semantics)."""
-    sh = shingle_hashes(df, text_col, id_col, n)
-    if max_shingle_df is not None:
-        sh = drop_hot_shingles(sh, max_shingle_df)
-    return _pair_jaccard(sh).filter(F.col("jaccard") >= threshold).select(
-        "id_a", "id_b", "jaccard"
+    ``max_shingle_df`` bounds the worst-case candidate volume: with a cap c
+    a shingle contributes ≤ c² pair rows however pathological the corpus
+    boilerplate is, and Jaccard is computed over the filtered shingle
+    universe (capped shingles leave numerator AND denominator — d2b's
+    oracle). None = exact over the full shingle universe (d2's oracle)."""
+    pairs = _posting_pairs(shingle_hashes(df, text_col, id_col, n), max_shingle_df)
+    diag = pairs.filter(F.col("id_a") == F.col("id_b"))
+    sa = diag.select("id_a", F.col("n").alias("n_a"))
+    sb = diag.select(F.col("id_a").alias("id_b"), F.col("n").alias("n_b"))
+    return (
+        pairs.filter(F.col("id_a") < F.col("id_b"))
+        .join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("jaccard", F.col("n") / (F.col("n_a") + F.col("n_b") - F.col("n")))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -284,12 +259,12 @@ def minhash_near_dupes(
     Plan shape (the 100 TB story): signatures are
     ``array_min(transform(arr, g_i))`` over the per-doc shingle array —
     MAP-ONLY, no explode and no 64-aggregate groupBy shuffle (which an
-    exploded (id, sh) layout would force). The only shuffles are the
-    band-bucket equi-join on candidates and the two id equi-joins that
-    fetch shingle arrays for verification; verification itself is
-    ``array_intersect``/``array_union`` arithmetic on the joined rows.
-    Candidate pairs ≪ n² by LSH construction (miss probability at s=0.8,
-    r=2, b=32: ~5·10⁻⁸).
+    exploded (id, sh) layout would force). Candidates are read off one
+    posting list per band bucket (``_posting_pairs``: the band-key
+    groupBy and the pair aggregate are the only candidate shuffles, and
+    the signature fold runs once); ``verify_jaccard`` then fetches the
+    shingle arrays with two id equi-joins. Candidate pairs ≪ n² by LSH
+    construction (miss probability at s=0.8, r=2, b=32: ~5·10⁻⁸).
 
     The shingle-array table feeds three consumers (signatures + both
     verification sides) and tokenize+hash is the dominant per-row cost, so
@@ -312,26 +287,19 @@ def minhash_near_dupes(
     # fresh-process end-to-end at sf0.1 drops ~5.7 s → ~4 s because driver
     # analysis + codegen of the narrow plan is much cheaper. (The per-plan
     # overhead dominates this operator at bench scale; see SCALING.md.)
-    # banded feeds BOTH sides of the candidate join; without
-    # materialization the 64-hash signature fold runs twice (AQE
-    # broadcasts one side at small SF, so ReusedExchange can't kick in).
-    # Eager localCheckpoint = materialize the LSH index once — exactly
-    # what a production pipeline does with its band index table. Note:
-    # constructing the returned DataFrame therefore runs the signature job
-    # up front, and checkpoint blocks are not recomputed on executor loss
-    # (a production band index lives in reliable storage instead).
-    banded = band_keys_table(arr_tbl, num_hashes, rows_per_band).localCheckpoint()
-    left = banded.select(F.col("id").alias("id_a"), "band_idx", "band_key")
-    right = banded.select(F.col("id").alias("id_b"), "band_idx", "band_key")
-    candidates = (
-        left.join(right, ["band_idx", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # verify candidates with exact Jaccard on the per-doc shingle arrays
-    a = arr_tbl.select(F.col("id").alias("id_a"), F.col("arr").alias("arr_a"))
-    b = arr_tbl.select(F.col("id").alias("id_b"), F.col("arr").alias("arr_b"))
+    banded = band_keys_table(arr_tbl, num_hashes, rows_per_band)
+    candidates = _posting_pairs(banded).filter(F.col("id_a") < F.col("id_b"))
+    return verify_jaccard(candidates, arr_tbl, threshold)
+
+
+def verify_jaccard(candidates: DataFrame, arrs: DataFrame, threshold: float) -> DataFrame:
+    """Exact-Jaccard verification of candidate pairs: ``(id_a, id_b)``
+    rows against a per-document shingle-array table (``id``, ``arr``) →
+    ``(id_a, id_b, jaccard)`` with jaccard ≥ threshold. Two id equi-joins
+    fetch the arrays; the Jaccard is ``array_intersect``/``array_union``
+    arithmetic on the joined rows. Removes every LSH false positive."""
+    a = arrs.select(F.col("id").alias("id_a"), F.col("arr").alias("arr_a"))
+    b = arrs.select(F.col("id").alias("id_b"), F.col("arr").alias("arr_b"))
     return (
         candidates.join(a, "id_a")
         .join(b, "id_b")
@@ -520,7 +488,6 @@ def duplicate_spans(
     span_words: int = 20,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_span_df: int | None = None,
 ) -> DataFrame:
     """Exact duplicated-substring signal (the span-level complement of
     document-level near-dedup, after Lee et al. 2022 "Deduplicating
@@ -531,43 +498,28 @@ def duplicate_spans(
     Plan: explode per-doc DISTINCT span hashes (xxhash64, 8 B — span text
     never shuffles), one groupBy for global span document-frequency, join
     back, one groupBy per doc. Σ|spans| shuffle rows — the inverted-index
-    shape (like d2), linear in corpus size; hot boilerplate spans are the
-    skew risk → ``max_span_df`` excludes spans above the cap from the
-    span universe (they count in neither n_spans nor n_dup_spans — the
-    filtered-universe semantics of ``drop_hot_shingles``, applied as a
-    post-join predicate so zero-span documents keep their output row).
-    Docs shorter than ``span_words`` have zero spans and report 0/NULL.
+    shape (like d2), linear in corpus size. ``explode_outer`` keeps a row
+    for docs shorter than ``span_words``: they have zero spans and report
+    0/NULL.
     """
-    w = words(F.col(text_col))
-    spans = F.when(
-        F.size(w) >= span_words,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (span_words - 1)),
-            lambda i: F.xxhash64(F.array_join(F.slice(w, i, span_words), " ")),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
     sp = df.select(
-        F.col(id_col).alias("id"), F.explode_outer(F.array_distinct(spans)).alias("sh")
+        F.col(id_col).alias("id"),
+        F.explode_outer(_shingle_hash_array(text_col, span_words)).alias("sh"),
     )
     df_counts = (
         sp.filter(F.col("sh").isNotNull())
         .groupBy("sh")
         .agg(F.count(F.lit(1)).alias("span_df"))
     )
-    kept = (
-        F.col("sh").isNotNull()
-        if max_span_df is None
-        else F.col("sh").isNotNull() & (F.col("span_df") <= max_span_df)
-    )
-    n_kept = F.count(F.when(kept, F.lit(1)))
-    n_dup = F.count(F.when(kept & (F.col("span_df") >= 2), F.lit(1)))
+    n_spans = F.count("sh")
+    n_dup = F.count(F.when(F.col("span_df") >= 2, F.lit(1)))
     return (
         sp.join(df_counts, "sh", "left")
         .groupBy("id")
         .agg(
-            n_kept.alias("n_spans"),
+            n_spans.alias("n_spans"),
             n_dup.alias("n_dup_spans"),
-            F.round(F.try_divide(n_dup, n_kept), 6).alias("dup_span_ratio"),
+            F.round(F.try_divide(n_dup, n_spans), 6).alias("dup_span_ratio"),
         )
         .select(F.col("id").alias(id_col), "n_spans", "n_dup_spans", "dup_span_ratio")
     )
@@ -759,39 +711,6 @@ def bloom_probe_split(
     the plan-shape suite pins that; ``verified_new`` routes the
     Bloom-positive sliver through the exact anti-join. Most callers want
     ``bloom_incremental_dedupe`` (their union)."""
-    return _bloom_probe_split(batch, fingerprints, fp_col, expected_items, fpp)
-
-
-def bloom_incremental_dedupe(
-    batch: DataFrame, fingerprints: DataFrame, fp_col: str = "fp",
-    expected_items: int | None = None, fpp: float = 0.01,
-) -> DataFrame:
-    """Incremental-batch dedup with a Bloom pre-filter — the scale upgrade
-    of the plain anti-join (d8): EXACTLY the same rows come out (Bloom
-    negatives are guaranteed non-members; positives are verified by the
-    exact anti-join), but at 100 TB the historical fingerprint table no
-    longer shuffles per batch. The ~1 MB bitmap broadcasts to the batch
-    side, definite-new rows (the overwhelming majority in append-heavy
-    pipelines) pass with zero exchange, and only the ~fpp·batch + true-dup
-    sliver pays the anti-join.
-
-    ``expected_items`` defaults to one count() of the fingerprint table
-    (pass it explicitly to keep construction action-free); the build
-    itself is one aggregation action either way — amortized state, like
-    d8's materialized fingerprint table.
-    """
-    definite_new, verified_new = _bloom_probe_split(
-        batch, fingerprints, fp_col, expected_items, fpp
-    )
-    return definite_new.unionByName(verified_new)
-
-
-def _bloom_probe_split(
-    batch: DataFrame, fingerprints: DataFrame, fp_col: str,
-    expected_items: int | None, fpp: float,
-) -> tuple[DataFrame, DataFrame]:
-    import pandas as pd
-
     if expected_items is None:
         expected_items = max(64, fingerprints.count())
     m_bits, n_hashes, bloom_words = bloom_build(
@@ -825,3 +744,27 @@ def _bloom_probe_split(
         .join(fingerprints.select(fp_col).distinct(), fp_col, "left_anti")
     )
     return definite_new, verified_new
+
+
+def bloom_incremental_dedupe(
+    batch: DataFrame, fingerprints: DataFrame, fp_col: str = "fp",
+    expected_items: int | None = None, fpp: float = 0.01,
+) -> DataFrame:
+    """Incremental-batch dedup with a Bloom pre-filter — the scale upgrade
+    of the plain anti-join (d8): EXACTLY the same rows come out (Bloom
+    negatives are guaranteed non-members; positives are verified by the
+    exact anti-join), but at 100 TB the historical fingerprint table no
+    longer shuffles per batch. The ~1 MB bitmap broadcasts to the batch
+    side, definite-new rows (the overwhelming majority in append-heavy
+    pipelines) pass with zero exchange, and only the ~fpp·batch + true-dup
+    sliver pays the anti-join.
+
+    ``expected_items`` defaults to one count() of the fingerprint table
+    (pass it explicitly to keep construction action-free); the build
+    itself is one aggregation action either way — amortized state, like
+    d8's materialized fingerprint table.
+    """
+    definite_new, verified_new = bloom_probe_split(
+        batch, fingerprints, fp_col, expected_items, fpp
+    )
+    return definite_new.unionByName(verified_new)

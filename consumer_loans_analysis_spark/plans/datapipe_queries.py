@@ -103,8 +103,8 @@ def d1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("d2_ngram_jaccard_pairs", oracle=_JACCARD_SQL)
 def d2_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-3-gram Jaccard near-dup pairs ≥ 0.8 via the
-    inverted-shingle-index join (no O(n²) pair space)."""
+    """Exact word-3-gram Jaccard near-dup pairs ≥ 0.8 read off shingle
+    posting lists (no O(n²) pair space, no self-join of the index)."""
     docs = read_table(spark, sf_dir, "documents")
     return dedup.jaccard_near_dupes(docs, threshold=0.8)
 
@@ -134,10 +134,11 @@ _JACCARD_CAPPED_SQL = """
 @query("d2b_ngram_jaccard_capped", oracle=_JACCARD_CAPPED_SQL)
 def d2b_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """d2 with the hot-shingle document-frequency cap (df ≤ 3): Jaccard
-    over the capped shingle universe. The cap bounds worst-case inverted-
-    index join skew at c² candidates per shingle — the guard that keeps d2
-    viable when real corpora contain boilerplate (license headers, nav
-    chrome) with df in the millions. Cap 3 bites on this corpus (~1% of
+    over the capped shingle universe. The cap bounds the worst-case pair
+    volume at c² candidates per shingle — the guard that keeps d2 viable
+    when real corpora contain boilerplate (license headers, nav chrome)
+    with df in the millions; it is a size filter on the shingle posting
+    lists. Cap 3 bites on this corpus (~1% of
     shingles dropped, every pair's jaccard shifts — the oracle checks the
     capped values, not d2's)."""
     docs = read_table(spark, sf_dir, "documents")
@@ -146,8 +147,9 @@ def d2b_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("d3_minhash_lsh_pairs", oracle=_JACCARD_SQL)
 def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(64) + 32-band LSH candidates, exact-verify ≥ 0.8. Oracle is
-    the exact Jaccard answer (see module docstring for why that's sound)."""
+    """MinHash(64) + 32-band LSH candidates read off band posting lists,
+    exact-verify ≥ 0.8. Oracle is the exact Jaccard answer (see module
+    docstring for why that's sound)."""
     docs = read_table(spark, sf_dir, "documents")
     return dedup.minhash_near_dupes(docs, threshold=0.8)
 
@@ -2912,11 +2914,12 @@ def t12_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d10_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING NEAR-DUP DEDUP under the batch oracle: documents are
     split into three files and ingested as three micro-batches through
-    ``streaming/corpus.py`` — each batch LSH-probes the persistent
-    band index for matches against everything already ingested, then
-    joins the index. The cumulative verified pair set must equal the
-    batch d2/d3 answer (pair discovery commutes with any batch split:
-    a pair lands either within one batch or across the index probe).
+    ``streaming/corpus.py`` — each batch reads its own candidates off
+    its band posting lists, LSH-probes the persistent band index for
+    matches against everything already ingested, then joins the index.
+    The cumulative verified pair set must equal the batch d2/d3 answer
+    (pair discovery commutes with any batch split: a pair lands either
+    within one batch or across the index probe).
     Same exact-Jaccard oracle as d2/d3."""
     import shutil
     import tempfile

@@ -1,6 +1,6 @@
 """SparkSession factory with scale-oriented defaults.
 
-Defaults chosen for the local[32] test harness but expressed so the same
+Defaults chosen for a local[N] test harness but expressed so the same
 config scales to a multi-executor cluster: AQE on (runtime coalescing +
 skew-join handling), Arrow on (fast pandas/Pandas-UDF interchange), and a
 shuffle-partition count that AQE can coalesce down from.
@@ -68,23 +68,29 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    when no cluster master is configured — on a real cluster, leave it unset
-    and spark-submit supplies it.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
+    cores this process may run on) when no cluster master is configured —
+    on a real cluster, leave it unset and spark-submit supplies it. The
+    local driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` (env, default: half
+    the physical RAM, at most 16g).
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_MASTER" not in os.environ:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
     if master and master.startswith("local"):
         # local mode runs every executor thread inside the driver JVM — the
-        # 1g default heap starves 32-way shuffles long before the machine
-        # does. On a cluster, leave executor/driver memory to spark-submit.
-        builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-        ).config("spark.driver.maxResultSize", "8g")
+        # 1g default heap starves many-way shuffles long before the machine
+        # does, while a heap past the physical RAM (there may be no swap)
+        # gets the JVM killed. On a cluster, leave executor/driver memory to
+        # spark-submit.
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+        heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(16 << 10, ram_mb // 2)}m"
+        builder = builder.config("spark.driver.memory", heap).config(
+            "spark.driver.maxResultSize", "8g"
+        )
     for k, v in DEFAULT_CONFIGS.items():
         builder = builder.config(k, v)
     for k, v in (extra_configs or {}).items():

@@ -45,29 +45,6 @@ _ARRS_SCHEMA = "id bigint, arr array<bigint>, batch_id int"
 _PAIRS_SCHEMA = "id_a bigint, id_b bigint, jaccard double, batch_id int"
 
 
-# (id, band_idx, band_key) index rows come from the SAME function as the
-# batch operator (dedup.band_keys_table -- seeded coefficients, fold-style
-# signature), so streamed and batch indexes are interchangeable by
-# construction.
-_band_keys = dedup.band_keys_table
-
-
-def _verify(candidates: DataFrame, arrs_a: DataFrame, arrs_b: DataFrame, threshold: float) -> DataFrame:
-    a = arrs_a.select(F.col("id").alias("id_a"), F.col("arr").alias("arr_a"))
-    b = arrs_b.select(F.col("id").alias("id_b"), F.col("arr").alias("arr_b"))
-    return (
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("arr_a", "arr_b"))
-            / F.size(F.array_union("arr_a", "arr_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
 def ingest_batch(
     batch_docs: DataFrame, state_dir: str, threshold: float = 0.8,
     batch_id: int = 0,
@@ -83,18 +60,12 @@ def ingest_batch(
         .filter(F.size("arr") > 0)
         .cache()
     )
-    bands_new = _band_keys(arr_new).cache()
-
-    # within-batch candidates (id_a < id_b dedupes the symmetric join)
-    left = bands_new.select(F.col("id").alias("id_a"), "band_idx", "band_key")
-    right = bands_new.select(F.col("id").alias("id_b"), "band_idx", "band_key")
-    cand_new = (
-        left.join(right, ["band_idx", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    pairs = _verify(cand_new, arr_new, arr_new, threshold)
+    # the SAME index rows and pair generator as the batch operator
+    # (dedup.minhash_near_dupes), so streamed and batch indexes are
+    # interchangeable by construction
+    bands_new = dedup.band_keys_table(arr_new).cache()
+    cand_new = dedup._posting_pairs(bands_new).filter(F.col("id_a") < F.col("id_b"))
+    pairs = dedup.verify_jaccard(cand_new, arr_new, threshold)
 
     bands_path = os.path.join(state_dir, "bands")
     arrs_path = os.path.join(state_dir, "arrs")
@@ -131,7 +102,7 @@ def ingest_batch(
             .distinct()
         )
         arrs_all = arrs_old.unionByName(arr_new)
-        pairs = pairs.unionByName(_verify(cand_cross, arrs_all, arrs_all, threshold))
+        pairs = pairs.unionByName(dedup.verify_jaccard(cand_cross, arrs_all, threshold))
 
     def _write(df: DataFrame, path: str) -> None:
         (

@@ -750,28 +750,25 @@ def test_jaccard_df_cap_drops_boilerplate(spark):
     assert any(r["id_a"] < 100 for r in uncapped)
 
 
-def test_duplicate_spans_df_cap(spark):
-    """Span-df cap: spans above the cap leave the span universe entirely,
-    and zero-span docs keep their output row."""
+def test_duplicate_spans_zero_span_and_exact_dups(spark):
+    """Zero-span docs keep their output row, exact-duplicate docs share
+    every span, and a span shared by many docs counts as duplicated in
+    each of them."""
     boiler = " ".join(f"b{i}" for i in range(6))
-    rows = [(i, f"{boiler} u{i} v{i}") for i in range(5)]  # hot 6-word span
+    rows = [(i, f"{boiler} u{i} v{i}") for i in range(5)]  # 6-word span in 6 docs
     rows.append((10, f"{boiler} u0 v0"))  # exact dup of doc 0's text
     rows.append((11, "short"))  # zero spans
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r["doc_id"]: (r["n_spans"], r["n_dup_spans"])
-        for r in dedup.duplicate_spans(
-            df, span_words=6, max_span_df=4
-        ).collect()
+        for r in dedup.duplicate_spans(df, span_words=6).collect()
     }
     assert len(out) == 7  # every doc, including the zero-span one
     assert out[11] == (0, 0)
-    # the boilerplate span (df=6 > cap) is excluded everywhere; docs 0 and
-    # 10 still share their full 3-span tail (df=2 each)
-    assert out[0] == (2, 2) and out[10] == (2, 2)
-    # a doc whose only above-cap span was the boilerplate keeps its unique
-    # tail spans (df=1, kept, not dup)
-    assert out[1] == (2, 0)
+    # docs 0 and 10 share all three spans (the boilerplate and both tails)
+    assert out[0] == (3, 3) and out[10] == (3, 3)
+    # doc 1 shares only the boilerplate span; its two tail spans are unique
+    assert out[1] == (3, 1)
 
 
 def test_bpe_encode_matches_reference_greedy(spark):
@@ -867,9 +864,11 @@ def test_dsir_selection_is_target_biased(spark, sf_dir):
     # selection prefers high-importance docs: mean logw of the sample
     # beats the corpus mean
     sel_mean = sum(r["logw"] for r in rows) / len(rows)
-    corpus_mean = curation.dsir_select(docs, F.col("lang") == "en", k=10**9).agg(
-        F.avg("logw")
-    ).head()[0]
+    # k = the corpus size selects every document; a far larger k makes the
+    # top-k operator allocate a 2k-slot buffer (8 GB at k = 10**9)
+    corpus_mean = curation.dsir_select(
+        docs, F.col("lang") == "en", k=docs.count()
+    ).agg(F.avg("logw")).head()[0]
     assert sel_mean > corpus_mean, (sel_mean, corpus_mean)
 
 
@@ -1966,6 +1965,15 @@ def test_wordpiece_greedy_hand_fixture(spark):
         "t19_kneser_ney_score",
         "t20_wordpiece_greedy_encode",
         "t21_unigram_viterbi_encode",
+        "d2_ngram_jaccard_pairs",
+        "d2b_ngram_jaccard_capped",
+        "d3_minhash_lsh_pairs",
+        "d6_dup_clusters",
+        "d7_duplicate_spans",
+        "d10_stream_dedup_drained",
+        "d13_source_overlap",
+        "d14_minhash_estimate_audit",
+        "d15_dedup_threshold_sweep",
     ],
 )
 def test_text_operator_matches_duckdb_oracle(spark, sf_dir, name):
@@ -1975,7 +1983,8 @@ def test_text_operator_matches_duckdb_oracle(spark, sf_dir, name):
     strings, pieces digests and exact BIGINT costs put the segmentation
     itself under the compare; t15 checks every learned merge rank against
     a per-rank full recount; the KN cross-entropy checks the driver-built
-    model."""
+    model; the dedup queries check the shingle posting lists, the band
+    posting lists and the streaming index probe against exact Jaccard."""
     import duckdb
 
     from consumer_loans_analysis_spark.plans import registry

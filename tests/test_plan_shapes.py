@@ -124,11 +124,11 @@ def test_similarity_build_action_free(spark, sf_dir):
 
 
 def test_dedup_build_action_free(spark, sf_dir):
-    """d2 construction must run ZERO Spark jobs: the small-scan widening
-    probe is driver-side file metadata now, not df.rdd.getNumPartitions()
-    (which forces physical planning and a JVM->Python RDD bridge). d3 is
-    excluded: its eager localCheckpoint of the band index is a DOCUMENTED
-    construction-time materialization (dedup.py:319)."""
+    """d2 and d3 construction must run ZERO Spark jobs: the small-scan
+    widening probe is driver-side file metadata, not
+    df.rdd.getNumPartitions() (which forces physical planning and a
+    JVM->Python RDD bridge), and the MinHash band index is consumed once
+    by the posting lists, so nothing is checkpointed at construction."""
     from consumer_loans_analysis_spark.operators import dedup
 
     docs = read_table(spark, sf_dir, "documents")
@@ -138,13 +138,31 @@ def test_dedup_build_action_free(spark, sf_dir):
     try:
         df = dedup.jaccard_near_dupes(docs, threshold=0.8)
         sh = dedup.shingle_hashes(docs)
+        mh = dedup.minhash_near_dupes(docs, threshold=0.8)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setJobGroup(None, None)
     assert jobs == [], f"plan construction ran jobs: {jobs}"
-    assert df.columns[:2] == ["id_a", "id_b"] or "id_a" in df.columns
+    assert df.columns == mh.columns == ["id_a", "id_b", "jaccard"]
     assert {"id", "sh"} <= set(sh.columns)
     df.limit(1).collect()
+    mh.limit(1).collect()
+
+
+@pytest.mark.parametrize("name", ["d2_ngram_jaccard_pairs", "d2b_ngram_jaccard_capped"])
+def test_shingle_jaccard_scans_corpus_once(spark, sf_dir, name):
+    """d2/d2b: the shingle table is read once — the pair counts and the
+    per-document shingle counts both come off the same posting lists, so
+    the final adaptive plan (after execution, stage reuse applied) holds
+    exactly one parquet scan. A second scan means a second consumer of
+    the shingle table, such as a hot-shingle anti-join, came back."""
+    from consumer_loans_analysis_spark.plans import registry
+
+    registry.load_all()
+    df = registry.QUERIES[name](spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert plan.count("Scan parquet") == 1, plan
 
 
 def test_bloom_fast_path_is_exchange_and_join_free(spark, sf_dir, monkeypatch):
