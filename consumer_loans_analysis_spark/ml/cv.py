@@ -8,15 +8,17 @@ evaluates per fold, computing all metrics from one confusion aggregation
 per fold.
 
 Scale notes: the input is cached once; each fold's train is a filter (no
-shuffle); fold models train sequentially here but are independent —
-``parallelism`` maps to concurrent Spark jobs on a cluster (thread pool),
-like CrossValidator(parallelism=n).
+shuffle). Folds are independent, so they train concurrently from a thread
+pool (``parallelism`` folds at a time, like CrossValidator(parallelism=n)):
+a fold's fit is a chain of small Spark jobs with driver round-trips in
+between, and the other folds' jobs fill the cores meanwhile.
 """
 
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.ml import Estimator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -98,13 +100,15 @@ def cross_validate(
     df: DataFrame,
     k: int = 6,
     label_col: str = "label",
-    parallelism: int = 1,
+    parallelism: int | None = None,
     seed: int = 42,
     soft_auc_col: str | None = None,
 ) -> list[dict[str, float]]:
     """Per-fold multi-metric CV. ``estimator_factory() -> Estimator`` builds
     a fresh estimator per fold (MLlib estimators are reusable, but a factory
-    keeps the contract obvious). Returns one metric dict per fold.
+    keeps the contract obvious). Returns one metric dict per fold, in fold
+    order. ``parallelism`` folds run at a time, by default
+    ``min(k, defaultParallelism)``; 1 runs them one after another.
     ``soft_auc_col`` (e.g. "probability") adds the probability-AUC the
     reference's screening tables use, when the fold predictions carry that
     column."""
@@ -135,9 +139,18 @@ def cross_validate(
         m["fold"] = i
         return m
 
+    if parallelism is None:
+        parallelism = min(k, df.sparkSession.sparkContext.defaultParallelism)
     if parallelism > 1:
         with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            results = list(pool.map(run_fold, range(k)))
+            # wrapped here, in the caller's thread, once per fold: each fold
+            # gets its own copy of the caller's local properties (job group,
+            # scheduler pool), so its jobs stay in the caller's job group
+            futures = [
+                pool.submit(inheritable_thread_target(df.sparkSession)(run_fold), i)
+                for i in range(k)
+            ]
+            results = [f.result() for f in futures]
     else:
         results = [run_fold(i) for i in range(k)]
     folded.unpersist()

@@ -192,13 +192,12 @@ class AccountMerger(Transformer, DefaultParamsReadable, DefaultParamsWritable):
             .when(~d & c, "without debit card")
             .otherwise("invalid")  # cannot occur: card ⇒ account
         )
-        out = df.withColumn("_HCA", merged).drop("DEBIT_CARD", "CURRENT_ACCOUNT")
-        for cat in ["no", "with debit card", "without debit card"]:
-            out = out.withColumn(
-                f"HAS_CURRENT_ACCOUNT_{cat}",
-                (F.col("_HCA") == cat).cast("double"),
-            )
-        return out.drop("_HCA")
+        return df.withColumns(
+            {
+                f"HAS_CURRENT_ACCOUNT_{cat}": (merged == cat).cast("double")
+                for cat in ["no", "with debit card", "without debit card"]
+            }
+        ).drop("DEBIT_CARD", "CURRENT_ACCOUNT")
 
 
 # --- fit-state stages ---------------------------------------------------------
@@ -281,7 +280,7 @@ class SentinelModeImputer(Estimator, _JsonParamMixin, DefaultParamsReadable, Def
     """E1: replace the string sentinel with the train-mode (reference
     SimpleImputer(strategy='most_frequent', missing_values='Missing'),
     eda_processing.ipynb:2087-2113). Ties break to the smallest value, like
-    sklearn. Fit = one groupBy per column over the distinct values."""
+    sklearn; nulls never win. Fit = one aggregation for all columns."""
 
     cols = Param(Params._dummy(), "cols", "JSON [col]", TypeConverters.toString)
     sentinel = Param(Params._dummy(), "sentinel", "missing marker", TypeConverters.toString)
@@ -294,17 +293,18 @@ class SentinelModeImputer(Estimator, _JsonParamMixin, DefaultParamsReadable, Def
 
     def _fit(self, df: DataFrame) -> SentinelModeImputerModel:
         s = self.getOrDefault(self.sentinel)
+        cols = self._get_json(self.cols)
+        # mode skips nulls, and the when() turns the sentinel into one;
+        # deterministic=True breaks ties to the smallest value
         modes = {}
-        for c in self._get_json(self.cols):
-            # max_by on (count, reversed value) == most frequent, ties → smallest
-            row = (
-                df.filter(F.col(c) != s)
-                .groupBy(c)
-                .agg(F.count(F.lit(1)).alias("n"))
-                .agg(F.min_by(c, F.struct(-F.col("n"), F.col(c))).alias("mode"))
-                .head()
-            )
-            modes[c] = row["mode"]
+        if cols:
+            row = df.agg(
+                *[
+                    F.mode(F.when(F.col(c) != s, F.col(c)), deterministic=True).alias(c)
+                    for c in cols
+                ]
+            ).head()
+            modes = {c: row[c] for c in cols}
         model = SentinelModeImputerModel(modes=modes, sentinel=s)
         model._resetUid(self.uid)
         return self._copyValues(model)
@@ -377,7 +377,8 @@ class NamedOneHotEncoder(Estimator, _JsonParamMixin, DefaultParamsReadable, Defa
     golden schema needs named columns, not MLlib vectors). Categories are the
     sorted train-distinct values (sklearn OneHotEncoder order); unknown
     values at transform → all-zero block (handle_unknown='ignore',
-    eda_processing.ipynb:2115-2146,2423-2434). Fit = one distinct per column
+    eda_processing.ipynb:2115-2146,2423-2434). Nulls and ``excludeValues``
+    are never encoded. Fit = one ``collect_set`` aggregation for all columns
     (broadcast-size state)."""
 
     cols = Param(Params._dummy(), "cols", "JSON [col]", TypeConverters.toString)
@@ -393,13 +394,9 @@ class NamedOneHotEncoder(Estimator, _JsonParamMixin, DefaultParamsReadable, Defa
         cols = self._get_json(self.cols)
         excluded = set(self._get_json(self.excludeValues))
         vocab = {}
-        for c in cols:
-            vals = [
-                r[c]
-                for r in df.select(c).distinct().collect()
-                if r[c] is not None and r[c] not in excluded
-            ]
-            vocab[c] = sorted(vals)
+        if cols:
+            row = df.agg(*[F.collect_set(c).alias(c) for c in cols]).head()
+            vocab = {c: sorted(v for v in row[c] if v not in excluded) for c in cols}
         model = NamedOneHotEncoderModel(vocab=vocab)
         model._resetUid(self.uid)
         return self._copyValues(model)

@@ -983,7 +983,7 @@ def e1q_mode_impute(spark: SparkSession, sf_dir: str) -> DataFrame:
     SimpleImputer(strategy='most_frequent', missing_values='Missing'),
     eda_processing.ipynb:2087-2113) under the external driver gate: plant
     the sentinel deterministically (every 7th orderkey), fit the stage
-    (one groupBy per column over distinct values, ties -> smallest like
+    (one mode aggregation for all columns, ties -> smallest like
     sklearn), transform map-only. Oracle restates mode + CASE in SQL."""
     from consumer_loans_analysis_spark.pipeline.stages import SentinelModeImputer
 
@@ -1041,7 +1041,7 @@ def e7q_named_onehot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E7/J4 ``NamedOneHotEncoder`` (pipeline/stages.py; sklearn
     OneHotEncoder sorted-category order with handle_unknown='ignore',
     eda_processing.ipynb:2115-2146) under the external driver gate: fit =
-    one distinct per column (broadcast-size vocab), transform = map-only
+    one collect_set aggregation (broadcast-size vocab), transform = map-only
     named dense ``COL_value`` doubles in the SAME select (the J1
     concat-avoidance design). The oracle pins the fitted vocab — the five
     sorted o_orderpriority categories — explicitly, so a fit-state drift

@@ -41,6 +41,21 @@ DEFAULT_CONFIGS: dict[str, str] = {
     "spark.sql.files.openCostInBytes": "65536",
     # Quiet progress bars in test output.
     "spark.ui.showConsoleProgress": "false",
+    # orderBy(...).limit(k) plans as TakeOrderedAndProject, whose top-k
+    # buffer holds 2k slots per task, allocated up front — k = 10**9 asks
+    # for 8 GB. From this k on, plan a global sort (which spills) and a
+    # limit instead. Every top-k in the engine (k <= 16384) stays below it.
+    "spark.sql.execution.topKSortFallbackThreshold": "100000",
+    # No Python call-site capture per PySpark API call. With it on, every
+    # DataFrame/Column call walks the Python stack and makes extra py4j
+    # round-trips to record its origin (Spark 4.1: F.col 13 round-trips
+    # instead of 3, F.when(...).otherwise(...) 38 instead of 8), most of
+    # the driver time of a pipeline built from many small calls. The cost:
+    # error messages lose the "DataFrame query context" naming the Python
+    # line; errors still raise, with the same Spark error class. A static
+    # config: set it back to "true" through ``extra_configs`` (before the
+    # session starts) to debug a failing expression.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 # r12 (guide §2.4: scale-adaptive partitioning, parameterised — not a local

@@ -179,12 +179,26 @@ def run_to_memory(
     _await_drained(q, timeout_sec)
 
 
+def _between_batches(status: dict) -> bool:
+    """True while no micro-batch is being planned or run: no trigger is
+    active, or the active one is still writing its offsets to the log.
+
+    A stop interrupts the query's thread and cancels its jobs: during a
+    batch's planning a broadcast being stored fails (``ERROR
+    TorrentBroadcast``), during its jobs the sink and state-store commits
+    abort with ERRORs. A drained query with a processing-time timeout runs
+    its empty batches back to back, so ``isTriggerActive`` never reads
+    false; the offset-log write that opens each trigger is the gap."""
+    return not status["isTriggerActive"] or status["message"] == "Writing offsets to log"
+
+
 def _await_drained(q, timeout_sec: int) -> None:
     """Wait until an availableNow query has consumed its source, then stop it.
 
     Self-terminating queries exit via the ``isActive`` check; the stateful
     ProcessingTimeTimeout case (see ``run_to_memory``) is detected as all
-    input consumed + two consecutive completed zero-row triggers."""
+    input consumed + two consecutive completed zero-row triggers, and is
+    stopped between batches (see ``_between_batches``), or at the deadline."""
     import time as _time
 
     deadline = _time.monotonic() + timeout_sec
@@ -209,6 +223,8 @@ def _await_drained(q, timeout_sec: int) -> None:
             if not q.status["isDataAvailable"]:
                 break
         _time.sleep(0.2)
+    while q.isActive and not _between_batches(q.status) and _time.monotonic() < deadline:
+        _time.sleep(0.005)
     q.stop()
     q.awaitTermination(30)
 

@@ -3,9 +3,15 @@
 The deterministic processing stages must reproduce the reference's
 ``processed_valid.csv`` exactly (≤1e-9); stochastic stages (model imputers,
 Nelder-Mead weights) get statistical acceptance bands per SURVEY §5.2.
+Golden-parity tests read the reference's files; tests that only need loans
+input fall back to a seeded synthetic split when those files are absent.
 """
 
 from __future__ import annotations
+
+import importlib.util
+import os
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -29,18 +35,46 @@ from consumer_loans_analysis_spark.sources.readers import read_loans_csv
 GOLD_PROCESSED = "/root/reference/data/processed_valid.csv"
 ORIG_TRAIN = "/root/reference/data/orig_train.csv"
 ORIG_VALID = "/root/reference/data/orig_valid.csv"
+LOANSGEN = Path(__file__).resolve().parents[1] / "perfbench" / "loansgen.py"
+LOANSGEN_SEED = 1
 
 
 @pytest.fixture(scope="module")
-def loans_train(spark):
+def loans_paths(tmp_path_factory):
+    """Raw train/valid CSVs for the tests that only need loans INPUT: the
+    reference's files when present, else a seeded synthetic split in the
+    reference's schema, domains and split sizes (``perfbench/loansgen.py``)
+    written as CSV, so the same reader parses it."""
+    if os.path.exists(ORIG_TRAIN):
+        return {"train": ORIG_TRAIN, "valid": ORIG_VALID}
+    spec = importlib.util.spec_from_file_location("loansgen", LOANSGEN)
+    loansgen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(loansgen)
+    sizes = {split: loansgen.SPLIT_ROWS[split] for split in ("train", "valid")}
+    out = tmp_path_factory.mktemp("loans")
+    paths = {}
+    for split, pdf in loansgen.generate(LOANSGEN_SEED, sizes).items():
+        paths[split] = str(out / f"{split}.csv")
+        pdf.to_csv(paths[split], index=False)
+    return paths
+
+
+@pytest.fixture(scope="module")
+def loans_train(spark, loans_paths):
+    return read_loans_csv(spark, loans_paths["train"]).cache()
+
+
+@pytest.fixture(scope="module")
+def reference_train(spark):
+    """The reference's train split, for the golden-parity tests only."""
     return read_loans_csv(spark, ORIG_TRAIN).cache()
 
 
-def test_processing_parity_deterministic(spark, loans_train):
+def test_processing_parity_deterministic(spark, reference_train):
     """Golden-output test: every deterministic column of processed_valid.csv
     reproduced to 1e-9 (order-insensitive multiset compare)."""
     valid = read_loans_csv(spark, ORIG_VALID)
-    pipe = build_processing_pipeline(with_model_imputers=False).fit(loans_train)
+    pipe = build_processing_pipeline(with_model_imputers=False).fit(reference_train)
     ours = pipe.transform(valid).toPandas()
     gold = pd.read_csv(GOLD_PROCESSED, index_col=0)
     det_cols = [
@@ -90,6 +124,54 @@ def test_one_hot_unknown_all_zero(spark):
     assert row["c_a"] == 0.0 and row["c_b"] == 0.0
 
 
+def test_mode_imputer_ties_sentinel_and_nulls(spark):
+    """The fused mode fit keeps sklearn's most_frequent rules per column:
+    ties go to the smallest value, the sentinel and nulls never win even
+    when they are the most frequent, and an all-sentinel column has no
+    mode (None)."""
+    rows = [
+        ("b", "z", "Missing"),
+        ("a", "Missing", "Missing"),
+        ("b", "Missing", None),
+        ("a", "Missing", "Missing"),
+        ("Missing", "Missing", None),
+        ("Missing", None, "Missing"),
+        ("Missing", None, "Missing"),
+        (None, None, None),
+        (None, None, "Missing"),
+        (None, None, None),
+    ]
+    df = spark.createDataFrame(rows, "tie string, rare string, gone string")
+    model = SentinelModeImputer(cols=["tie", "rare", "gone"]).fit(df)
+    assert model._get_json(model.modes) == {"tie": "a", "rare": "z", "gone": None}
+
+
+def test_one_hot_vocab_sorted_without_nulls_and_excluded(spark):
+    df = spark.createDataFrame(
+        [("b", "y"), ("Missing", None), (None, "x"), ("a", "Missing"), ("c", "x"), ("a", None)],
+        "c string, d string",
+    )
+    model = NamedOneHotEncoder(cols=["c", "d"], excludeValues=["Missing"]).fit(df)
+    assert model._get_json(model.vocab) == {"c": ["a", "b", "c"], "d": ["x", "y"]}
+
+
+def test_loans_fit_job_count(spark, loans_paths):
+    """EP1 (without the model imputers) + EP2 fit runs at most 10 Spark
+    jobs: one aggregation per fit stage, not one per column."""
+    from consumer_loans_analysis_spark.pipeline.loans import fit_full_pipeline
+
+    train = read_loans_csv(spark, loans_paths["train"])
+    sc = spark.sparkContext
+    group = "loans_fit_job_count"
+    sc.setJobGroup(group, "EP1 + EP2 fit")
+    try:
+        fit_full_pipeline(train, with_model_imputers=False)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup(None, None)
+    assert 0 < len(jobs) <= 10, sorted(jobs)
+
+
 def test_scaler_population_std(spark):
     df = spark.createDataFrame([(1.0,), (2.0,), (3.0,), (4.0,)], "x double")
     model = ScalarStandardScaler(cols=["x"]).fit(df)
@@ -115,13 +197,13 @@ def test_nelder_mead_rosenbrock_ish():
     assert np.allclose(x, [3, -1], atol=1e-3)
 
 
-def test_corr_max_combiner_matches_reference_weights(spark, loans_train):
+def test_corr_max_combiner_matches_reference_weights(spark, reference_train):
     """The combiner's closed-form fit must land on the reference's published
     optimum (feature_engineering.ipynb:332-374): weights ≈
     [0.240, 0.784, 0.016, 5.260, 0.526, -2.042, -0.021, 0.462, -0.335, 1.272]
     up to the scale-invariance of correlation."""
-    proc = build_processing_pipeline(with_model_imputers=False).fit(loans_train)
-    processed = proc.transform(loans_train)
+    proc = build_processing_pipeline(with_model_imputers=False).fit(reference_train)
+    processed = proc.transform(reference_train)
     feat = build_feature_pipeline().fit(processed)
     spec = feat.stages[-1]._get_json(feat.stages[-1].spec)
     ref = np.array([0.24007178, 0.78449442, 0.01632284, 5.26005219, 0.52608345,
@@ -137,9 +219,9 @@ def test_corr_max_combiner_matches_reference_weights(spark, loans_train):
     assert stats[1] == pytest.approx(1.0, rel=1e-9)
 
 
-def test_featured_schema_matches_golden(spark, loans_train):
-    proc = build_processing_pipeline(with_model_imputers=False).fit(loans_train)
-    processed = proc.transform(loans_train)
+def test_featured_schema_matches_golden(spark, reference_train):
+    proc = build_processing_pipeline(with_model_imputers=False).fit(reference_train)
+    processed = proc.transform(reference_train)
     feat = build_feature_pipeline().fit(processed)
     out_cols = set(feat.transform(processed).columns)
     gold = pd.read_csv("/root/reference/data/featured_valid.csv", nrows=1)
@@ -183,7 +265,7 @@ def test_pipeline_persistence_roundtrip(spark, loans_train, tmp_path):
                                   b.sort_values(list(b.columns)).reset_index(drop=True))
 
 
-def test_serving_wrapper_label_absent(spark, loans_train):
+def test_serving_wrapper_label_absent(spark, loans_train, loans_paths):
     """C6 FinalModel: predict path injects the dummy label, runs the full
     feature pipeline, and scores — on input WITHOUT the label column."""
     from pyspark.ml import Pipeline as MLPipeline
@@ -205,7 +287,7 @@ def test_serving_wrapper_label_absent(spark, loans_train):
     ).fit(featured)
     serving = ServingWrapper(PipelineModel(stages=[proc, feat]), head)
 
-    valid = read_loans_csv(spark, ORIG_VALID).drop("FINALIZED_LOAN")
+    valid = read_loans_csv(spark, loans_paths["valid"]).drop("FINALIZED_LOAN")
     assert "FINALIZED_LOAN" not in valid.columns
     # serving must be ONE lazy transform chain: plan construction runs
     # zero Spark jobs (no per-stage actions hidden inside transform())
@@ -224,18 +306,18 @@ def test_serving_wrapper_label_absent(spark, loans_train):
     assert preds <= {0.0, 1.0}
 
 
-def test_minimum_slice_reference_truth(spark, loans_train):
+def test_minimum_slice_reference_truth(spark, reference_train):
     """SURVEY §7.1: the EDA reports reproduce exact numbers frozen in the
     reference notebook outputs (eda_processing.ipynb:861-960, 985-1060)."""
     from consumer_loans_analysis_spark.functions import relational as R
 
-    vc = {r["value"]: r["count"] for r in R.value_counts(loans_train, "EDUCATION").collect()}
+    vc = {r["value"]: r["count"] for r in R.value_counts(reference_train, "EDUCATION").collect()}
     assert vc["University"] == 5457  # eda_processing.ipynb:868 output
 
     mp = {
         r["column"]: r["n_missing"] / r["n_rows"]
         for r in R.missing_profile(
-            loans_train,
+            reference_train,
             ["ECONOMIC_SECTOR", "EMPLOYEE_NO", "EDUCATION", "AREA"],
             sentinel="Missing",
         ).collect()
@@ -247,7 +329,7 @@ def test_minimum_slice_reference_truth(spark, loans_train):
     assert mp["AREA"] == pytest.approx(0.002, abs=0.002)
 
     # row-normalized crosstab shares sum to 1 within each ECONOMIC_SECTOR
-    ct = R.crosstab_norm(loans_train, "ECONOMIC_SECTOR", "FINALIZED_LOAN")
+    ct = R.crosstab_norm(reference_train, "ECONOMIC_SECTOR", "FINALIZED_LOAN")
     sums = (
         ct.groupBy("a").agg(F.sum("share").alias("s")).collect()
     )
@@ -255,15 +337,15 @@ def test_minimum_slice_reference_truth(spark, loans_train):
         assert r["s"] == pytest.approx(1.0, abs=1e-9)
 
 
-def test_featured_valid_deterministic_value_parity(spark, loans_train):
+def test_featured_valid_deterministic_value_parity(spark, reference_train):
     """Tier-1 value parity on featured_valid.csv's DETERMINISTIC columns:
     the transform-only path must reproduce ratios, account one-hots, and
     scaled numerics exactly (≤1e-9). TOTAL_SCORE is excluded — the golden
     file embeds the reference's refit-on-valid leak (SURVEY §7.4#5) and is
     checked statistically via the combiner tests instead."""
     valid = read_loans_csv(spark, ORIG_VALID)
-    proc = build_processing_pipeline(with_model_imputers=False).fit(loans_train)
-    feat = build_feature_pipeline().fit(proc.transform(loans_train))
+    proc = build_processing_pipeline(with_model_imputers=False).fit(reference_train)
+    feat = build_feature_pipeline().fit(proc.transform(reference_train))
     ours = feat.transform(proc.transform(valid)).toPandas()
     gold = pd.read_csv("/root/reference/data/featured_valid.csv", index_col=0)
 

@@ -127,6 +127,29 @@ def test_cv_parallelism_matches_serial(toy):
     threaded = cross_validate(lambda: LogisticRegression(), toy, k=3, parallelism=3)
     for s, t in zip(serial, threaded):
         assert s["f1"] == pytest.approx(t["f1"])
+    # the default runs folds concurrently and returns them in fold order
+    default = cross_validate(lambda: LogisticRegression(), toy, k=3)
+    assert [m["fold"] for m in default] == [m["fold"] for m in serial] == [0, 1, 2]
+    for s, d in zip(serial, default):
+        assert d == pytest.approx(s)
+
+
+def test_cv_fold_jobs_stay_in_callers_job_group(spark, toy):
+    """Concurrent folds run their Spark jobs in the caller's job group, so
+    a job-group probe counts every fold's jobs, as in a serial run."""
+    sc = spark.sparkContext
+    counts = {}
+    for parallelism in (1, None):
+        group = f"cv_job_group_probe_{parallelism}"
+        sc.setJobGroup(group, "cross_validate")
+        try:
+            cross_validate(lambda: LogisticRegression(maxIter=5), toy, k=3,
+                           parallelism=parallelism)
+            counts[parallelism] = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup(None, None)
+    assert counts[1] > 3  # the cache count plus each fold's fit and metrics
+    assert counts[None] == counts[1], counts
 
 
 def test_sample_params_respects_space():

@@ -872,6 +872,24 @@ def test_dsir_selection_is_target_biased(spark, sf_dir):
     assert sel_mean > corpus_mean, (sel_mean, corpus_mean)
 
 
+def test_dsir_select_huge_k_returns_every_document(spark, sf_dir):
+    """A k far past the corpus size selects every document, in score
+    order, without a top-k buffer sized by k (2k slots, 8 GB at k = 10**9):
+    the plan falls back to a global sort."""
+    from consumer_loans_analysis_spark.operators import curation
+    from consumer_loans_analysis_spark.sources.readers import read_table
+
+    docs = read_table(spark, sf_dir, "documents")
+    sel = curation.dsir_select(docs, F.col("lang") == "en", k=10**9)
+    assert "TakeOrderedAndProject" not in sel._jdf.queryExecution().executedPlan().toString()
+    rows = sel.collect()
+    assert sorted(r["doc_id"] for r in rows) == sorted(
+        r["doc_id"] for r in docs.select("doc_id").collect()
+    )
+    scores = [r["score"] for r in rows]
+    assert scores == sorted(scores, reverse=True)
+
+
 def test_ccnet_buckets_partition_each_language(spark, sf_dir):
     """CCNet buckets (curation.py): per language, head/middle/tail are a
     partition in tercile-balanced proportions (each bucket within

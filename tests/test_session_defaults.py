@@ -65,3 +65,21 @@ def test_local_sizing_env_overrides_defaults(monkeypatch):
     b = _build(monkeypatch, SPARK_GRAFT_CPUS="3", SPARK_GRAFT_DRIVER_MEM="2g")
     assert b.master_url == "local[3]"
     assert b.conf["spark.driver.memory"] == "2g"
+
+
+def test_dataframe_debugging_off_by_default(monkeypatch):
+    """Per-call origin capture is off: it costs about 10 py4j round-trips
+    per PySpark API call. ``extra_configs`` can still turn it back on."""
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert _build(monkeypatch).conf[key] == "false"
+    builder = _RecordingBuilder()
+    monkeypatch.setattr(session.SparkSession, "builder", builder)
+    session.get_spark(extra_configs={key: "true"})
+    assert builder.conf[key] == "true"
+
+
+def test_top_k_falls_back_to_a_sort_for_large_k(monkeypatch):
+    """``orderBy(...).limit(k)`` keeps its top-k plan only up to a bounded
+    k; beyond it a spilling sort runs instead of a 2k-slot buffer."""
+    conf = _build(monkeypatch).conf
+    assert int(conf["spark.sql.execution.topKSortFallbackThreshold"]) <= 100_000

@@ -488,3 +488,76 @@ def test_stream_c4_gate_equals_batch(spark, sf_dir):
         .collect()
     }
     assert got == batch and len(got) >= 2
+
+
+class _SpinningQuery:
+    """Stands in for a drained stateful query whose empty batches run back
+    to back. Its status cycles through ``schedule``, one step per read of
+    ``isActive``, ``lastProgress`` or ``status``: a (isTriggerActive,
+    message) pair per step. Batch 0 carries rows, later batches are empty."""
+
+    def __init__(self, schedule, phase: int):
+        self.schedule = schedule
+        self.clock = phase
+        self.batch = -1
+        self.stops: list[str] = []  # the status message at each stop()
+
+    def _now(self):
+        return self.schedule[self.clock % len(self.schedule)]
+
+    @property
+    def isActive(self) -> bool:
+        self.clock += 1
+        return not self.stops
+
+    @property
+    def lastProgress(self) -> dict:
+        self.clock += 1
+        self.batch += 1
+        return {"batchId": self.batch, "numInputRows": 10 if self.batch == 0 else 0}
+
+    @property
+    def status(self) -> dict:
+        self.clock += 1
+        active, message = self._now()
+        return {"isDataAvailable": False, "isTriggerActive": active, "message": message}
+
+    def stop(self) -> None:
+        self.stops.append(self._now()[1])
+
+    def awaitTermination(self, timeout=None) -> None:
+        pass
+
+
+_WORK = (True, "No new data but cleaning up state")
+_OFFSETS = (True, "Writing offsets to log")
+_IDLE = (False, "Waiting for next trigger")
+
+
+@pytest.mark.parametrize("gap", [_OFFSETS, _IDLE], ids=["back_to_back", "idle_gap"])
+@pytest.mark.parametrize("phase", range(5))
+def test_drained_stream_stops_between_batches(monkeypatch, gap, phase):
+    """``_await_drained`` stops a drained query only while no batch is
+    planned or run: stopping one mid-batch fails its broadcasts or aborts
+    its commits. Back-to-back empty batches never show an inactive trigger;
+    their offset-log write is the gap."""
+    import time
+
+    from consumer_loans_analysis_spark.streaming import events
+
+    monkeypatch.setattr(time, "sleep", lambda s: None)
+    q = _SpinningQuery([gap] + [_WORK] * 4, phase)
+    events._await_drained(q, timeout_sec=60)
+    assert q.stops == [gap[1]]
+
+
+def test_drained_stream_stop_keeps_the_deadline(monkeypatch):
+    """A batch that never ends does not hold the stop past the deadline."""
+    import time
+
+    from consumer_loans_analysis_spark.streaming import events
+
+    monkeypatch.setattr(time, "sleep", lambda s: None)
+    q = _SpinningQuery([_WORK], phase=0)
+    events._await_drained(q, timeout_sec=0)
+    assert q.stops == [_WORK[1]]
