@@ -9,15 +9,30 @@ proxy checks liveness on use and transparently recreates the session
 in-flight plus any module-scoped DataFrames of the CURRENT module — not
 every test that follows. Demonstrated in tests/test_session_recovery.py
 (clean context stop AND a kill -9 of the JVM).
+
+The ``loans_paths`` fixture gives the tests that only need loans INPUT
+one train/valid split per session: the reference's CSVs when present,
+else a seeded ``perfbench/loansgen.py`` split. The tests that compare
+against the reference's own files skip on the ``REFERENCE_DATA`` paths
+below.
 """
 
 from __future__ import annotations
 
 import contextlib
+import importlib.util
+import os
+from pathlib import Path
 
 import pytest
 
 from consumer_loans_analysis_spark.session import get_spark
+
+REFERENCE_DATA = "/root/reference/data"
+ORIG_TRAIN = f"{REFERENCE_DATA}/orig_train.csv"
+ORIG_VALID = f"{REFERENCE_DATA}/orig_valid.csv"
+LOANSGEN = Path(__file__).resolve().parents[1] / "perfbench" / "loansgen.py"
+LOANSGEN_SEED = 1
 
 
 def _reset_pyspark_globals(dead) -> None:
@@ -89,3 +104,32 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session")
+def loans_paths(tmp_path_factory):
+    """Raw train/valid CSVs for the tests that only need loans INPUT: the
+    reference's files when present, else a seeded synthetic split in the
+    reference's schema, domains and split sizes (``perfbench/loansgen.py``)
+    written as CSV, so the same reader parses it."""
+    if os.path.exists(ORIG_TRAIN):
+        return {"train": ORIG_TRAIN, "valid": ORIG_VALID}
+    spec = importlib.util.spec_from_file_location("loansgen", LOANSGEN)
+    loansgen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(loansgen)
+    sizes = {split: loansgen.SPLIT_ROWS[split] for split in ("train", "valid")}
+    out = tmp_path_factory.mktemp("loans")
+    paths = {}
+    for split, pdf in loansgen.generate(LOANSGEN_SEED, sizes).items():
+        paths[split] = str(out / f"{split}.csv")
+        pdf.to_csv(paths[split], index=False)
+    return paths
+
+
+def requires_files(*paths):
+    """skipif mark for a test that reads ``paths``: it runs wherever every
+    file exists and is skipped, naming the absent ones, elsewhere."""
+    missing = [p for p in paths if not os.path.exists(p)]
+    return pytest.mark.skipif(
+        bool(missing), reason=f"reference file(s) absent: {', '.join(missing)}"
+    )

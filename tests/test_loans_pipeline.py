@@ -3,19 +3,22 @@
 The deterministic processing stages must reproduce the reference's
 ``processed_valid.csv`` exactly (≤1e-9); stochastic stages (model imputers,
 Nelder-Mead weights) get statistical acceptance bands per SURVEY §5.2.
-Golden-parity tests read the reference's files; tests that only need loans
-input fall back to a seeded synthetic split when those files are absent.
+
+Tests that only need loans INPUT read the session's ``loans_paths`` split
+(``conftest.py``): the reference's ``orig_train.csv``/``orig_valid.csv``
+when present, else the seed-1 ``perfbench/loansgen.py`` split. The five
+golden-parity tests (processing parity, combiner weights, featured schema,
+notebook minimum slice, featured value parity) read the reference's files
+themselves and are skipped, naming the absent file, where the reference
+data directory (``conftest.REFERENCE_DATA``) lacks them.
 """
 
 from __future__ import annotations
 
-import importlib.util
-import os
-from pathlib import Path
-
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import ORIG_TRAIN, ORIG_VALID, REFERENCE_DATA, requires_files
 from pyspark.sql import functions as F
 
 from consumer_loans_analysis_spark.pipeline.combiner import CorrMaxCombiner, nelder_mead
@@ -32,31 +35,8 @@ from consumer_loans_analysis_spark.pipeline.stages import (
 )
 from consumer_loans_analysis_spark.sources.readers import read_loans_csv
 
-GOLD_PROCESSED = "/root/reference/data/processed_valid.csv"
-ORIG_TRAIN = "/root/reference/data/orig_train.csv"
-ORIG_VALID = "/root/reference/data/orig_valid.csv"
-LOANSGEN = Path(__file__).resolve().parents[1] / "perfbench" / "loansgen.py"
-LOANSGEN_SEED = 1
-
-
-@pytest.fixture(scope="module")
-def loans_paths(tmp_path_factory):
-    """Raw train/valid CSVs for the tests that only need loans INPUT: the
-    reference's files when present, else a seeded synthetic split in the
-    reference's schema, domains and split sizes (``perfbench/loansgen.py``)
-    written as CSV, so the same reader parses it."""
-    if os.path.exists(ORIG_TRAIN):
-        return {"train": ORIG_TRAIN, "valid": ORIG_VALID}
-    spec = importlib.util.spec_from_file_location("loansgen", LOANSGEN)
-    loansgen = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(loansgen)
-    sizes = {split: loansgen.SPLIT_ROWS[split] for split in ("train", "valid")}
-    out = tmp_path_factory.mktemp("loans")
-    paths = {}
-    for split, pdf in loansgen.generate(LOANSGEN_SEED, sizes).items():
-        paths[split] = str(out / f"{split}.csv")
-        pdf.to_csv(paths[split], index=False)
-    return paths
+GOLD_PROCESSED = f"{REFERENCE_DATA}/processed_valid.csv"
+GOLD_FEATURED = f"{REFERENCE_DATA}/featured_valid.csv"
 
 
 @pytest.fixture(scope="module")
@@ -70,6 +50,7 @@ def reference_train(spark):
     return read_loans_csv(spark, ORIG_TRAIN).cache()
 
 
+@requires_files(ORIG_TRAIN, ORIG_VALID, GOLD_PROCESSED)
 def test_processing_parity_deterministic(spark, reference_train):
     """Golden-output test: every deterministic column of processed_valid.csv
     reproduced to 1e-9 (order-insensitive multiset compare)."""
@@ -197,6 +178,7 @@ def test_nelder_mead_rosenbrock_ish():
     assert np.allclose(x, [3, -1], atol=1e-3)
 
 
+@requires_files(ORIG_TRAIN)
 def test_corr_max_combiner_matches_reference_weights(spark, reference_train):
     """The combiner's closed-form fit must land on the reference's published
     optimum (feature_engineering.ipynb:332-374): weights ≈
@@ -219,6 +201,7 @@ def test_corr_max_combiner_matches_reference_weights(spark, reference_train):
     assert stats[1] == pytest.approx(1.0, rel=1e-9)
 
 
+@requires_files(ORIG_TRAIN, GOLD_FEATURED)
 def test_featured_schema_matches_golden(spark, reference_train):
     proc = build_processing_pipeline(with_model_imputers=False).fit(reference_train)
     processed = proc.transform(reference_train)
@@ -306,6 +289,7 @@ def test_serving_wrapper_label_absent(spark, loans_train, loans_paths):
     assert preds <= {0.0, 1.0}
 
 
+@requires_files(ORIG_TRAIN)
 def test_minimum_slice_reference_truth(spark, reference_train):
     """SURVEY §7.1: the EDA reports reproduce exact numbers frozen in the
     reference notebook outputs (eda_processing.ipynb:861-960, 985-1060)."""
@@ -337,6 +321,7 @@ def test_minimum_slice_reference_truth(spark, reference_train):
         assert r["s"] == pytest.approx(1.0, abs=1e-9)
 
 
+@requires_files(ORIG_TRAIN, ORIG_VALID, GOLD_FEATURED)
 def test_featured_valid_deterministic_value_parity(spark, reference_train):
     """Tier-1 value parity on featured_valid.csv's DETERMINISTIC columns:
     the transform-only path must reproduce ratios, account one-hots, and

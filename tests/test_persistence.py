@@ -4,6 +4,12 @@ stage (SURVEY §2.1 S3, §7.2 step 7 — the joblib.dump/load equivalent).
 Round-trip contract: `load(save(model)).transform(df)` must equal
 `model.transform(df)` exactly (the learned state is JSON-encoded Params,
 so no float drift is acceptable).
+
+The two loans round-trips read the session's ``loans_paths`` split
+(``conftest.py``): the reference's ``orig_train.csv``/``orig_valid.csv``
+when the reference data directory holds them, else the seed-1
+``perfbench/loansgen.py`` split at the reference's sizes. What they check
+does not depend on which data is read, so none of them is skipped.
 """
 
 from __future__ import annotations
@@ -16,14 +22,11 @@ from consumer_loans_analysis_spark.pipeline.loans import build_processing_pipeli
 from consumer_loans_analysis_spark.pipeline.model_imputer import ModelImputer, ModelImputerModel
 from consumer_loans_analysis_spark.sources.readers import read_loans_csv
 
-ORIG_TRAIN = "/root/reference/data/orig_train.csv"
-ORIG_VALID = "/root/reference/data/orig_valid.csv"
-
 
 @pytest.fixture(scope="module")
-def loans(spark):
-    train = read_loans_csv(spark, ORIG_TRAIN).cache()
-    valid = read_loans_csv(spark, ORIG_VALID).cache()
+def loans(spark, loans_paths):
+    train = read_loans_csv(spark, loans_paths["train"]).cache()
+    valid = read_loans_csv(spark, loans_paths["valid"]).cache()
     return train, valid
 
 
