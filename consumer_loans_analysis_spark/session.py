@@ -27,10 +27,15 @@ DEFAULT_CONFIGS: dict[str, str] = {
     # ANSI off: we want permissive casts / null-on-bad-input like the
     # reference's pandas semantics (Spark 4 defaults ANSI on).
     "spark.sql.ansi.enabled": "false",
-    # Reasonable local shuffle width; AQE coalesces below this. At cluster
-    # scale SPARK_GRAFT_INITIAL_PARTITIONS (applied below) is the real
-    # knob — AQE can only coalesce DOWN from the initial number, so a bare
-    # 32 would cap every production shuffle at 32 tasks.
+    # Reasonable local shuffle width for batch queries; AQE coalesces below
+    # this. At cluster scale SPARK_GRAFT_INITIAL_PARTITIONS (applied below)
+    # is the real knob — AQE can only coalesce DOWN from the initial number,
+    # so a bare 32 would cap every production shuffle at 32 tasks. AQE does
+    # not reach stateful streaming operators, which would run all 32 state
+    # partitions (one state-store commit each) every micro-batch, so the
+    # drained streams do not start at 32: streaming/events.py starts them
+    # with one state partition per core, a count each query then keeps in
+    # its checkpoint.
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.files.maxPartitionBytes": "128m",
     # Split-size floor when a table is smaller than cores × 4 MB: Spark sets

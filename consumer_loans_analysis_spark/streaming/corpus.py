@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from consumer_loans_analysis_spark.operators import dedup
+from consumer_loans_analysis_spark.streaming.events import run_foreach_batch
 
 # Explicit state-table schemas. Partitioned dynamic-overwrite writes of an
 # EMPTY DataFrame create the partition directory with no data files, so a
@@ -131,23 +132,18 @@ def stream_dedup_corpus(
     """Stream a directory of document parquet files (one micro-batch per
     file via maxFilesPerTrigger) through ``ingest_batch``; returns the
     cumulative verified near-dup pairs after the drain."""
-    from consumer_loans_analysis_spark.streaming.events import _await_drained
-
     schema = spark.read.parquet(docs_dir).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(docs_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda bdf, bid: ingest_batch(bdf, state_dir, threshold, batch_id=bid)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        stream,
+        lambda bdf, bid: ingest_batch(bdf, state_dir, threshold, batch_id=bid),
+        checkpoint_dir,
+        timeout_sec,
     )
-    _await_drained(q, timeout_sec)
     # Explicit schema: on a corpus with zero near-dup pairs every pairs/
     # partition is an empty directory and inference would fail (see
     # _PAIRS_SCHEMA comment).

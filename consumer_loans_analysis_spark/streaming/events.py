@@ -13,15 +13,24 @@ Scale notes: streaming window aggs shuffle on (window, keys) exactly like
 batch; state is bounded by the watermark horizon (old windows evict), so a
 1000-executor job holds only `horizon / slide × |keys|` state rows. The
 sessionization operator keeps one state row per active user — skew-safe
-because state is hash-partitioned on user_id.
+because state is hash-partitioned on user_id. The number of state
+partitions is fixed when a query first starts and is recorded in its
+checkpoint; AQE does not coalesce stateful operators, and every state
+partition pays a state-store commit per micro-batch whatever it holds.
+The drained queries here (``run_to_memory``, ``run_foreach_batch``) start
+with one state partition per core (``defaultParallelism``), not the
+session's batch shuffle width; a restart from an existing checkpoint reads
+the count back from the checkpoint, so existing state is never
+re-partitioned.
 """
 
 from __future__ import annotations
 
-import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -156,27 +165,71 @@ def session_aggregates(
 
 def run_to_memory(
     stream_df: DataFrame, name: str, timeout_sec: int = 300, output_mode: str = "complete"
-) -> None:
+) -> StreamingQuery:
     """Drain an availableNow stream into an in-memory table `name`
     (complete mode for aggregations; append for joins/dedup) — the
-    test/debug sink.
+    test/debug sink. Returns the stopped query.
+
+    The state partition count is fixed at one per core when the query
+    first starts, and is read from the checkpoint after that (see
+    ``_drain``).
 
     Most availableNow queries self-terminate once the source is exhausted.
     Stateful queries with a ProcessingTimeTimeout do NOT: after the data
     batches, the engine keeps scheduling empty "no new data but cleaning up
     state" batches waiting for timers that may be hours away, so a plain
     ``awaitTermination(timeout)`` silently burns the whole timeout. Detect
-    the drained condition instead — all input consumed AND two consecutive
-    completed zero-row triggers — and stop the query explicitly (update-mode
-    output for the data batches is already in the sink at that point)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    the drained condition instead — all input consumed AND a completed
+    zero-row trigger — and stop the query explicitly (update-mode output
+    for the data batches is already in the sink at that point)."""
+    writer = stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    return _drain(stream_df.sparkSession, writer, timeout_sec)
+
+
+def run_foreach_batch(
+    stream_df: DataFrame, batch_fn, checkpoint_dir: str, timeout_sec: int = 300
+) -> StreamingQuery:
+    """Production-shaped sink: per-microbatch callable (e.g. upsert to a
+    warehouse, or PipelineModel.transform for streaming serving) with
+    exactly-once bookkeeping via the checkpoint. Returns the stopped query.
+
+    A fresh checkpoint starts with one state partition per core; resuming
+    an existing one keeps the count it was first written with."""
+    writer = (
+        stream_df.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
     )
+    return _drain(stream_df.sparkSession, writer, timeout_sec)
+
+
+# Held from reading the session's shuffle width to putting it back, so two
+# threads starting streams on one session cannot leave it at the stream
+# width.
+_START_LOCK = threading.Lock()
+
+
+def _drain(
+    spark: SparkSession, writer: DataStreamWriter, timeout_sec: int
+) -> StreamingQuery:
+    """Start ``writer`` as an availableNow query and wait until it drains.
+
+    The query copies the session's conf once, at ``start()``, and a fresh
+    query records ``spark.sql.shuffle.partitions`` in its checkpoint as its
+    state partition count. So it starts with the count set to one per core,
+    and the session's own value (the batch queries' shuffle width) is put
+    back at once. A restart from an existing checkpoint takes the count from
+    the checkpoint's offset log instead, so existing state keeps its layout."""
+    key = "spark.sql.shuffle.partitions"
+    with _START_LOCK:
+        prev = spark.conf.get(key)
+        spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+        try:
+            q = writer.trigger(availableNow=True).start()
+        finally:
+            spark.conf.set(key, prev)
     _await_drained(q, timeout_sec)
+    return q
 
 
 def _between_batches(status: dict) -> bool:
@@ -195,10 +248,11 @@ def _between_batches(status: dict) -> bool:
 def _await_drained(q, timeout_sec: int) -> None:
     """Wait until an availableNow query has consumed its source, then stop it.
 
-    Self-terminating queries exit via the ``isActive`` check; the stateful
-    ProcessingTimeTimeout case (see ``run_to_memory``) is detected as all
-    input consumed + two consecutive completed zero-row triggers, and is
-    stopped between batches (see ``_between_batches``), or at the deadline."""
+    Self-terminating queries exit via the ``isActive`` check, as soon as
+    they end; the stateful ProcessingTimeTimeout case (see
+    ``run_to_memory``) is detected as all input consumed + one completed
+    zero-row trigger, and is stopped between batches (see
+    ``_between_batches``), or at the deadline."""
     import time as _time
 
     deadline = _time.monotonic() + timeout_sec
@@ -207,6 +261,7 @@ def _await_drained(q, timeout_sec: int) -> None:
     last_batch = -1
     while _time.monotonic() < deadline:
         if not q.isActive:
+            q.awaitTermination()  # raises the query's failure, if it failed
             return
         lp = q.lastProgress
         if lp is not None and lp["batchId"] != last_batch:
@@ -216,34 +271,17 @@ def _await_drained(q, timeout_sec: int) -> None:
                 zero_row_batches = 0
             else:
                 zero_row_batches += 1
-        # drained = input consumed + 2 consecutive empty triggers; an
-        # entirely EMPTY source never sets seen_data, so accept a longer
-        # all-empty streak too instead of burning the whole timeout
-        if (seen_data and zero_row_batches >= 2) or zero_row_batches >= 5:
+        # drained = input consumed + an empty trigger that found no new
+        # data; an entirely EMPTY source never sets seen_data, so accept a
+        # longer all-empty streak too instead of burning the whole timeout
+        if (seen_data and zero_row_batches >= 1) or zero_row_batches >= 5:
             if not q.status["isDataAvailable"]:
                 break
-        _time.sleep(0.2)
+        q.awaitTermination(0.2)  # returns as soon as the query ends
     while q.isActive and not _between_batches(q.status) and _time.monotonic() < deadline:
         _time.sleep(0.005)
     q.stop()
     q.awaitTermination(30)
-
-
-def run_foreach_batch(
-    stream_df: DataFrame, batch_fn, checkpoint_dir: str, timeout_sec: int = 300
-):
-    """Production-shaped sink: per-microbatch callable (e.g. upsert to a
-    warehouse, or PipelineModel.transform for streaming serving) with
-    exactly-once bookkeeping via the checkpoint."""
-    q = (
-        stream_df.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_drained(q, timeout_sec)
-    return q
 
 
 def view_click_attribution(

@@ -249,6 +249,142 @@ def test_stream_dedup_across_microbatches(spark, sf_dir, tmp_path, batch_events)
     assert got.select("event_id").distinct().count() == n
 
 
+def _state_partitions(q) -> int:
+    return q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+
+
+def test_run_to_memory_starts_one_state_partition_per_core(spark, sf_dir):
+    """A drained stream's state starts one partition per core, not at the
+    session's batch shuffle width (8 here), which stays as it was."""
+    from consumer_loans_analysis_spark.streaming.events import dedup_events_stream
+
+    q = run_to_memory(
+        dedup_events_stream(stream_events(spark, sf_dir)), "t_dedup_width", output_mode="append"
+    )
+    assert _state_partitions(q) == spark.sparkContext.defaultParallelism
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def test_run_foreach_batch_starts_one_state_partition_per_core(spark, sf_dir, tmp_path):
+    from consumer_loans_analysis_spark.streaming.stateful import streaming_mg_candidates
+
+    docs = read_table(spark, sf_dir, "documents")
+    stream = (
+        spark.readStream.schema(docs.schema)
+        .option("pathGlobFilter", "documents.parquet")
+        .parquet(sf_dir)
+    )
+    q = run_foreach_batch(
+        streaming_mg_candidates(stream, k=16, n_groups=4),
+        lambda batch_df, batch_id: batch_df.collect(),
+        checkpoint_dir=str(tmp_path / "ckpt_width"),
+    )
+    assert _state_partitions(q) == spark.sparkContext.defaultParallelism
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def test_failed_start_keeps_the_session_shuffle_width(spark, sf_dir):
+    """Complete mode on a stream without an aggregation fails in start();
+    the session's shuffle width is put back all the same."""
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException):
+        run_to_memory(stream_events(spark, sf_dir), "t_no_agg", output_mode="complete")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def test_concurrent_starts_restore_the_session_shuffle_width(spark):
+    """Streams started from many threads at once each start at the stream
+    width, and the session's own width is what is left afterwards."""
+    import sys
+    import threading
+
+    from consumer_loans_analysis_spark.streaming import events
+
+    key = "spark.sql.shuffle.partitions"
+    width = str(spark.sparkContext.defaultParallelism)
+    seen: list[str] = []
+
+    class _Ended:
+        isActive = False
+
+        def awaitTermination(self, timeout=None):
+            return None
+
+    class _Writer:
+        def trigger(self, **kw):
+            return self
+
+        def start(self):
+            seen.append(spark.conf.get(key))
+            return _Ended()
+
+    def drain_many():
+        for _ in range(5):
+            events._drain(spark, _Writer(), timeout_sec=10)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=drain_many) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert seen == [width] * 80
+    assert spark.conf.get(key) == "8"
+
+
+def test_resumed_checkpoint_keeps_its_state_partitions(spark, sf_dir, tmp_path):
+    """A checkpoint first written at the session's 8 state partitions is
+    resumed at 8 (the offset log, not the drain, sets the count), and the
+    resumed run answers as one run over both files does. Each user has
+    events in both files, so the resumed totals add to restored state."""
+    events = read_table(spark, sf_dir, "events")
+    halves = [events.filter(F.col("event_id") % 2 == i).select("user_id", "value") for i in (0, 1)]
+    src = str(tmp_path / "src")
+    halves[0].coalesce(1).write.parquet(src)
+    stream = (
+        spark.readStream.schema(halves[0].schema)
+        .parquet(src)
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
+    )
+
+    def sink_into(totals):
+        def sink(batch_df, batch_id):
+            for r in batch_df.collect():
+                totals[r["user_id"]] = (r["n"], r["s"])
+
+        return sink
+
+    resumed: dict = {}
+    ckpt = str(tmp_path / "ckpt_resume")
+    first = (
+        stream.writeStream.foreachBatch(sink_into(resumed))
+        .option("checkpointLocation", ckpt)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    first.awaitTermination(120)
+    assert _state_partitions(first) == 8
+    halves[1].coalesce(1).write.mode("append").parquet(src)
+    q = run_foreach_batch(stream, sink_into(resumed), checkpoint_dir=ckpt)
+    assert _state_partitions(q) == 8
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+    single: dict = {}
+    run_foreach_batch(stream, sink_into(single), checkpoint_dir=str(tmp_path / "ckpt_one"))
+    assert set(resumed) == set(single) and len(single) > 0
+    for uid, (n, total) in single.items():
+        assert resumed[uid][0] == n
+        assert resumed[uid][1] == pytest.approx(total, rel=1e-9)
+
+
 def test_corpus_ingest_batch_retry_idempotent(spark, sf_dir, tmp_path):
     """A foreachBatch retry (same batch_id) must be a no-op on the corpus
     dedup state: writes are keyed by batch_id with dynamic partition
@@ -561,3 +697,18 @@ def test_drained_stream_stop_keeps_the_deadline(monkeypatch):
     q = _SpinningQuery([_WORK], phase=0)
     events._await_drained(q, timeout_sec=0)
     assert q.stops == [_WORK[1]]
+
+
+def test_drained_stream_stops_after_one_empty_batch(monkeypatch):
+    """Once the data is in and no new data is available, the first
+    completed zero-row batch ends the drain: a drained stateful query's
+    empty batches re-scan all of its state, so a second one is waste."""
+    import time
+
+    from consumer_loans_analysis_spark.streaming import events
+
+    monkeypatch.setattr(time, "sleep", lambda s: None)
+    q = _SpinningQuery([_OFFSETS], phase=0)
+    events._await_drained(q, timeout_sec=60)
+    assert q.batch == 1  # batch 0 carried rows, batch 1 was the empty one
+    assert q.stops == [_OFFSETS[1]]
