@@ -310,7 +310,7 @@ def semantic_dedup(
             # each is evaluated once per row — inlining `unit` into
             # kmeans_assign re-evaluates the 64-element norm per element
             # AND per centroid through interpreted higher-order
-            # expressions (the ivf_topk staging fix; ~2× on d11b). Same
+            # expressions (~2× on d11b). Same
             # IEEE754 ops in the same order, oracle unaffected.
             b = (
                 emb.select(

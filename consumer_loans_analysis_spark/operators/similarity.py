@@ -1,16 +1,31 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine_topk``: brute-force exact top-k. The query batch closes over a
-  ``mapInPandas`` GEMM scan; per-batch partial top-k is merged by a final
-  window over survivors only. Linear in corpus size, no corpus shuffle —
-  the correctness baseline.
-- ``bucketed_topk``: sign-LSH (axis hyperplanes) variant — candidates are
-  restricted to the query's bucket, an equi-join. The 100 TB path: recall
-  trades against the number of probe buckets.
+Every embedding top-k search — ``cosine_topk``, ``prefix_rerank_topk``,
+``ivf_topk``, ``pq_topk`` and ``ivfadc_topk`` — is one generate, prune,
+refine pass: ``_scan``, a single ``mapInPandas`` over the (id, raw vector)
+rows of the non-zero-norm corpus. The query batch is operationally small,
+so ``_query_side`` collects it to the driver and the scan closes over it.
+Per Arrow batch the scan sorts rows by id and then runs up to three
+optional stages before the exact one:
 
-Dot products stay JVM-side via ``zip_with``/``aggregate`` (no Python UDF);
-floats are cast to double before accumulation, left-to-right, so results are
-deterministic and engine-portable.
+1. route (IVF centroids): assign each unit row to its nearest list and
+   mask the rows outside the query's ``n_probe`` probed lists;
+2. coarse score: the PQ asymmetric-distance lookup (codebooks) or the
+   prefix cosine (``prefix_dim``), cut to the top R rows per query;
+3. refine: the exact cosine of the survivors (of every routed row when
+   there is no coarse score), cut to the top k.
+
+``_merge`` ranks the <= batches·|q|·R survivors per query: an approx cut to
+R when there is a coarse score, then the exact rank window. The corpus
+never shuffles and crosses the Python boundary once. Live quantizers fit
+on one bounded deterministic sample (``_fit_sample``); pinned ones are
+passed in.
+
+All scan arithmetic is strict left-to-right double arithmetic
+(``_ltr_dot``, no BLAS/FMA), and the Column helpers (``cosine``,
+``bucketed_topk``, the near-dup paths) accumulate left to right through
+``zip_with``/``aggregate``, so every score is the IEEE754 double the DuckDB
+oracles' ``list_dot_product`` produces.
 """
 
 from __future__ import annotations
@@ -58,87 +73,223 @@ def sq_l2(a: Column, b: Column) -> Column:
     )
 
 
+def _ltr_dot(A, B):
+    """Left-to-right dot product over the LAST axis of two broadcastable
+    numpy arrays — explicit elementwise multiply + add chain, NO BLAS and
+    no FMA, so every intermediate is a correctly-rounded IEEE754 double in
+    strict left-to-right order. This makes scan scores bit-identical to
+    any engine that accumulates dot products sequentially (DuckDB's
+    list_dot_product, Spark's ltr ``aggregate``), which is what lets the
+    sim oracles restate the pruned searches under a full hash compare.
+    Cost: one elementwise op pair per element — negligible next to the
+    Arrow transfer."""
+    acc = A[..., 0] * B[..., 0]
+    for i in range(1, A.shape[-1]):
+        acc = acc + A[..., i] * B[..., i]
+    return acc
+
+
+def _unit(X):
+    """Row-wise unit vectors: the same doubles as the Column form
+    ``x / sqrt(aggregate(v, 0.0, acc + x·x))``."""
+    import numpy as np
+
+    return X / np.sqrt(_ltr_dot(X, X))[:, None]
+
+
+def _list_dist(U, cen):
+    """(rows, lists) routing distances ‖c‖² − 2·u·c: for unit u, squared L2
+    minus the constant ‖u‖², so argmin and ranking match. The corpus
+    assignment and the query probe ranking share this one form, which the
+    sim3b/sim8 oracles restate over the same literals."""
+    return _ltr_dot(cen, cen)[None, :] - 2.0 * _ltr_dot(U[:, None, :], cen[None])
+
+
+def _fit_sample(
+    corpus: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
+    fit_sample: int = 16384,
+):
+    """Unit vectors of the ``fit_sample`` hash-smallest non-zero-norm corpus
+    rows (xxhash64 order, id tie-break): one TakeOrdered job, independent of
+    the partition layout. Every live quantizer fit trains on it, and the
+    pinned quantizers were fit on it (``tools/probe_refit_*``). Codebooks
+    and centroids need thousands of points, not the corpus, so training
+    cost is bounded at any scale. Empty when the corpus has no rankable
+    row."""
+    import numpy as np
+
+    rows = (
+        corpus.filter(_norm(F.col(vec_col)) > 0)
+        .select(F.col(id_col).alias("sid"), F.col(vec_col).alias("v"))
+        .orderBy(F.pmod(F.xxhash64("sid"), F.lit(1_000_003)).asc(), F.col("sid").asc())
+        .limit(fit_sample)
+        .collect()
+    )
+    X = np.asarray([r["v"] for r in rows], dtype=np.float64)
+    return _unit(X) if len(X) else X
+
+
+def _query_side(corpus, queries, id_col, vec_col, cen, n_probe, cb):
+    """Collect the non-zero-norm query batch and build its per-query scan
+    state: raw and unit vectors, the probed-list mask (with centroids) and
+    the ADC lookup table (with codebooks). Returns ``(schema, state)``: the
+    output id types come from the two input schemas, so long and string
+    ids both work; ``state`` is None for an empty batch."""
+    import numpy as np
+
+    schema = (
+        f"query_id {queries.schema[id_col].dataType.simpleString()}, "
+        f"neighbor_id {corpus.schema[id_col].dataType.simpleString()}"
+    )
+    rows = (
+        queries.filter(_norm(F.col(vec_col)) > 0)
+        .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("v"))
+        .collect()
+    )
+    if not rows:
+        return schema, None
+    Q = np.asarray([r["v"] for r in rows], dtype=np.float64)
+    q = {"ids": np.array([r["qid"] for r in rows]), "Q": Q, "U": _unit(Q)}
+    if cen is not None:
+        # a stable argsort is the oracles' ORDER BY d ASC, list ASC
+        d = _list_dist(q["U"], cen)
+        q["probe"] = np.zeros(d.shape, dtype=bool)
+        lists = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
+        np.put_along_axis(q["probe"], lists, True, axis=1)
+    if cb is not None:
+        # LUT[q, m, c] = u_q[m] · codeword[m, c]; approx = Σ_m LUT[q, m, code_m]
+        m_subs, _, dsub = cb.shape
+        q["lut"] = _ltr_dot(q["U"].reshape(len(Q), m_subs, 1, dsub), cb[None])
+    return schema, q
+
+
+def _scan(
+    corpus: DataFrame, queries: DataFrame, k: int, id_col: str, vec_col: str,
+    R: int | None = None, prefix_dim: int | None = None,
+    centroids=None, n_probe: int = 0, codebooks=None,
+) -> DataFrame:
+    """The one top-k scan (see the module docstring). Each batch emits its
+    local top-R per query by the coarse score (top-k by the exact cosine
+    when there is none) with the exact cosine attached. Rows are id-sorted
+    first, so a stable argsort breaks score ties to the lowest id — the
+    merge windows' and the oracles' ORDER BY score DESC, id ASC — and the
+    union of per-batch cuts always holds the global cut.
+
+    The exact score keeps each oracle's form: the ADC paths (codebooks)
+    score the unit·unit dot of the space their codes live in; the others
+    score the raw dot/(‖q‖·‖c‖)."""
+    import numpy as np
+
+    cen = None if centroids is None else np.asarray(centroids, dtype=np.float64)
+    cb = None if codebooks is None else np.asarray(codebooks, dtype=np.float64)
+    schema, q = _query_side(corpus, queries, id_col, vec_col, cen, n_probe, cb)
+    if q is None:
+        return corpus.sparkSession.createDataFrame([], schema + ", cos double, rank int")
+    coarse = cb is not None or prefix_dim is not None
+    cut = R if coarse else k
+    q_ids, Q, QU = q["ids"], q["Q"], q["U"]
+    qn = np.sqrt(_ltr_dot(Q, Q))
+    if cb is not None:
+        m_subs, _, dsub = cb.shape
+        cnorm = _ltr_dot(cb, cb)  # (m_subs, ks)
+    if prefix_dim is not None:
+        Qp = Q[:, :prefix_dim]
+        qpn = np.sqrt(_ltr_dot(Qp, Qp))
+
+    def exact(X, cn, U, rows):
+        if cb is not None:
+            return _ltr_dot(QU[:, None, :], U[rows])
+        return _ltr_dot(Q[:, None, :], X[rows]) / (qn[:, None] * cn[rows])
+
+    def scan(batches):
+        for pdf in batches:
+            ids = pdf["nid"].to_numpy()
+            if len(ids) == 0:
+                continue
+            order = np.argsort(ids, kind="stable")
+            ids = ids[order]
+            X = np.asarray(pdf["v"].tolist(), dtype=np.float64)[order]
+            cn = np.sqrt(_ltr_dot(X, X))
+            U = X / cn[:, None]
+            valid = np.ones((len(q_ids), len(ids)), dtype=bool)
+            if cen is not None:
+                # argmin takes the first minimum: ties to the lowest list
+                valid = q["probe"][:, _list_dist(U, cen).argmin(axis=1)]
+            if cb is not None:
+                # encode: per subspace argmin of ‖c‖² − 2·x·c, then the
+                # LUT-sum as an explicit left-to-right add chain
+                Us = U.reshape(len(ids), m_subs, dsub)
+                C = np.empty((len(ids), m_subs), dtype=np.int64)
+                for s in range(m_subs):
+                    d = cnorm[s] - 2.0 * _ltr_dot(Us[:, s, None, :], cb[s][None, :, :])
+                    C[:, s] = d.argmin(axis=1)
+                G = q["lut"][:, np.arange(m_subs), C]  # (nq, B, m_subs)
+                S = G[..., 0]
+                for s in range(1, m_subs):
+                    S = S + G[..., s]
+            elif prefix_dim is not None:
+                P = X[:, :prefix_dim]
+                with np.errstate(invalid="ignore", divide="ignore"):
+                    S = _ltr_dot(Qp[:, None, :], P[None]) / (
+                        qpn[:, None] * np.sqrt(_ltr_dot(P, P))
+                    )
+                valid &= ~np.isnan(S)  # a zero-norm prefix has no direction
+            else:
+                S = exact(X, cn, U, np.arange(len(ids))[None, :])
+            S = np.where(valid, S, -np.inf)
+            top = min(cut, len(ids))
+            idx = np.argsort(-S, axis=1, kind="stable")[:, :top]
+            hit = np.take_along_axis(valid, idx, axis=1).ravel()
+            best = np.take_along_axis(S, idx, axis=1)
+            out = {
+                "query_id": np.repeat(q_ids, top)[hit],
+                "neighbor_id": ids[idx].ravel()[hit],
+            }
+            if coarse:
+                out["approx"] = best.ravel()[hit]
+                best = exact(X, cn, U, idx)
+            out["cos"] = best.ravel()[hit]
+            yield pd.DataFrame(out)
+
+    parts = (
+        corpus.filter(_norm(F.col(vec_col)) > 0)
+        .select(F.col(id_col).alias("nid"), F.col(vec_col).alias("v"))
+        .mapInPandas(scan, schema + (", approx double" if coarse else "") + ", cos double")
+    )
+    return _merge(parts, k, R if coarse else None)
+
+
+def _merge(scored: DataFrame, k: int, R: int | None = None) -> DataFrame:
+    """Per-query merge of scored candidates: with a coarse score, first cut
+    to the top R by ``approx``; then rank by exact ``cos`` and keep k. Both
+    windows share one query_id exchange, and Spark plans a partial
+    WindowGroupLimit ahead of it."""
+    if R is not None:
+        wr = Window.partitionBy("query_id").orderBy(F.desc("approx"), F.asc("neighbor_id"))
+        scored = scored.withColumn("r", F.row_number().over(wr)).filter(F.col("r") <= R)
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cos", "rank")
+    )
+
+
 def cosine_topk(
     corpus: DataFrame, queries: DataFrame, k: int = 5,
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector (ties broken by
-    neighbor id).
+    neighbor id): the scan with no optional stage. Each batch keeps its
+    local top-k per query, so the merge window sees <= batches·|q|·k rows
+    and no corpus-sized window exists. Linear in corpus size — the
+    correctness baseline.
 
-    Scale shape (r9 — replaces the broadcast-join + per-query row_number
-    window, which shuffled all |corpus|×|queries| scored rows and landed
-    each query's ENTIRE corpus score set on one partition): the query
-    batch is collected to the driver (queries are operationally small —
-    the same contract as ``pq_topk``) and closed over a ``mapInPandas``
-    GEMM scan of the corpus. Each Arrow batch computes its slice of the
-    cosine matrix with one numpy matmul and emits only its local top-k
-    per query under the exact tie-break (stable argsort of -cos over
-    id-sorted rows ≡ ORDER BY cos DESC, neighbor_id ASC), so the final
-    merge window sees ≤ batches·|q|·k survivor rows — the corpus itself
-    never shuffles and no corpus-sized WindowExec exists in the plan.
-    Exact: the union of per-batch top-k always contains the global top-k.
-
-    Zero-norm contract (same as ``ivf_topk``/``pq_topk``): zero-norm rows
-    are EXCLUDED from both sides up front — cosine is undefined for them —
-    so a zero-norm query produces no output rows.
+    Zero-norm contract (every search here): zero-norm rows are EXCLUDED
+    from both sides up front — cosine is undefined for them — so a
+    zero-norm query produces no output rows.
     """
-    import numpy as np
-
-    corpus = corpus.filter(_norm(F.col(vec_col)) > 0)
-    q_rows = (
-        queries.filter(_norm(F.col(vec_col)) > 0)
-        .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-        .collect()
-    )
-    q_id_t = queries.schema[id_col].dataType.simpleString()
-    n_id_t = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {q_id_t}, neighbor_id {n_id_t}, cos double"
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame([], out_schema + ", rank int")
-    q_ids = np.array([r["query_id"] for r in q_rows])
-    Q = np.asarray([r["q_vec"] for r in q_rows], dtype=np.float64)
-    qn = np.sqrt(_ltr_dot(Q, Q))  # (nq,)
-
-    def scan(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["nid"].to_numpy()
-            M = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-            # pre-sort rows by neighbor id so a STABLE argsort of -cos
-            # breaks score ties by ascending id — the exact tie-break
-            order = np.argsort(ids, kind="stable")
-            ids, M = ids[order], M[order]
-            # raw ltr dot / (ltr-norm product) — the EXACT structure and
-            # accumulation order of the oracle's list_dot_product(q, c) /
-            # (SQRT(ldp(q,q)) * SQRT(ldp(c,c))), so every score is a
-            # bit-identical IEEE754 double in both engines (no BLAS
-            # GEMM/pairwise-norm, whose ulp-level drift could flip the
-            # per-batch top-k cut on near-tied scores)
-            cn = np.sqrt(_ltr_dot(M, M))  # (B,)
-            S = _ltr_dot(M[:, None, :], Q[None, :, :]) / (
-                cn[:, None] * qn[None, :]
-            )  # (B, nq)
-            top = min(k, S.shape[0])
-            idx = np.argsort(-S, axis=0, kind="stable")[:top]  # (top, nq)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, top),
-                    "neighbor_id": ids[idx.T.ravel()],
-                    "cos": np.take_along_axis(S, idx, axis=0).T.ravel(),
-                }
-            )
-
-    parts = corpus.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("v")
-    ).mapInPandas(scan, out_schema)
-    # merge window over the ≤ batches·|q|·k survivors only
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        parts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _scan(corpus, queries, k, id_col, vec_col)
 
 
 def prefix_rerank_topk(
@@ -150,8 +301,8 @@ def prefix_rerank_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Progressive (funnel) retrieval: coarse top-R scan on the first
-    ``prefix_dim`` dimensions, exact full-dimension re-rank of the R =
+    """Progressive (funnel) retrieval: coarse top-R on the cosine of the
+    first ``prefix_dim`` dimensions, exact full-dimension re-rank of the R =
     ``rerank·k`` survivors — the Matryoshka-representation adaptive-
     retrieval recipe (Kusupati et al. 2022: shortlist with a cheap prefix
     embedding, fix the ranking with the full one).
@@ -160,45 +311,12 @@ def prefix_rerank_topk(
     set is a pure function of the data, so the approximate search itself
     (not a full-probe twin) carries a full SQL oracle.
 
-    Scale shape: the coarse pass reuses ``cosine_topk``'s mapInPandas
-    GEMM scan — but on a prefix_dim-wide slice, cutting scan FLOPs and
-    (on a prefix-ordered columnar layout) scan bytes by dim/prefix_dim;
-    per batch only the local top-R survives. The re-rank is one
-    broadcast-candidates join back onto the corpus (|q|·R rows — tiny),
-    full-dim cosine in pure Column expressions, final bounded window.
-    The corpus never shuffles.
-
-    Zero-norm contract: ``cosine_topk`` excludes zero-norm PREFIX slices
-    from the coarse scan (cosine undefined), so a vector whose first
-    prefix_dim dims are all zero is unfindable by design — the funnel's
+    Zero-norm contract: a row or query whose first prefix_dim dims are all
+    zero has no prefix cosine and is unfindable by design — the funnel's
     standard failure mode, absent from the test corpora.
     """
-    prefix = F.slice(F.col(vec_col), 1, prefix_dim)
-    cands = cosine_topk(
-        corpus.select(F.col(id_col), prefix.alias(vec_col)),
-        queries.select(F.col(id_col), prefix.alias(vec_col)),
-        k=max(k, rerank * k),
-        id_col=id_col,
-        vec_col=vec_col,
-    ).select("query_id", "neighbor_id")
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    scored = (
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-        .join(F.broadcast(cands), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("q_vec"), F.col("c_vec")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    return _scan(
+        corpus, queries, k, id_col, vec_col, R=max(k, rerank * k), prefix_dim=prefix_dim
     )
 
 
@@ -233,12 +351,7 @@ def bucketed_topk(
     scored = c.join(F.broadcast(q), "bucket").select(
         "query_id", "neighbor_id", cosine(F.col("q_vec"), F.col("c_vec")).alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _merge(scored, k)
 
 
 def embedding_near_dupes_exact(
@@ -361,146 +474,41 @@ def ivf_topk(
     seed: int = 42,
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: KMeans coarse quantizer over
-    the corpus, then each query probes only its ``n_probe`` nearest lists.
+    """IVF (inverted-file) approximate top-k: a k-means coarse quantizer
+    over the corpus; each query is scored only against rows in its
+    ``n_probe`` nearest lists (the scan's route stage, then the exact
+    cosine). Recall rises with n_probe; n_probe = n_lists is exact search.
 
-    Scale shape: the corpus is scored against ~n_probe/n_lists of its rows
-    (an equi-join on list id) instead of all of them; centroids (n_lists ×
-    dim floats) are driver-small and live inside BOTH the corpus
-    assignment and the query probe as literal expressions. Train cost is
-    one bounded deterministic sample (the ``fit_sample`` hash-smallest
-    rows, one TakeOrdered job) + a seeded driver-side numpy
-    k-means++/Lloyd fit — the same sample-fit contract as ``pq_topk``
-    (r9; replaces the full-corpus MLlib fit, which cost a distributed
-    job set per construction and would re-cluster 100 TB to learn a
-    16KB quantizer). Recall rises with n_probe → n_lists gives exact
-    search. Past ~64 lists move the assignment argmin from the
-    expression form to an Arrow-batched pandas UDF (expression size
-    grows linearly with n_lists).
+    Train cost is one bounded deterministic sample (``_fit_sample``) plus a
+    seeded driver-side numpy k-means++/Lloyd fit. ``n_lists`` defaults to
+    √(sample size), which is √n for any corpus within the sample bound.
 
     Spherical variant: vectors are L2-normalized before clustering and
-    probing, so euclidean-nearest-list == cosine-nearest-list (plain L2
+    routing, so euclidean-nearest-list == cosine-nearest-list (plain L2
     IVF misroutes cosine queries when vector norms vary).
 
-    Zero-norm contract: rows whose vector has zero L2 norm are EXCLUDED
-    from both corpus and queries (cosine is undefined for them), so the
-    output may contain fewer distinct ``query_id``s than the input — a
-    zero-norm query produces no rows rather than null-cosine rows.
-
-    Pinned-quantizer mode: pass ``centroids`` to skip the fit entirely and
-    route with a FROZEN coarse quantizer (the production shape — quantizers
-    are trained once and shipped; FAISS's index_factory does the same).
-    With literal centroids every step of the query — assignment, probe
-    ranking, pruning — is a deterministic, SQL-expressible function of the
-    data, which is what gives ``sim3b_ivf_pinned_topk`` a full DuckDB hash
-    oracle over its PRUNED 5-of-8-probe path (sim4 only oracles the
-    exhaustive-probe twin).
+    Pinned-quantizer mode: pass ``centroids`` to skip the fit and route with
+    a FROZEN coarse quantizer (the production shape — quantizers are
+    trained once and shipped; FAISS's index_factory does the same). With
+    literal centroids the assignment, probe ranking and pruning are a
+    deterministic, SQL-expressible function of the data, which gives
+    ``sim3b_ivf_pinned_topk`` a full DuckDB hash oracle over its PRUNED
+    5-of-8-probe path (sim4 only oracles the exhaustive-probe twin).
     """
     import math
 
-    import numpy as np
-
-    if centroids is not None:
-        if n_lists is not None and n_lists != len(centroids):
-            raise ValueError(
-                f"n_lists={n_lists} conflicts with {len(centroids)} pinned "
-                "centroids — pass one or the other"
-            )
-        n_lists = len(centroids)
-    elif n_lists is None:
-        # √n default needs one count() action; pass n_lists explicitly to
-        # skip it (the sample fit below is a training action either way —
-        # this function is a fit+query, not a pure plan builder).
-        n_lists = max(2, int(math.sqrt(corpus.count())))
-
-    def unit(vec: Column) -> Column:
-        return F.transform(vec, lambda x: F.try_divide(x.cast("double"), _norm(vec)))
-
-    # zero-norm vectors have no direction: their cosine to anything is
-    # undefined, so they can neither be ranked nor rank others — exclude
-    # them up front (also keeps null unit-elements out of the quantizer
-    # fit). Test corpora contain none, so the SQL oracles (where a
-    # zero-norm row would surface as a NULL-cos candidate sorted last)
-    # are unaffected.
-    corpus = corpus.filter(_norm(F.col(vec_col)) > 0)
-    queries = queries.filter(_norm(F.col(vec_col)) > 0)
-
     if centroids is None:
-        # spherical coarse quantizer fitted on a bounded deterministic sample
-        # (hash-smallest ids; partition-layout-independent — see pq_topk)
-        fit_sample = 16384
-        samp = (
-            corpus.select(F.col(id_col).alias("sid"), unit(F.col(vec_col)).alias("u"))
-            .orderBy(F.pmod(F.xxhash64("sid"), F.lit(1_000_003)).asc(),
-                     F.col("sid").asc())
-            .limit(fit_sample)
-            .collect()
+        Xs = _fit_sample(corpus, id_col, vec_col)
+        if not len(Xs):  # nothing rankable: the plain scan returns empty
+            return _scan(corpus, queries, k, id_col, vec_col)
+        centroids = _kmeanspp_lloyd(Xs, n_lists or max(2, math.isqrt(len(Xs))), seed)
+    elif n_lists is not None and n_lists != len(centroids):
+        raise ValueError(
+            f"n_lists={n_lists} conflicts with {len(centroids)} pinned "
+            "centroids — pass one or the other"
         )
-        Xs = np.asarray([r["u"] for r in samp], dtype=np.float64)
-        centroids = [
-            [float(x) for x in c] for c in _kmeanspp_lloyd(Xs, n_lists, seed)
-        ]
-
-    from consumer_loans_analysis_spark.operators.curation import kmeans_assign
-
-    # stage the norm, then the unit vector, as projected columns so each is
-    # evaluated ONCE per row: inlining `unit(vec)` into kmeans_assign
-    # re-evaluates the 64-element norm per element AND per centroid (8 ×
-    # 64 × 64 ops/row) and the resulting expression tree is big enough to
-    # fall out of whole-stage codegen — staging cut sim4/sim3b wall ~5×
-    # at sf0.1. Same IEEE754 ops in the same order, so oracles are
-    # unaffected.
-    assigned = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            _norm(F.col(vec_col)).alias("_n"),
-        )
-        .select(
-            "neighbor_id",
-            "c_vec",
-            F.transform(
-                F.col("c_vec"), lambda x: F.try_divide(x.cast("double"), F.col("_n"))
-            ).alias("_u"),
-        )
-        .select(
-            "neighbor_id",
-            "c_vec",
-            kmeans_assign(F.col("_u"), centroids).alias("list_id"),
-        )
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    # probe ranking uses the SAME ‖c‖² − 2·u·c form as the assignment (for
-    # unit u it equals sq_l2 minus the constant 1, so the ranking is
-    # identical) — one portable formula for both sides is what the sim3b
-    # DuckDB oracle restates verbatim over the same literals.
-    dists = F.array(
-        *[
-            F.struct(
-                (
-                    F.lit(float(sum(x * x for x in c)))
-                    - 2.0
-                    * _dot(unit(F.col("q_vec")), F.array(*[F.lit(float(x)) for x in c]))
-                ).alias("d"),
-                F.lit(i).alias("list_id"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    probed = q.select(
-        "query_id",
-        "q_vec",
-        F.explode(F.slice(F.array_sort(dists), 1, n_probe)).alias("p"),
-    ).select("query_id", "q_vec", F.col("p.list_id").alias("list_id"))
-
-    scored = assigned.join(F.broadcast(probed), "list_id").select(
-        "query_id", "neighbor_id", cosine(F.col("q_vec"), F.col("c_vec")).alias("cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    return _scan(
+        corpus, queries, k, id_col, vec_col, centroids=centroids, n_probe=n_probe
     )
 
 
@@ -679,9 +687,9 @@ def quantize_int4_block(vec: Column, dim: int, block: int = 16) -> Column:
     range).
 
     Callers must STAGE ``amax`` as a projected column before building
-    ``recon`` on top of it (the sim3b/ivf staging lesson — inlining
-    re-evaluates the 16-element absmax per element). Map-only Column
-    arithmetic; 8× storage cut at 100 TB with per-block fidelity.
+    ``recon`` on top of it (inlining re-evaluates the 16-element absmax
+    per element). Map-only Column arithmetic; 8× storage cut at 100 TB
+    with per-block fidelity.
     """
     if dim % block != 0:
         raise ValueError(
@@ -793,7 +801,7 @@ def _fit_subspace_codebooks(spark, Xs, m_subs: int, ks: int, seed: int):
     of overhead, and the driver stops being a serial CPU bottleneck
     (measured: 16 serial fits = 3.9 s at sf0.1's 2k-row sample, 20-31 s
     at sf1's 16k-row sample — the whole pq_live cost VERDICT r11 #4
-    flagged). Each task runs the IDENTICAL ``_kmeanpp_lloyd`` call the
+    flagged). Each task runs the IDENTICAL ``_kmeanspp_lloyd`` call the
     serial loop ran (same slice, same ``seed + s``) in the same
     numpy/OpenBLAS build, so the codebooks are bit-identical — pinned-
     literal provenance (tools/probe_refit_pq_codebooks.py) is unaffected. The
@@ -834,20 +842,19 @@ def _fit_subspace_codebooks(spark, Xs, m_subs: int, ks: int, seed: int):
     return np.stack([parts[s] for s in range(m_subs)])
 
 
-def _ltr_dot(A, B):
-    """Left-to-right dot product over the LAST axis of two broadcastable
-    numpy arrays — explicit elementwise multiply + add chain, NO BLAS and
-    no FMA, so every intermediate is a correctly-rounded IEEE754 double in
-    strict left-to-right order. This makes ADC scores bit-identical to
-    any engine that accumulates dot products sequentially (DuckDB's
-    list_dot_product — proven against Spark's ltr ``aggregate`` by the
-    d11b/sim oracles), which is what lets sim5c put the PQ pruning itself
-    under a full hash compare. Cost: dsub(=4) elementwise ops per call —
-    negligible next to the Arrow transfer."""
-    acc = A[..., 0] * B[..., 0]
-    for i in range(1, A.shape[-1]):
-        acc = acc + A[..., i] * B[..., i]
-    return acc
+def _pq_codebooks(spark, Xs, codebooks, m_subs: int, ks: int, seed: int):
+    """The (m_subs, ks, dsub) PQ codebooks: fitted on the sample, or the
+    pinned ones checked against the requested shape."""
+    import numpy as np
+
+    if codebooks is None:
+        if Xs.shape[1] % m_subs != 0:
+            raise ValueError(f"m_subs={m_subs} must divide dim={Xs.shape[1]}")
+        return _fit_subspace_codebooks(spark, Xs, m_subs, ks, seed)
+    cb = np.asarray(codebooks, dtype=np.float64)
+    if cb.shape[:2] != (m_subs, ks):
+        raise ValueError(f"pinned codebooks shape {cb.shape} != ({m_subs}, {ks}, dsub)")
+    return cb
 
 
 def pq_topk(
@@ -869,216 +876,54 @@ def pq_topk(
 
     Train: the dim-D unit-normalized space splits into ``m_subs``
     subspaces; one seeded numpy k-means++/Lloyd fit per subspace learns a
-    ``ks``-centroid codebook from a DETERMINISTIC bounded sample — the
-    ``fit_sample`` hash-smallest corpus rows (xxhash64 order, id
-    tie-break: one TakeOrdered job, partition-layout-independent). That
-    replaces r6-r8's 16 distributed MLlib fits, which dominated pq_topk
-    wall (34.5 s at sf0.01 in the r8 verify gate): codebooks need
-    thousands of points, not the corpus — FAISS trains PQ the same way —
-    so at ANY corpus scale training is one bounded sample job plus
-    milliseconds of driver numpy. Encode: each corpus vector becomes
-    ``m_subs`` small codes via one Arrow-batched argmin — the corpus
-    compresses to m_subs bytes/vector at ks≤256 (64-dim float32 → 8 B:
-    32×), which is what lets a 100 TB embedding corpus live in cluster
-    memory. Search is ADC (asymmetric distance computation): per query one
-    (m_subs × ks) dot-product lookup table against the RAW query vector;
-    approx score = Σ_m LUT[m, code_m] — table lookups, no float math per
-    candidate. Scan shape (r13): ONE fused ``mapInPandas`` pass over the
-    unit corpus — encode, ADC lookup, per-partition top-R, and the exact
-    re-rank cosine of the per-batch survivors (the standard ADC
-    refinement step, absorbed: the batch already holds the true vectors,
-    so refinement costs no second corpus scan and no join) — queries'
-    LUTs in the closure (queries are an operationally small batch, like
-    ``cosine_topk``'s broadcast side), then per-query windows over the
-    ≤ partitions·n_q·R survivors: cut to R by approx, rank by exact cos.
-    No corpus shuffle anywhere; the corpus crosses the Python boundary
-    exactly once.
+    ``ks``-centroid codebook from the bounded deterministic sample
+    (``_fit_sample``) — FAISS trains PQ the same way. Encode: each corpus
+    vector becomes ``m_subs`` small codes (64-dim float32 → 8 B at
+    m_subs=8: 32×), which is what lets a 100 TB embedding corpus live in
+    cluster memory. Search is ADC (asymmetric distance computation): per
+    query one (m_subs × ks) lookup table against the query's unit vector;
+    approx score = Σ_m LUT[m, code_m]. The scan encodes, looks up, cuts to
+    the top R = rerank·k per query and re-ranks the survivors by their
+    exact cosine in the same batch — the standard ADC refinement, at no
+    second corpus pass.
 
-    Output matches sim1/sim3: (query_id, neighbor_id, cos, rank) with the
-    exact cosine for surviving candidates.
-
-    Zero-norm contract (same as ``ivf_topk``): zero-norm rows are EXCLUDED
-    from both corpus and queries, so a zero-norm query yields no output
-    rows — callers may see fewer distinct ``query_id``s than input queries.
-
-    ``rerank="auto"`` (r11, the production default — VERDICT r10 #3):
-    the re-rank multiplier scales with corpus size as
+    ``rerank="auto"``: the re-rank multiplier scales with corpus size as
     ``max(16, ceil(16 · (n/2000)^log10(2)))`` — it DOUBLES per decade of
     corpus growth, the constants read directly off the measured drift
     curve (ANN_RECALL_SCALE.json: pinned codebooks need rerank 16 for
     recall 0.98 at n≈2.0k and rerank 32 for 1.00 at n≈20.0k on the
-    adversarial out-of-fit union). Fixing the multiplier is what let
-    recall drift 0.98 → 0.84 at 10×; auto holds ≥ 0.95 at both measured
-    scales with no manual tuning, and stays sublinear (n=10⁹ → ~830·k
-    exact re-ranks per query — still a rounding error next to the scan).
-    Costs one count job on the checkpointed corpus.
+    adversarial out-of-fit union). A fixed multiplier let recall drift
+    0.98 → 0.84 at 10×; auto holds ≥ 0.95 at both measured scales and
+    stays sublinear (n=10⁹ → ~830·k exact re-ranks per query). n is the
+    fit sample's size when the sample holds the whole corpus; only a full
+    sample (or pinned codebooks) costs a count job.
 
     Pinned-codebook mode: pass ``codebooks`` (m_subs × ks × dsub) to skip
     the fit and quantize with a FROZEN codebook (the production shape —
-    FAISS trains PQ once and ships the index). All ADC arithmetic —
-    sub-centroid norms, encode argmin, LUT dots, the per-candidate
-    LUT-sum — is strict left-to-right double arithmetic (``_ltr_dot`` +
-    explicit add chains, no BLAS/FMA/pairwise reduction), so with literal
-    codebooks every approximate score is an engine-portable IEEE754 value
-    and ``sim5c_pq_pinned_topk``'s DuckDB oracle restates the ENTIRE
-    pruned ADC search, not just an exact twin.
+    FAISS trains PQ once and ships the index). All ADC arithmetic is
+    strict left-to-right double arithmetic, so with literal codebooks
+    every approximate score is an engine-portable IEEE754 value and
+    ``sim5c_pq_pinned_topk``'s DuckDB oracle restates the ENTIRE pruned
+    ADC search, not just an exact twin.
     """
-    import numpy as np
+    import math
 
-    def unit(vec: Column) -> Column:
-        return F.transform(vec, lambda x: F.try_divide(x.cast("double"), _norm(vec)))
-
-    # zero-norm vectors have no direction — not rankable by cosine, and
-    # their null unit-elements would poison the codebook fits; exclude
-    # both sides up front (same contract as ivf_topk; test corpora
-    # contain none, so the exact-twin oracle is unaffected)
-    corpus = corpus.filter(_norm(F.col(vec_col)) > 0)
-    queries = queries.filter(_norm(F.col(vec_col)) > 0)
-    c_unit = corpus.select(
-        F.col(id_col).alias("neighbor_id"), unit(F.col(vec_col)).alias("v")
-    )
-    # checkpoint only when the frame has >1 consumer (the multi-consumer
-    # rule): live fit adds a sample job, rerank="auto" adds a count job.
-    # The PINNED fixed-rerank path (sim5c) has exactly one consumer — the
-    # fused scan below — so a checkpoint there is a pure extra
-    # materialization pass (r13: the r12 shape also re-scanned for the
-    # exact re-rank join, which the fused scan absorbed).
-    if codebooks is None or rerank == "auto":
-        c_unit = c_unit.localCheckpoint(eager=True)  # train(sample)+count+scan
-
-    if rerank == "auto":
-        # scale-adaptive budget from the measured drift curve (see
-        # docstring); count is a cheap job over the checkpoint
-        import math
-
-        n_corpus = c_unit.count()
-        rerank = max(16, math.ceil(16 * max(n_corpus / 2000.0, 1.0) ** 0.30103))
-    elif not isinstance(rerank, int):
+    if rerank != "auto" and not isinstance(rerank, int):
         raise ValueError(f"rerank must be an int or 'auto', got {rerank!r}")
-
-    if codebooks is not None:
-        cb = np.asarray(codebooks, dtype=np.float64)  # (m_subs, ks, dsub)
-        if cb.shape[0] != m_subs or cb.shape[1] != ks:
-            raise ValueError(
-                f"pinned codebooks shape {cb.shape} != ({m_subs}, {ks}, dsub)"
-            )
-        dsub = cb.shape[2]
-        dim = m_subs * dsub
-    else:
-        # --- train: numpy k-means++ per subspace on a bounded hash sample
-        samp_rows = (
-            c_unit.orderBy(F.pmod(F.xxhash64("neighbor_id"), F.lit(1_000_003)).asc(),
-                           F.col("neighbor_id").asc())
-            .limit(fit_sample)
-            .collect()
-        )  # TakeOrderedAndProject: per-partition heap, deterministic sample
-        Xs = np.asarray([r["v"] for r in samp_rows], dtype=np.float64)
-        dim = Xs.shape[1]
-        if dim % m_subs != 0:
-            raise ValueError(f"m_subs={m_subs} must divide dim={dim}")
-        dsub = dim // m_subs
-        # one Spark job, one task per subspace — bit-identical to the old
-        # serial driver loop (see _fit_subspace_codebooks)
-        cb = _fit_subspace_codebooks(
-            corpus.sparkSession, Xs, m_subs, ks, seed
-        )  # (m_subs, ks, dsub)
-    # ‖codeword‖² via plain python left-to-right sums — the exact doubles
-    # the sim5c oracle builder embeds as literals (repr round-trips)
-    cnorm = np.array(
-        [
-            [float(sum(float(x) * float(x) for x in cw)) for cw in cb[s]]
-            for s in range(m_subs)
-        ]
-    )  # (m_subs, ks)
-
-    # --- fused encode + ADC scan + exact re-rank (r13): one Arrow pass ---
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"), unit(F.col(vec_col)).alias("v")
-    ).collect()
-    if not q_rows:
-        # empty query set: np.asarray([]) is 1-D, so the LUT build below
-        # would IndexError — the right answer is an empty result with the
-        # contract schema (the scan's id types)
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos double, rank int"
-        )
-    q_ids = np.array([r["query_id"] for r in q_rows])
-    Q = np.asarray([r["v"] for r in q_rows], dtype=np.float64)
-    Qs = Q.reshape(len(q_rows), m_subs, dsub)
-    # LUT[q, m, c] = q_sub · centroid  →  approx cos = Σ_m LUT[q, m, code_m]
-    # (_ltr_dot, not einsum: each entry must be the same IEEE754 double
-    # DuckDB's list_dot_product produces for the sim5c oracle)
-    lut = np.stack(
-        [_ltr_dot(Qs[:, s, None, :], cb[s][None, :, :]) for s in range(m_subs)],
-        axis=1,
-    )  # (nq, m, ks)
-    R = max(k, rerank * k)
-
-    def scan(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["neighbor_id"].to_numpy()
-            X = np.asarray(pdf["v"].tolist(), dtype=np.float64)  # (B, dim)
-            # pre-sort by neighbor id: the per-batch cut below must break
-            # approx-score ties to the LOWEST id (two vectors with the
-            # same 16 codes have bit-identical ADC sums), matching the
-            # global merge window and the sim5c oracle's ORDER BY approx
-            # DESC, neighbor_id ASC — argpartition alone resolved such
-            # ties arbitrarily
-            order = np.argsort(ids, kind="stable")
-            ids, X = ids[order], X[order]
-            # encode in-batch: ||x - c||² argmin == argmin(||c||² - 2x·c)
-            # per subspace (the constant ||x||² drops out); numpy argmin
-            # takes the FIRST minimum == SQL's ORDER BY d, code tie-break.
-            # _ltr_dot keeps the scores engine-portable. Identical
-            # arithmetic to the r12 encode pandas_udf — fused here so the
-            # codes never cross back into the JVM (guide §4: one Python
-            # boundary, not two).
-            Xsub = X.reshape(X.shape[0], m_subs, dsub)
-            C = np.empty((X.shape[0], m_subs), dtype=np.int64)
-            for s in range(m_subs):
-                d = cnorm[s] - 2.0 * _ltr_dot(Xsub[:, s, None, :], cb[s][None, :, :])
-                C[:, s] = d.argmin(axis=1)
-            # gather: S[q, b] = Σ_m lut[q, m, C[b, m]] — arange(m) ⊗ C(B,m)
-            # broadcast to (B, m), slice dim0 keeps q → (nq, B, m); the sum
-            # over m is an explicit left-to-right add chain (oracle-portable)
-            G = lut[:, np.arange(m_subs), C]
-            S = G[..., 0]
-            for s in range(1, m_subs):
-                S = S + G[..., s]
-            top = min(R, S.shape[1])
-            idx = np.argsort(-S, axis=1, kind="stable")[:, :top]
-            # exact cosine for the per-batch survivors, in the SAME strict
-            # left-to-right chain as the F.aggregate fold it replaces
-            # (_ltr_dot is the proven ltr-equivalent of Spark's aggregate
-            # and DuckDB's list_dot_product) — the batch already holds the
-            # true vectors, so the r12 re-rank join (a second corpus scan
-            # + two broadcast joins) is absorbed into this pass. The
-            # global top-R by (approx, id) is a subset of the per-batch
-            # top-R union at ANY batch boundary, so the window below sees
-            # every surviving candidate.
-            cos = _ltr_dot(Q[:, None, :], X[idx])  # (nq, top)
-            out = {
-                "query_id": np.repeat(q_ids, top),
-                "neighbor_id": ids[idx].ravel(),
-                "approx": np.take_along_axis(S, idx, axis=1).ravel(),
-                "cos": cos.ravel(),
-            }
-            yield pd.DataFrame(out)
-
-    parts = c_unit.select("neighbor_id", "v").mapInPandas(
-        scan, "query_id long, neighbor_id long, approx double, cos double"
-    )
-    # candidate cut by approx (the ADC semantics), then exact rank by cos —
-    # both windows share one query_id exchange
-    wr = Window.partitionBy("query_id").orderBy(F.desc("approx"), F.asc("neighbor_id"))
-    cands = parts.withColumn("r", F.row_number().over(wr)).filter(F.col("r") <= R)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    Xs = None
+    if codebooks is None:
+        Xs = _fit_sample(corpus, id_col, vec_col, fit_sample)
+        if not len(Xs):  # nothing rankable: the plain scan returns empty
+            return _scan(corpus, queries, k, id_col, vec_col)
+    cb = _pq_codebooks(corpus.sparkSession, Xs, codebooks, m_subs, ks, seed)
+    if rerank == "auto":
+        if Xs is not None and len(Xs) < fit_sample:
+            n = len(Xs)
+        else:
+            n = corpus.filter(_norm(F.col(vec_col)) > 0).count()
+        rerank = max(16, math.ceil(16 * max(n / 2000.0, 1.0) ** 0.30103))
+    return _scan(
+        corpus, queries, k, id_col, vec_col, R=max(k, rerank * k), codebooks=cb
     )
 
 
@@ -1101,12 +946,12 @@ def ivfadc_topk(
     FAISS ``IndexIVFPQ``): an inverted-file coarse quantizer routes each
     query to its ``n_probe`` nearest lists, and ONLY rows in probed lists
     are scored, by PQ asymmetric-distance lookup, then the top
-    ``rerank·k`` survivors are exactly re-ranked. This composes the
-    engine's two pruning halves — ``ivf_topk``'s routing (scan
-    ~n_probe/n_lists of the corpus) and ``pq_topk``'s compression (scan
-    bytes, not floats) — which is how a 100 TB embedding corpus is
-    actually served: compressed codes resident in memory, per-query work
-    bounded by probed-list size, exact math only on rerank·k rows.
+    ``rerank·k`` survivors are exactly re-ranked — every optional stage of
+    the scan at once. This composes ``ivf_topk``'s routing (score
+    ~n_probe/n_lists of the corpus) and ``pq_topk``'s compression, which
+    is how a 100 TB embedding corpus is served: compressed codes resident
+    in memory, per-query work bounded by probed-list size, exact math only
+    on rerank·k rows.
 
     Codes are built on the RAW unit vectors, not list residuals
     (FAISS's ``by_residual=False`` mode): residual encoding couples the
@@ -1118,171 +963,21 @@ def ivfadc_topk(
     Pinned mode (both ``centroids`` and ``codebooks`` given) skips all
     fitting — the production shape, and the fully-oracled registry entry
     ``sim8_ivfadc_pinned_topk``. Live mode fits both quantizers on one
-    bounded deterministic sample (the shared ``fit_sample``
-    hash-smallest rows). Query probe ranking runs DRIVER-side on the
-    collected query batch with ``_ltr_dot`` + python left-to-right
-    ``sum(x*x)`` centroid norms — the identical IEEE754 doubles the
-    oracle's ``cn - 2·list_dot_product(uv, c)`` literals produce, with
-    numpy's stable argsort matching its d ASC, list ASC tie-break.
-
-    Zero-norm contract: as ``ivf_topk``/``pq_topk`` — zero-norm rows are
-    excluded from both sides.
+    ``_fit_sample``, with √(sample size) lists.
     """
-    import numpy as np
+    import math
 
-    def unit(vec: Column) -> Column:
-        return F.transform(vec, lambda x: F.try_divide(x.cast("double"), _norm(vec)))
-
-    corpus = corpus.filter(_norm(F.col(vec_col)) > 0)
-    queries = queries.filter(_norm(F.col(vec_col)) > 0)
-    # staged norm → unit → assignment (the ivf_topk codegen lesson); no
-    # checkpoint: the live fit sample and the fused scan below each read
-    # it once (see the note at c_routed)
-    from consumer_loans_analysis_spark.operators.curation import kmeans_assign
-
-    c_unit = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            _norm(F.col(vec_col)).alias("_n"),
-            F.col(vec_col).alias("_raw"),
-        )
-        .select(
-            "neighbor_id",
-            F.transform(
-                F.col("_raw"), lambda x: F.try_divide(x.cast("double"), F.col("_n"))
-            ).alias("v"),
-        )
-    )
-
+    Xs = None
     if centroids is None or codebooks is None:
-        samp_rows = (
-            c_unit.orderBy(F.pmod(F.xxhash64("neighbor_id"), F.lit(1_000_003)).asc(),
-                           F.col("neighbor_id").asc())
-            .limit(fit_sample)
-            .collect()
-        )
-        Xs = np.asarray([r["v"] for r in samp_rows], dtype=np.float64)
+        Xs = _fit_sample(corpus, id_col, vec_col, fit_sample)
+        if not len(Xs):  # nothing rankable: the plain scan returns empty
+            return _scan(corpus, queries, k, id_col, vec_col)
     if centroids is None:
-        import math
-
-        n_lists = max(2, int(math.sqrt(max(len(Xs), 4))))
-        centroids = [
-            [float(x) for x in c] for c in _kmeanspp_lloyd(Xs, n_lists, seed)
-        ]
-    if codebooks is None:
-        dim = len(centroids[0])
-        if dim % m_subs != 0:
-            raise ValueError(f"m_subs={m_subs} must divide dim={dim}")
-        dsub = dim // m_subs
-        # one Spark job, one task per subspace — bit-identical to the old
-        # serial driver loop (see _fit_subspace_codebooks)
-        cb = _fit_subspace_codebooks(corpus.sparkSession, Xs, m_subs, ks, seed)
-    else:
-        cb = np.asarray(codebooks, dtype=np.float64)
-        if cb.shape[0] != m_subs or cb.shape[1] != ks:
-            raise ValueError(
-                f"pinned codebooks shape {cb.shape} != ({m_subs}, {ks}, dsub)"
-            )
-        dsub = cb.shape[2]
-    n_lists = len(centroids)
-    cnorm = np.array(
-        [
-            [float(sum(float(x) * float(x) for x in cw)) for cw in cb[s]]
-            for s in range(m_subs)
-        ]
-    )
-
-    # r13: no checkpoint — after the fused scan below absorbed the exact
-    # re-rank join, this frame has exactly ONE consumer (the scan); in
-    # live mode the fit sample was already collected from c_unit above,
-    # so nothing is computed twice without it (the multi-consumer rule
-    # cuts the other way here: a checkpoint would be a pure extra
-    # materialization pass).
-    c_routed = c_unit.select(
-        "neighbor_id", "v", kmeans_assign(F.col("v"), centroids).alias("list_id")
-    )
-
-    # --- query side: probe ranking + ADC LUTs, driver-side --------------
-    # ids keep their input type (r11 ADVICE: long was hardcoded, so string
-    # vector ids crashed at runtime) — the mapInPandas schema and the
-    # rebuilt query frame both derive from the actual schemas
-    q_id_t = queries.schema[id_col].dataType.simpleString()
-    c_id_t = corpus.schema[id_col].dataType.simpleString()
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"), unit(F.col(vec_col)).alias("v")
-    ).collect()
-    if not q_rows:
-        # empty query set (r11 ADVICE: np.asarray([]) is 1-D, so the probe
-        # distance broadcast below would IndexError) — the right answer is
-        # an empty result with the contract schema
-        return queries.sparkSession.createDataFrame(
-            [],
-            f"query_id {q_id_t}, neighbor_id {c_id_t}, cos double, rank int",
-        )
-    q_ids = np.array([r["query_id"] for r in q_rows])
-    Q = np.asarray([r["v"] for r in q_rows], dtype=np.float64)
-    cen = np.asarray(centroids, dtype=np.float64)
-    cen_norm = np.array([float(sum(float(x) * float(x) for x in c)) for c in centroids])
-    # d[q, l] = ‖c_l‖² − 2·u_q·c_l — sim3b's exact routing form; stable
-    # argsort == the oracle's ORDER BY d ASC, list ASC
-    dq = cen_norm[None, :] - 2.0 * _ltr_dot(Q[:, None, :], cen[None, :, :])
-    probe_mask = np.zeros((len(q_rows), n_lists), dtype=bool)
-    order = np.argsort(dq, axis=1, kind="stable")[:, :n_probe]
-    np.put_along_axis(probe_mask, order, True, axis=1)
-    Qs = Q.reshape(len(q_rows), m_subs, dsub)
-    lut = np.stack(
-        [_ltr_dot(Qs[:, s, None, :], cb[s][None, :, :]) for s in range(m_subs)],
-        axis=1,
-    )
-    R = max(k, rerank * k)
-
-    def scan(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["neighbor_id"].to_numpy()
-            lids = pdf["list_id"].to_numpy()
-            X = np.asarray(pdf["v"].tolist(), dtype=np.float64)  # (B, dim)
-            order = np.argsort(ids, kind="stable")  # tie-break as pq_topk
-            ids, lids, X = ids[order], lids[order], X[order]
-            # encode in-batch — identical arithmetic to pq_topk's fused
-            # scan (the r12 encode pandas_udf, fused so codes never cross
-            # back into the JVM)
-            Xsub = X.reshape(X.shape[0], m_subs, dsub)
-            C = np.empty((X.shape[0], m_subs), dtype=np.int64)
-            for s in range(m_subs):
-                d = cnorm[s] - 2.0 * _ltr_dot(Xsub[:, s, None, :], cb[s][None, :, :])
-                C[:, s] = d.argmin(axis=1)
-            valid = probe_mask[:, lids]  # (nq, B): row in a probed list?
-            G = lut[:, np.arange(m_subs), C]
-            S = G[..., 0]
-            for s in range(1, m_subs):
-                S = S + G[..., s]
-            S = np.where(valid, S, -np.inf)  # unprobed rows never rank
-            top = min(R, S.shape[1])
-            idx = np.argsort(-S, axis=1, kind="stable")[:, :top]
-            keep = np.take_along_axis(valid, idx, axis=1).ravel()
-            # exact cosine of the survivors in the same ltr chain as the
-            # F.aggregate fold it replaces (see pq_topk)
-            cos = _ltr_dot(Q[:, None, :], X[idx])  # (nq, top)
-            out = {
-                "query_id": np.repeat(q_ids, top)[keep],
-                "neighbor_id": ids[idx].ravel()[keep],
-                "approx": np.take_along_axis(S, idx, axis=1).ravel()[keep],
-                "cos": cos.ravel()[keep],
-            }
-            yield pd.DataFrame(out)
-
-    parts = c_routed.mapInPandas(
-        scan, f"query_id {q_id_t}, neighbor_id {c_id_t}, approx double, cos double"
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("approx"), F.asc("neighbor_id"))
-    cands = parts.withColumn("r", F.row_number().over(wr)).filter(F.col("r") <= R)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+        centroids = _kmeanspp_lloyd(Xs, max(2, math.isqrt(len(Xs))), seed)
+    cb = _pq_codebooks(corpus.sparkSession, Xs, codebooks, m_subs, ks, seed)
+    return _scan(
+        corpus, queries, k, id_col, vec_col, R=max(k, rerank * k),
+        centroids=centroids, n_probe=n_probe, codebooks=cb,
     )
 
 

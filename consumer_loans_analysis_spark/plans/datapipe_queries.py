@@ -318,8 +318,9 @@ def d13_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sim1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force exact top-5 cosine neighbors for query vectors (id < 5):
-    query set broadcast, corpus never shuffles."""
+    """Exact top-5 cosine neighbors for the query vectors (id < 5): the
+    top-k scan with no optional stage — the collected query batch closes
+    over one corpus pass, and the corpus never shuffles."""
     emb = read_table(spark, sf_dir, "embeddings")
     out = similarity.cosine_topk(
         emb.filter(F.col("vec_id") >= 5), emb.filter(F.col("vec_id") < 5), k=5
@@ -695,7 +696,9 @@ def mm3_sample_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("sim3_ivf_topk")  # no SQL oracle: KMeans quantizer isn't SQL-expressible
 def sim3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-5 (KMeans coarse quantizer, 3-probe). Driver
+    """IVF approximate top-5 (live spherical k-means coarse quantizer,
+    3-probe): the top-k scan assigns each corpus row to its list in-batch
+    and scores only rows in the query's probed lists, exactly. Driver
     records a rows-only check; recall vs the exact search is asserted in
     tests/test_operators.py::test_ivf_recall."""
     emb = read_table(spark, sf_dir, "embeddings")
@@ -707,14 +710,15 @@ def sim3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("sim5_pq_topk")  # no SQL oracle: KMeans codebooks aren't SQL-expressible
 def sim5_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ADC top-5 (Jégou et al. 2011; the FAISS
-    IVFADC compression half): 16 subspace codebooks × 64 codes compress
-    the 64-dim corpus 16×, an asymmetric-distance table scan proposes
-    candidates, exact re-rank of the top 4k fixes the ranking. Codebooks
+    """Product-quantization ADC top-5: the top-k scan encodes each corpus
+    row with 16 live subspace codebooks × 64 codes (16× compression of the
+    64-dim corpus), cuts to the top R per query by the asymmetric-distance
+    lookup and re-ranks those survivors exactly in the same batch. This is
+    the compression half of FAISS IVFADC (Jégou et al. 2011). Codebooks
     sized for this corpus's razor-thin margin (planted pairs at cos
     0.45-0.51 vs random up to 0.4497 — measured recall 0.88@rerank4,
     1.00@rerank16; 8×16 books lose the margin to quantization noise).
-    rerank="auto" (r11): the re-rank budget scales with corpus size —
+    rerank="auto": the re-rank budget scales with corpus size —
     doubles per decade of growth, constants from the measured drift
     curve (ANN_RECALL_SCALE.json) — so THIS query keeps ≥0.95 recall at
     any SF without retuning; the production default, wired here.
@@ -812,10 +816,11 @@ def _sim5c_oracle() -> str:
 
 @query("sim5c_pq_pinned_topk", oracle=_sim5c_oracle())
 def sim5c_pq_pinned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim5's approximate rerank=4 ADC search with FROZEN codebooks
-    (``operators/pq_codebooks.py`` — pq_topk's own per-subspace fit,
-    pinned once on sf0.01; the production shape: FAISS trains PQ once and
-    ships the index). With literal codebooks and pq_topk's strictly
+    """sim5's approximate rerank=4 ADC search, in the same fused scan,
+    with FROZEN codebooks (``operators/pq_codebooks.py``: pq_topk's own
+    per-subspace fit, pinned once on sf0.01; the production shape, since
+    FAISS trains PQ once and ships the index). With literal codebooks and
+    pq_topk's strictly
     left-to-right ADC arithmetic (see ``similarity._ltr_dot``), encoding,
     LUT scores, candidate pruning and the exact re-rank are ALL
     engine-portable — so unlike sim5 (rows-only: live fit) and sim5b
@@ -946,17 +951,17 @@ def _sim8_oracle(n_probe: int = 5, rerank_r: int = 20) -> str:
 
 @query("sim8_ivfadc_pinned_topk", oracle=_sim8_oracle())
 def sim8_ivfadc_pinned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFADC (r11) — the FAISS ``IndexIVFPQ`` production composition:
-    the pinned coarse quantizer (sim3b's ``operators/ivf_centroids.py``)
-    routes each query to its 5-of-8 nearest lists, ONLY rows in probed
-    lists are ADC-scored with the pinned PQ codebooks (sim5c's
-    ``operators/pq_codebooks.py``, by_residual=False so both pinned
-    states stay individually proven), and the top-20 survivors re-rank
-    exactly. BOTH prunings — which rows are never scored (routing) and
+    """IVFADC, the FAISS ``IndexIVFPQ`` production composition, runs every
+    optional stage of the top-k scan at once: the pinned coarse quantizer
+    (sim3b's ``operators/ivf_centroids.py``) routes each query to its
+    5-of-8 nearest lists, ONLY rows in probed lists are ADC-scored with
+    the pinned PQ codebooks (sim5c's ``operators/pq_codebooks.py``,
+    by_residual=False so both pinned states stay individually proven),
+    and the top-20 survivors re-rank exactly. BOTH prunings — which rows are never scored (routing) and
     which scored rows are never re-ranked (ADC cut) — sit under one
     full DuckDB hash compare; the oracle is the literal composition of
     the two proven single-path oracles plus a probed-list equi-join.
-    Scale: the corpus scan cost is codes-in-probed-lists, the shuffle
+    Scale: one corpus pass, exact math only for probed rows, the shuffle
     carries ≤ partitions·n_q·R candidate ids, exact math touches 20
     rows/query — the 100 TB serving shape. Recall vs the exact scan is
     gated in tests/test_operators.py::test_ivfadc_pinned_recall."""
@@ -989,10 +994,10 @@ _EXACT_TOPK_TAIL = """
 @query("sim4_ivf_full_probe_topk", oracle=_COSINE_SQL + _EXACT_TOPK_TAIL)
 def sim4_ivf_full_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with n_probe == n_lists probes every list, so the result must
-    EQUAL exact brute-force top-k — this puts the IVF plumbing itself
-    (spherical-KMeans routing, broadcast centroid expressions, the list
-    equi-join, the per-query window) under the DuckDB hash-compare. sim3
-    stays the approximate 3-probe path whose recall is tested separately."""
+    EQUAL exact top-k — this puts the scan's route stage itself (the
+    spherical k-means fit, the in-batch list assignment, the probe mask,
+    the merge window) under the DuckDB hash compare. sim3 stays the
+    approximate 3-probe path whose recall is tested separately."""
     emb = read_table(spark, sf_dir, "embeddings")
     out = similarity.ivf_topk(
         emb.filter(F.col("vec_id") >= 5),
@@ -1031,10 +1036,11 @@ def sim4_ivf_full_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sim6_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Progressive (funnel) retrieval — Matryoshka-style adaptive search
-    (Kusupati et al. 2022): coarse top-20 scan on the FIRST 16 of 64
-    dimensions (4× fewer scan FLOPs/bytes), exact full-dim re-rank of the
-    survivors. The ANN ladder's trained-state-free rung: unlike sim3/sim5
+    """Progressive (funnel) retrieval: the top-k scan cuts to the top 20
+    by the cosine of the FIRST 16 of 64 dimensions and re-ranks those
+    survivors by the full-dimension cosine, in one corpus pass. This is
+    Matryoshka-style adaptive search (Kusupati et al. 2022). The ANN
+    ladder's trained-state-free rung: unlike sim3/sim5
     the candidate set is a pure function of the data, so the approximate
     path itself sits under the full DuckDB hash compare — no pinning, no
     twin. Funnel recall vs the exact scan is gated in
@@ -1104,10 +1110,11 @@ def _sim3b_oracle() -> str:
 
 @query("sim3b_ivf_pinned_topk", oracle=_sim3b_oracle())
 def sim3b_ivf_pinned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim3's approximate pruned-probe (5-of-8) IVF search with a FROZEN coarse
-    quantizer (``operators/ivf_centroids.py`` — ivf_topk's own sample fit,
-    pinned once on sf0.01; the production shape: quantizers are trained
-    once and shipped with the index). With literal centroids the PRUNING
+    """sim3's approximate pruned-probe (5-of-8) IVF search, in the same
+    fused scan, with a FROZEN coarse quantizer
+    (``operators/ivf_centroids.py``: ivf_topk's own sample fit, pinned once
+    on sf0.01; the production shape, since quantizers are trained once and
+    shipped with the index). With literal centroids the PRUNING
     itself — which lists each query probes, which corpus rows are never
     scored — is deterministic and SQL-expressible, so unlike sim3
     (rows-only: live fit) and sim4 (full probe ≡ exact), this puts the
@@ -1130,10 +1137,10 @@ def sim3b_ivf_pinned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("sim5b_pq_full_rerank_topk", oracle=_COSINE_SQL + _EXACT_TOPK_TAIL)
 def sim5b_pq_full_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ with ``rerank·k ≥ |corpus|`` re-ranks EVERY candidate exactly, so
-    the result must EQUAL brute-force top-k — the sim4 trick applied to
-    sim5: the codebook fit, ADC LUT scan, per-partition argpartition and
-    candidate plumbing all sit under the DuckDB hash-compare (any dropped
-    or duplicated candidate breaks the exact ranking). sim5 stays the
+    the result must EQUAL exact top-k — the sim4 trick applied to sim5:
+    the codebook fit, the in-batch encode and ADC cut, and the merge
+    windows all sit under the DuckDB hash compare (any dropped or
+    duplicated candidate breaks the exact ranking). sim5 stays the
     approximate rerank=4 path whose recall is gated in
     tests/test_operators.py::test_pq_recall. rerank=400·k=5 → R=2000 ≥
     corpus at every test sf (500/500/2000 embeddings)."""
@@ -3235,8 +3242,7 @@ def d11b_semantic_dedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _assigned_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings with their pinned-SemDeDup-centroid assignment as a
     ``_a = (d, bucket)`` struct: the staged norm→unit→assign projection
-    chain (each evaluated once per row — the ivf_topk staging pattern;
-    same unit expression as semantic_dedup's pinned blocker, so the d11b
+    chain (each evaluated once per row; same unit expression as semantic_dedup's pinned blocker, so the d11b
     oracle's u/dd CTEs restate it exactly)."""
     from consumer_loans_analysis_spark.operators.curation import kmeans_assign_full
     from consumer_loans_analysis_spark.operators.semdedup_centroids import (

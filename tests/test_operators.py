@@ -1576,25 +1576,85 @@ def test_compaction_plan_conservation_and_fill(spark, sf_dir):
         assert 0.0 < r["fill_frac"] <= 1.0 + r["max_file"] / cap + 1e-9, r
 
 
-def test_pq_topk_empty_queries(spark, sf_dir):
-    """An empty query set yields an empty result with the same schema as
-    a non-empty search (the ivfadc_topk contract), not a worker
-    IndexError from a 1-D query matrix."""
-    from consumer_loans_analysis_spark.operators import similarity
+def _topk_searches():
+    """The five top-k searches, live and pinned, at small test configs."""
+    from consumer_loans_analysis_spark.operators.ivf_centroids import IVF_CENTROIDS
     from consumer_loans_analysis_spark.operators.pq_codebooks import PQ_CODEBOOKS
+
+    pinned = {"centroids": IVF_CENTROIDS, "codebooks": PQ_CODEBOOKS}
+    return {
+        "cosine": lambda c, q: similarity.cosine_topk(c, q, k=5),
+        "prefix_rerank": lambda c, q: similarity.prefix_rerank_topk(c, q, k=5),
+        "ivf": lambda c, q: similarity.ivf_topk(c, q, k=5, n_lists=4, n_probe=2),
+        "ivf_pinned": lambda c, q: similarity.ivf_topk(
+            c, q, k=5, n_probe=5, centroids=IVF_CENTROIDS
+        ),
+        "pq": lambda c, q: similarity.pq_topk(c, q, k=5, m_subs=16, ks=16),
+        "pq_pinned": lambda c, q: similarity.pq_topk(
+            c, q, k=5, m_subs=16, ks=64, codebooks=PQ_CODEBOOKS
+        ),
+        "ivfadc": lambda c, q: similarity.ivfadc_topk(
+            c, q, k=5, n_probe=2, m_subs=16, ks=16
+        ),
+        "ivfadc_pinned": lambda c, q: similarity.ivfadc_topk(
+            c, q, k=5, n_probe=5, m_subs=16, ks=64, **pinned
+        ),
+    }
+
+
+@pytest.mark.parametrize("empty_side", ["queries", "corpus"])
+@pytest.mark.parametrize(
+    "name",
+    ["cosine", "prefix_rerank", "ivf", "ivf_pinned", "pq", "pq_pinned",
+     "ivfadc", "ivfadc_pinned"],
+)
+def test_topk_empty_input(spark, sf_dir, name, empty_side):
+    """An empty query set or an empty corpus yields an empty result with
+    the same schema as a non-empty search — not a worker IndexError from a
+    1-D query matrix, nor a live fit on an empty sample."""
     from consumer_loans_analysis_spark.sources.readers import read_table
 
+    search = _topk_searches()[name]
     emb = read_table(spark, sf_dir, "embeddings")
-
-    def search(queries):
-        return similarity.pq_topk(
-            emb, queries, k=5, m_subs=16, ks=64, codebooks=PQ_CODEBOOKS
-        )
-
-    empty = search(emb.limit(0))
+    corpus, queries = emb.filter(F.col("vec_id") >= 5), emb.filter(F.col("vec_id") < 5)
+    full = search(corpus, queries)
+    if empty_side == "queries":
+        empty = search(corpus, queries.limit(0))
+    else:
+        empty = search(corpus.limit(0), queries)
     assert empty.collect() == []
-    full = search(emb.filter(F.col("vec_id") < 2))
     assert empty.schema.simpleString() == full.schema.simpleString()
+
+
+@pytest.mark.parametrize(
+    "name", ["cosine", "prefix_rerank", "ivf_pinned", "pq_pinned", "ivfadc_pinned"]
+)
+def test_topk_string_ids(spark, sf_dir, name):
+    """String ids give the same neighbours, ranks and cosines as the long
+    ids they were made from. Zero-padding keeps the id order, so score ties
+    break the same way; the quantizers are pinned because a live fit's
+    sample order hashes the id value."""
+    from consumer_loans_analysis_spark.sources.readers import read_table
+
+    search = _topk_searches()[name]
+    emb = read_table(spark, sf_dir, "embeddings")
+    corpus, queries = emb.filter(F.col("vec_id") >= 5), emb.filter(F.col("vec_id") < 5)
+
+    def as_str(df):
+        return df.withColumn("vec_id", F.lpad(F.col("vec_id").cast("string"), 8, "0"))
+
+    def rows(out):
+        return {
+            (int(r["query_id"]), int(r["neighbor_id"]), r["rank"], r["cos"])
+            for r in out.collect()
+        }
+
+    want = rows(search(corpus, queries))
+    str_out = search(as_str(corpus), as_str(queries))
+    got = rows(str_out)
+    assert str_out.schema["query_id"].dataType.simpleString() == "string"
+    assert str_out.schema["neighbor_id"].dataType.simpleString() == "string"
+    assert len(want) == 25 and got == want
 
 
 def test_gopher_repetition_rules_hand_computed(spark):

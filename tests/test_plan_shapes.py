@@ -8,6 +8,8 @@ catch the regression even at test SF where the bad shapes are fast.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -121,6 +123,27 @@ def test_similarity_build_action_free(spark, sf_dir):
     # the plan still executes correctly (dim matches the data)
     assert df.columns == ["id_a", "id_b", "cos"]
     df.limit(1).collect()
+
+
+@pytest.mark.parametrize("name", ["sim5_pq_topk", "sim3_ivf_topk"])
+def test_live_ann_build_jobs(spark, sf_dir, name):
+    """Building a live-fit ANN query at sf0.01 runs exactly three Spark
+    jobs: the parquet footer read, the fit-sample collect and the query
+    collect — no checkpoint of the corpus and no count (the default list
+    count and the auto re-rank budget both read the fit sample's size)."""
+    from consumer_loans_analysis_spark.plans import registry
+
+    registry.load_all()
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    sc = spark.sparkContext
+    group = f"live_ann_build_{name}"
+    sc.setJobGroup(group, "ANN construction job count")
+    try:
+        registry.QUERIES[name](spark, sf01)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(jobs) == 3, jobs
 
 
 def test_dedup_build_action_free(spark, sf_dir):
@@ -290,7 +313,7 @@ def test_cosine_topk_has_no_corpus_window(spark, sf_dir):
 
 
 def test_ann_merge_windows_have_group_limit(spark, sf_dir):
-    """sim2/sim3/sim5's rank<=k merge windows must carry WindowGroupLimit
+    """The ANN searches' rank<=k merge windows must carry WindowGroupLimit
     (Spark's partial per-partition top-k before the exchange) — without
     it every scored candidate row shuffles and sorts in full. Pins the
     optimizer shape so a refactor that breaks the row_number()<=k
@@ -325,17 +348,13 @@ def test_ann_merge_windows_have_group_limit(spark, sf_dir):
     }
     for name, plan in plans.items():
         assert "WindowGroupLimit" in plan, (name, plan)
-    # the funnel's rerank joins must be broadcasts (candidates and the
-    # query batch are tiny) — a shuffle join here would exchange the
-    # corpus for a |q|*R-row lookup
-    assert "BroadcastHashJoin" in plans["prefix_rerank"], plans["prefix_rerank"]
-    # r13 fused ADC scan: encode + ADC + exact re-rank run in ONE
-    # mapInPandas pass (the batch holds the true vectors), so the pq and
-    # ivfadc paths carry NO join at all — the corpus crosses the Python
-    # boundary exactly once and the only exchange is the per-query
-    # candidate merge window. A Join or a second Python node here means
-    # the r12 rerank-join shape (an extra corpus scan) regressed back in.
-    for name in ("pq", "pq_pinned", "ivfadc_pinned"):
+    # every fused search routes, scores and re-ranks in ONE mapInPandas
+    # pass (the batch holds the true vectors), so none carries a join —
+    # the corpus crosses the Python boundary exactly once and the only
+    # exchange is the per-query candidate merge window. A Join or a
+    # second Python node here means a re-rank join (an extra corpus scan)
+    # or a Column-expression routing path came back.
+    for name in ("ivf", "ivf_pinned", "pq", "pq_pinned", "ivfadc_pinned", "prefix_rerank"):
         p = plans[name]
         assert "Join" not in p, (name, p)
         assert p.count("MapInPandas") == 1, (name, p)

@@ -8,19 +8,19 @@ command restores the pin:
     python -m tools.probe_refit_ivf_centroids [sf_dir]
 
 It re-runs the exact fit ``similarity.ivf_topk`` performs when no
-centroids are passed (unit-normalize, hash-smallest 16384-row sample,
-seeded numpy k-means++/Lloyd with k=8/seed=42), rewrites the module with
-the new literals, and prints a reminder to re-verify sim3b.
+centroids are passed (the unit-normalized hash-smallest 16384-row
+``similarity._fit_sample``, seeded numpy k-means++/Lloyd with
+k=8/seed=42), rewrites the module with the new literals, and prints a
+reminder to re-verify sim3b.
 """
 
 from __future__ import annotations
 
 import sys
 
-import numpy as np
 from pyspark.sql import functions as F
 
-from consumer_loans_analysis_spark.operators.similarity import _kmeanspp_lloyd, _norm
+from consumer_loans_analysis_spark.operators.similarity import _fit_sample, _kmeanspp_lloyd
 from consumer_loans_analysis_spark.session import get_spark
 from consumer_loans_analysis_spark.sources.readers import read_table
 
@@ -32,18 +32,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("refit_ivf_centroids")
     emb = read_table(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= 5).filter(_norm(F.col("embedding")) > 0)
-    unit = F.transform(
-        F.col("embedding"),
-        lambda x: F.try_divide(x.cast("double"), _norm(F.col("embedding"))),
-    )
-    samp = (
-        corpus.select(F.col("vec_id").alias("sid"), unit.alias("u"))
-        .orderBy(F.pmod(F.xxhash64("sid"), F.lit(1_000_003)).asc(), F.col("sid").asc())
-        .limit(FIT_SAMPLE)
-        .collect()
-    )
-    Xs = np.asarray([r["u"] for r in samp], dtype=np.float64)
+    Xs = _fit_sample(emb.filter(F.col("vec_id") >= 5), fit_sample=FIT_SAMPLE)
     cents = [[float(x) for x in c] for c in _kmeanspp_lloyd(Xs, N_LISTS, SEED)]
 
     with open(MODULE) as fh:
