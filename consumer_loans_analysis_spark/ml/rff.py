@@ -19,8 +19,8 @@ Scale shape: fit computes γ in ONE aggregation over the vector column
 (no collect of row data) and draws (W, b) on the driver — d×D doubles,
 KBs to low MBs, broadcast in the UDF closure. Transform is one
 Arrow-batched pandas UDF doing a batch×d @ d×D GEMM (the same "dense
-projection beats per-element Column exprs" call as
-``operators/similarity._rh_band_keys_udf``) — map-only, no shuffle, so
+GEMM beats per-element Column exprs" call as the near-dup pair kernel
+``operators/similarity._near_pairs``) — map-only, no shuffle, so
 the featurization runs at 100 TB exactly like any projection. A
 D-per-element Column-expression formulation was rejected: d·D ≈ 50k+
 expressions is compile-bound (see PLANS.md wide-plan note).

@@ -219,6 +219,33 @@ def kmeans_assign(unit_vec: Column, centroids: list[list[float]]) -> Column:
     return kmeans_assign_full(unit_vec, centroids)["bucket"]
 
 
+def kmeans_assigned(
+    emb: DataFrame, centroids: list[list[float]], vec_col: str, keep: list[str]
+) -> DataFrame:
+    """``keep`` plus ``_a = kmeans_assign_full(unit(vec_col), centroids)``:
+    the staged norm → unit → assign projection chain. The norm, then the
+    unit vector, are projected columns so each is evaluated once per row —
+    inlining the unit vector into the assignment re-evaluates the
+    64-element norm per element AND per centroid through interpreted
+    higher-order expressions (~2× on d11b). A zero-norm row's unit vector
+    is the zero vector (coalesced try_divide), which lands in some cluster
+    and pairs with nothing. The d11b/o14/dq4 oracles' u/dd CTEs restate
+    this chain exactly."""
+    sq = F.aggregate(
+        F.transform(F.col(vec_col), lambda y: y * y), F.lit(0.0), lambda a, y: a + y
+    )
+    unit = F.transform(
+        F.col(vec_col),
+        lambda x: F.coalesce(F.try_divide(x.cast("double"), F.col("_n")), F.lit(0.0)),
+    )
+    staged = keep + [vec_col] * (vec_col not in keep)
+    return (
+        emb.select(*staged, F.sqrt(sq).alias("_n"))
+        .select(*keep, unit.alias("_u"))
+        .select(*keep, kmeans_assign_full(F.col("_u"), centroids).alias("_a"))
+    )
+
+
 def semantic_dedup(
     emb: DataFrame,
     *,
@@ -242,125 +269,60 @@ def semantic_dedup(
     - ``blocker='signlsh'`` (default): deterministic axis-aligned sign-LSH
       bucket (``similarity.sign_bucket``) — engine-portable and
       SQL-oracle-able (the d11 oracle).
-    - ``blocker='kmeans'``: the PAPER's blocker proper — a fitted
-      spherical MLlib KMeans (vectors L2-normalized, so euclidean-nearest
-      == cosine-nearest centroid) with ``n_clusters`` lists. Data-adaptive
-      bucket sizes (sign-LSH buckets go empty/hot under anisotropic
-      embeddings); NOT SQL-expressible (iterative fit), so its gate is the
-      pytest recall bound vs the exact small-corpus answer, sim3-style.
-      The fit is one KMeans training action at construction time.
-      With ``centroids`` given, the fit is SKIPPED and assignment runs as
-      pure Column expressions against the literal centroid arrays
-      (nearest = min (‖c‖² − 2·u·c, cluster_id) — unit-norm u makes the
-      dropped ‖u‖² constant irrelevant; struct-min ties break to the
-      lowest cluster id). That makes construction action-free AND the
-      whole query SQL-expressible — the d11b oracle pins the same
-      centroids as SQL literals. This is also the realistic 100 TB shape:
-      quantizers are fitted once on a sample and FROZEN, then assignment
-      is a deterministic scan-rate function shipped with the job.
+    - ``blocker='kmeans'``: the PAPER's blocker proper — spherical k-means
+      (vectors L2-normalized, so euclidean-nearest == cosine-nearest
+      centroid) with ``n_clusters`` lists. Data-adaptive bucket sizes
+      (sign-LSH buckets go empty/hot under anisotropic embeddings). Without
+      ``centroids`` the fit is the ANN quantizers' own: the seeded numpy
+      k-means++/Lloyd (``similarity._kmeanspp_lloyd``) on the bounded
+      deterministic ``similarity._fit_sample`` — one collect at
+      construction; NOT SQL-expressible, so its gate is the pytest recall
+      bound vs planted pairs, sim3-style. With ``centroids`` given there is
+      no fit, and the query is SQL-expressible: the d11b oracle pins the
+      same centroids as SQL literals — the realistic 100 TB shape, where
+      quantizers are fitted once on a sample and FROZEN. Live and pinned
+      centroids share one assignment, ``kmeans_assigned`` (nearest = min
+      (‖c‖² − 2·u·c, cluster_id); struct-min ties break to the lowest id).
 
     Cross-bucket near-dups are missed by design under either blocker —
     the same documented blind spot as cross-cluster pairs in the paper;
     sign-LSH misses when a leading component sits at 0, k-means when a
     near-dup pair straddles a Voronoi boundary.
 
-    Composition of existing verified pieces: ``sign_bucket`` (sim2) for
-    blocking, ``similarity.cosine`` for the verify, and
-    ``dedup.duplicate_clusters`` (d6) for min-label components.
-
-    Scale shape: the pair join is an equi-join on the bucket key —
-    candidates are Σ_b n_b²/2, bounded by bucket granularity (2^n_bits
-    buckets; raise n_bits as the corpus grows, or swap the within-bucket
-    all-pairs for d5's blocked-GEMM when buckets are still large). The CC
-    loop shuffles (id, label) longs only; embeddings never enter it.
-    Returns ``(id_col, cluster_id, is_canonical)`` for every vector.
+    Scale shape: one ``groupBy(bucket).applyInPandas`` runs d5's GEMM pair
+    kernel (``similarity._near_pairs``) on each bucket against itself —
+    Σ_b n_b²/2 scores at BLAS constants, in fixed tiles, with no join
+    (2^n_bits buckets; raise n_bits or n_clusters as the corpus grows). The
+    threshold cut tolerates the GEMM's ulp drift from the oracles' ltr
+    cosine for the reason ``embedding_near_dupes_blocked`` gives. The
+    pairs feed ``dedup.duplicate_clusters`` (d6) for min-label components;
+    that loop shuffles (id, label) longs only, embeddings never enter it.
+    Zero-norm rows pair with nothing, so they stay singletons. Returns
+    ``(id_col, cluster_id, is_canonical)`` for every vector.
     """
     from consumer_loans_analysis_spark.operators import dedup, similarity
 
     if blocker == "signlsh":
-        bucket = similarity.sign_bucket(F.col(vec_col), n_bits).alias("bucket")
-        b = emb.select(F.col(id_col), F.col(vec_col), bucket)
+        bucket = similarity.sign_bucket(F.col(vec_col), n_bits)
     elif blocker == "kmeans":
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        # coalesce the try_divide: a zero-norm embedding would yield null
-        # elements and array_to_vector/KMeans.fit would fail opaquely —
-        # map it to the zero vector instead (lands in some cluster; the
-        # cosine verify still rejects its pairs, matching signlsh's
-        # tolerance of such vectors)
-        unit = F.transform(
-            F.col(vec_col),
-            lambda x: F.coalesce(
-                F.try_divide(
-                    x.cast("double"),
-                    F.sqrt(
-                        F.aggregate(
-                            F.transform(F.col(vec_col), lambda y: y * y),
-                            F.lit(0.0),
-                            lambda a, y: a + y,
-                        )
-                    ),
-                ),
-                F.lit(0.0),
-            ),
-        )
-        if centroids is not None:
-            # stage the norm, then the unit vector, as projected columns so
-            # each is evaluated once per row — inlining `unit` into
-            # kmeans_assign re-evaluates the 64-element norm per element
-            # AND per centroid through interpreted higher-order
-            # expressions (~2× on d11b). Same
-            # IEEE754 ops in the same order, oracle unaffected.
-            b = (
-                emb.select(
-                    F.col(id_col),
-                    F.col(vec_col),
-                    F.sqrt(
-                        F.aggregate(
-                            F.transform(F.col(vec_col), lambda y: y * y),
-                            F.lit(0.0),
-                            lambda a, y: a + y,
-                        )
-                    ).alias("_n"),
-                )
-                .select(
-                    F.col(id_col),
-                    F.col(vec_col),
-                    F.transform(
-                        F.col(vec_col),
-                        lambda x: F.coalesce(
-                            F.try_divide(x.cast("double"), F.col("_n")),
-                            F.lit(0.0),
-                        ),
-                    ).alias("_u"),
-                )
-                .select(
-                    F.col(id_col),
-                    F.col(vec_col),
-                    kmeans_assign(F.col("_u"), centroids).alias("bucket"),
-                )
-            )
+        if centroids is None:
+            Xs = similarity._fit_sample(emb, id_col, vec_col)
+            if len(Xs):
+                centroids = similarity._kmeanspp_lloyd(Xs, n_clusters, seed).tolist()
+        if centroids is None:  # no non-zero-norm row: nothing can pair
+            bucket = F.lit(0)
         else:
-            feats = emb.select(
-                F.col(id_col), F.col(vec_col), array_to_vector(unit).alias("_f")
-            )
-            km = KMeans(
-                k=n_clusters, seed=seed, featuresCol="_f", predictionCol="bucket"
-            ).fit(feats)
-            b = km.transform(feats).select(id_col, vec_col, "bucket")
+            emb = kmeans_assigned(emb, centroids, vec_col, [id_col, vec_col])
+            bucket = F.col("_a.bucket")
     else:
         raise ValueError(f"blocker must be signlsh | kmeans, got {blocker!r}")
-    a = b.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"), "bucket"
-    )
-    c = b.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"), "bucket"
-    )
     pairs = (
-        a.join(c, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(similarity.cosine(F.col("v_a"), F.col("v_b")) >= threshold)
+        emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"), bucket.alias("b"))
+        .groupBy("b")
+        .applyInPandas(
+            lambda pdf: similarity._near_pairs(threshold, pdf),
+            similarity._pair_schema(emb, id_col),
+        )
         .select("id_a", "id_b")
     )
     return dedup.duplicate_clusters(emb, pairs, id_col=id_col)

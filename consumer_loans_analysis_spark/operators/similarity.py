@@ -23,9 +23,14 @@ passed in.
 
 All scan arithmetic is strict left-to-right double arithmetic
 (``_ltr_dot``, no BLAS/FMA), and the Column helpers (``cosine``,
-``bucketed_topk``, the near-dup paths) accumulate left to right through
-``zip_with``/``aggregate``, so every score is the IEEE754 double the DuckDB
-oracles' ``list_dot_product`` produces.
+``bucketed_topk``, ``embedding_near_dupes_exact``) accumulate left to right
+through ``zip_with``/``aggregate``, so every score is the IEEE754 double the
+DuckDB oracles' ``list_dot_product`` produces.
+
+Every thresholded near-duplicate search — d5's ``embedding_near_dupes_blocked``
+and ``curation.semantic_dedup``'s within-bucket pairs — is one GEMM kernel
+instead, ``_near_pairs``: a membership cut at a threshold tolerates BLAS
+rounding where a top-k cut does not (see ``embedding_near_dupes_blocked``).
 """
 
 from __future__ import annotations
@@ -358,105 +363,13 @@ def embedding_near_dupes_exact(
     embeddings: DataFrame, threshold: float = 0.45,
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
-    """All-pairs embedding-cosine near-duplicates ≥ threshold. O(n²) —
-    correctness oracle / small-corpus path only; ``embedding_near_dupes``
-    is the bucketed scale path."""
+    """All-pairs embedding-cosine near-duplicates ≥ threshold as one Column
+    theta join. O(n²) — the correctness reference for the GEMM paths
+    (``embedding_near_dupes_blocked``, ``curation.semantic_dedup``)."""
     a = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
     b = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", cosine(F.col("v_a"), F.col("v_b")))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )
-
-
-def _rh_band_keys_udf(dim: int, n_bands: int, rows_per_band: int, seed: int):
-    """Vectorized banded random-hyperplane signature: batch×dim @ dim×bits
-    numpy matmul → sign bits → one packed long per band. A dense projection
-    is the one embedding kernel where an Arrow-batched Pandas UDF beats
-    per-element Column expressions (dim × bits multiply-adds per row)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    rng = np.random.default_rng(seed)
-    W = rng.standard_normal((dim, n_bands * max(rows_per_band, 1)))
-
-    @pandas_udf("array<long>")
-    def band_keys(vs: pd.Series) -> pd.Series:
-        if rows_per_band == 0:
-            # full probe: every vector lands in every band's single bucket
-            return pd.Series([np.zeros(n_bands, dtype=np.int64)] * len(vs))
-        m = np.stack(vs.to_numpy()).astype(np.float64)
-        bits = (m @ W) > 0  # batch × (n_bands·rows_per_band)
-        keys = np.zeros((len(m), n_bands), dtype=np.int64)
-        for i in range(n_bands):
-            for j in range(rows_per_band):
-                keys[:, i] = (keys[:, i] << 1) | bits[:, i * rows_per_band + j]
-        return pd.Series(list(keys))
-
-    return band_keys
-
-
-def embedding_near_dupes(
-    embeddings: DataFrame, threshold: float = 0.45,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    n_bands: int = 64, rows_per_band: int = 2, seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs ≥ threshold via banded
-    random-hyperplane sign-LSH candidates + exact cosine verification
-    (the d3 MinHash pattern applied to dense vectors).
-
-    A pair at angle θ agrees on one sign bit with probability 1−θ/π; at
-    the 0.45 cosine threshold (θ≈63°, p≈0.65) the per-pair miss rate with
-    the default 64 bands × 2 rows is (1−0.65²)⁶⁴ ≈ 6·10⁻¹⁶ — and every
-    surviving candidate is verified exactly, so there are no false
-    positives. ``rows_per_band=0`` degenerates to one all-pairs bucket
-    (provably exact — the full-probe == brute-force test path).
-
-    Scale shape: the banded explode carries only (id, band_idx, band_key)
-    — 24 bytes/row — never the vectors; vectors rejoin only for the
-    distinct candidate pairs. The old implementation was an O(n²) theta
-    join over full vectors.
-
-    DOMAIN OF APPLICABILITY: banding prunes in proportion to the gap
-    between matching-pair bit-agreement p^r and the random-pair ½^r. Use
-    this for HIGH thresholds (≥ ~0.7, p ≥ 0.75), where short bands are
-    both selective and high-recall. At thresholds near the random-pair
-    cosine (like this testdata's 0.45 — measured in SCALING.md), ½^r
-    bucket collisions make candidate volume approach all-pairs × bands;
-    ``embedding_near_dupes_blocked`` is the right exact path there.
-    """
-    e = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    if dim is None:
-        # dimension probe — ONE first() action. Pass ``dim`` explicitly to
-        # make query construction action-free (tested in
-        # test_plan_shapes.py::test_similarity_build_action_free).
-        dim = len(e.select("v").first()["v"])
-    if rows_per_band == 0:
-        n_bands = 1
-    keys = _rh_band_keys_udf(dim, n_bands, rows_per_band, seed)
-    # cached: both candidate-join sides consume the banded keys, and the
-    # dense random-projection (the Arrow-batched UDF — the expensive part)
-    # would otherwise run over every vector twice. 24 B × n_bands per row,
-    # vectors never enter the cache.
-    banded = e.select(
-        "id", F.posexplode(keys(F.col("v"))).alias("band_idx", "band_key")
-    ).cache()
-    a = banded.select(F.col("id").alias("id_a"), "band_idx", "band_key")
-    b = banded.select(F.col("id").alias("id_b"), "band_idx", "band_key")
-    candidates = (
-        a.join(b, ["band_idx", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    va = e.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"))
-    vb = e.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"))
-    return (
-        candidates.join(va, "id_a")
-        .join(vb, "id_b")
         .withColumn("cos", cosine(F.col("v_a"), F.col("v_b")))
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
@@ -512,6 +425,59 @@ def ivf_topk(
     )
 
 
+# Rows of the left block per GEMM tile (and columns of the right block):
+# a tile's score matrix is at most _PAIR_TILE² doubles (8 MB), whatever the
+# size of the blocks or buckets being paired.
+_PAIR_TILE = 1024
+
+
+def _near_pairs(threshold: float, a: pd.DataFrame, b: pd.DataFrame | None = None):
+    """The one near-duplicate pair kernel: every ``(id_a < id_b, cos)`` with
+    ``cos ≥ threshold`` between the (``id``, ``v``) rows of ``a`` and ``b``,
+    or among the rows of ``a`` when ``b`` is None. Rows are unit-normalized
+    in numpy and scored by GEMM in fixed ``_PAIR_TILE`` tiles, so the score
+    matrix never grows with the square of a block. Zero-norm rows are
+    dropped first (cosine is undefined for them), so they never qualify —
+    the Column path's try_divide → NULL. A self search scores only the tiles
+    on or above the diagonal and keeps the strict upper triangle, so each
+    pair comes out once and no row pairs with itself."""
+    import numpy as np
+
+    def unit(pdf):
+        ids = pdf["id"].to_numpy()
+        if not len(ids):
+            return ids, np.empty((0, 0))
+        X = np.asarray(pdf["v"].tolist(), dtype=np.float64)
+        n = np.sqrt((X * X).sum(axis=1))
+        nz = n > 0
+        return ids[nz], X[nz] / n[nz, None]
+
+    ia, Ua = unit(a)
+    ib, Ub = (ia, Ua) if b is None else unit(b)
+    lo, hi, cs = [ia[:0]], [ib[:0]], [np.empty(0)]
+    for i0 in range(0, len(ia), _PAIR_TILE):
+        for j0 in range(i0 if b is None else 0, len(ib), _PAIR_TILE):
+            c = Ua[i0 : i0 + _PAIR_TILE] @ Ub[j0 : j0 + _PAIR_TILE].T
+            ii, jj = np.nonzero(c >= threshold)
+            if b is None:
+                keep = jj + j0 > ii + i0
+                ii, jj = ii[keep], jj[keep]
+            x, y = ia[ii + i0], ib[jj + j0]
+            first = x < y
+            keep = x != y  # rows sharing an id are not a pair (id_a < id_b)
+            lo.append(np.where(first, x, y)[keep])
+            hi.append(np.where(first, y, x)[keep])
+            cs.append(c[ii, jj][keep])
+    return pd.DataFrame(
+        {"id_a": np.concatenate(lo), "id_b": np.concatenate(hi), "cos": np.concatenate(cs)}
+    )
+
+
+def _pair_schema(df: DataFrame, id_col: str) -> str:
+    t = df.schema[id_col].dataType.simpleString()
+    return f"id_a {t}, id_b {t}, cos double"
+
+
 def embedding_near_dupes_blocked(
     embeddings: DataFrame, threshold: float = 0.45,
     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -520,35 +486,29 @@ def embedding_near_dupes_blocked(
     """EXACT all-pairs cosine pairs ≥ threshold via block-partitioned matrix
     multiplication (the BLAS path).
 
-    Why this exists next to the sign-LSH variant: LSH prunes in proportion
-    to the gap between matching-pair and random-pair bit-agreement. At a
-    LOW cosine threshold sitting near the random-pair distribution (this
-    testdata: matches from 0.4501, non-matches up to 0.4497 — measured),
-    per-band selectivity collapses to ~3× and candidate volume approaches
-    all-pairs × bands — LSH does strictly more work than brute force.
-    Exact low-margin all-pairs is Θ(n²) no matter what; the right move is
-    to pay n² at dense-BLAS constants instead of shuffle-join constants:
+    Why not candidate pruning: LSH banding prunes in proportion to the gap
+    between matching-pair and random-pair bit-agreement. At a LOW cosine
+    threshold sitting near the random-pair distribution (this testdata:
+    matches from 0.4501, non-matches up to 0.4497 — measured), per-band
+    selectivity collapses to ~3× and candidate volume approaches all-pairs
+    × bands — LSH does strictly more work than brute force (SCALING.md: 689 s
+    against this path's 2.9 s at sf1). Exact low-margin all-pairs is Θ(n²)
+    no matter what; the right move is to pay n² at dense-BLAS constants
+    instead of shuffle-join constants:
 
-    - pack each hash-block of vectors into ONE row holding the
-      L2-normalized block matrix (``applyInPandas``);
-    - explode BOTH sides to (block_a, block_b) pair keys (a-side: block i
-      → keys (i, j≥i); b-side: block j → keys (i≤j, j)) and equi-join on
-      the composite key — each side ships each block ~B/2 times through a
-      SHUFFLE, so a task holds exactly the two blocks of its pairs. No
-      broadcast: a broadcast of the packed table would ship the ENTIRE
-      normalized corpus to every executor, which no broadcast budget
-      survives at scale (AQE may still pick broadcast at tiny SF, where
-      it genuinely fits — that is a size-based runtime decision, not a
-      plan requirement);
-    - one numpy GEMM per block pair (``mapInPandas``), emit only
-      qualifying pairs.
+    - hash each row to one of ``n_blocks`` blocks, and key BOTH sides' rows
+      by block pair (a-side: block i → keys (i, j≥i); b-side: block j →
+      keys (i≤j, j)); ``cogroup`` on the composite key ships each row ~B/2
+      times through a SHUFFLE, so a task holds exactly the two blocks of its
+      pair. No broadcast: a broadcast side would ship the ENTIRE corpus to
+      every executor, which no broadcast budget survives at scale;
+    - ``_near_pairs`` per block pair: unit-normalize, tiled GEMM, emit only
+      qualifying pairs (a diagonal pair (i, i) is block i's self search).
 
-    Cluster shape: parallelism = B(B+1)/2 block pairs spread by composite
-    -key hash; per-task memory = two (n/B × dim) float64 matrices — size
-    ``n_blocks`` so a block fits executor memory; shuffle volume = ~B ×
-    corpus, the price of exact Θ(n²). Zero vectors get NaN rows (cos
-    undefined) and can never qualify, matching the Column path's
-    try_divide → NULL.
+    Building the plan runs no Spark job. Cluster shape: parallelism =
+    B(B+1)/2 block pairs spread by composite-key hash; per-task memory = two
+    (n/B × dim) blocks plus one GEMM tile — size ``n_blocks`` so a block fits
+    executor memory; shuffle volume = ~B × corpus, the price of exact Θ(n²).
 
     Engine-parity note: scores here come from BLAS GEMM (pairwise/FMA
     accumulation), which can drift ~1 ulp from the d5 oracle's
@@ -561,95 +521,27 @@ def embedding_near_dupes_blocked(
     instead. If you repoint this at a corpus whose pair cosines crowd the
     threshold, switch the GEMM to the ltr pattern.
     """
-    import numpy as np
-
-    e = embeddings.select(
-        F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)).alias("block"),
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+    block = F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks))
+    rows = (F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    a = embeddings.select(
+        block.alias("block_a"),
+        F.explode(F.sequence(block, F.lit(n_blocks - 1))).alias("block_b"),
+        *rows,
+    )
+    b = embeddings.select(
+        F.explode(F.sequence(F.lit(0), block)).alias("block_a"),
+        block.alias("block_b"),
+        *rows,
     )
 
-    pack_schema = (
-        "block int, ids array<long>, mat array<double>, n int, dim int"
+    def pair(key, pa, pb):
+        return _near_pairs(threshold, pa, None if key[0] == key[1] else pb)
+
+    return (
+        a.groupBy("block_a", "block_b")
+        .cogroup(b.groupBy("block_a", "block_b"))
+        .applyInPandas(pair, _pair_schema(embeddings, id_col))
     )
-
-    def pack(key, pdf):
-        ids = pdf["id"].to_numpy()
-        m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        norms = np.sqrt((m * m).sum(axis=1))
-        norms[norms == 0.0] = np.nan
-        mn = m / norms[:, None]
-        return pd.DataFrame(
-            {
-                "block": [int(key[0])],
-                "ids": [ids],
-                "mat": [mn.ravel()],
-                "n": [len(ids)],
-                "dim": [m.shape[1]],
-            }
-        )
-
-    # materialize the packed table once — a and b below are two consumers
-    # and Catalyst does not reuse the applyInPandas exchange across join
-    # branches. Note the EAGER localCheckpoint tradeoffs: (1) constructing
-    # this DataFrame runs the pack job immediately, before any collect;
-    # (2) unlike persist(), checkpoint blocks are NOT recomputed on
-    # executor loss — on a real cluster prefer persist(DISK_ONLY) or a
-    # checkpoint to reliable storage if executors may die mid-query.
-    packed = e.groupBy("block").applyInPandas(pack, pack_schema).localCheckpoint()
-    a = packed.select(
-        F.col("block").alias("block_a"),
-        F.explode(F.sequence(F.col("block"), F.lit(n_blocks - 1))).alias("block_b"),
-        F.col("ids").alias("ids_a"),
-        F.col("mat").alias("mat_a"), F.col("n").alias("n_a"),
-        F.col("dim").alias("dim_a"),
-    )
-    b = packed.select(
-        F.explode(F.sequence(F.lit(0), F.col("block"))).alias("block_a"),
-        F.col("block").alias("block_b"),
-        F.col("ids").alias("ids_b"),
-        F.col("mat").alias("mat_b"), F.col("n").alias("n_b"),
-        F.col("dim").alias("dim_b"),
-    )
-    blk = a.join(b, ["block_a", "block_b"])
-
-    def gemm(batches):
-        for pdf in batches:
-            out_a, out_b, out_c = [], [], []
-            for r in pdf.itertuples(index=False):
-                ia = np.asarray(r.ids_a, dtype=np.int64)
-                ib = np.asarray(r.ids_b, dtype=np.int64)
-                ma = np.asarray(r.mat_a).reshape(r.n_a, r.dim_a)
-                mb = np.asarray(r.mat_b).reshape(r.n_b, r.dim_b)
-                c = ma @ mb.T
-                with np.errstate(invalid="ignore"):
-                    ii, jj = np.nonzero(c >= threshold)
-                if len(ii) == 0:
-                    continue
-                id1, id2, cs = ia[ii], ib[jj], c[ii, jj]
-                if r.block_a == r.block_b:
-                    # diagonal block: c holds BOTH (i,j) and (j,i) — keep
-                    # the ordered one (also drops the self diagonal)
-                    keep = id1 < id2
-                    lo, hi = id1, id2
-                else:
-                    # off-diagonal: each pair appears once; just order ids
-                    keep = slice(None)
-                    lo = np.minimum(id1, id2)
-                    hi = np.maximum(id1, id2)
-                out_a.append(lo[keep])
-                out_b.append(hi[keep])
-                out_c.append(cs[keep])
-            if out_a:
-                yield pd.DataFrame(
-                    {
-                        "id_a": np.concatenate(out_a),
-                        "id_b": np.concatenate(out_b),
-                        "cos": np.concatenate(out_c),
-                    }
-                )
-
-    return blk.mapInPandas(gemm, "id_a long, id_b long, cos double")
 
 
 def quantize_int8(vec: Column) -> tuple[Column, Column]:

@@ -187,12 +187,15 @@ def d4b_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d5_embedding_near_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs ≥ 0.45 (rounded for the hash gate).
 
-    Blocked-GEMM exact path: the 0.45 threshold sits at the random-pair
-    cosine boundary of this corpus (measured margin 0.4497 vs 0.4501), where
+    Blocked-GEMM exact path: rows are keyed by hash-block pair and each
+    block pair is cogrouped into the GEMM pair kernel, so building the plan
+    runs no Spark job. The 0.45 threshold sits at the random-pair cosine
+    boundary of this corpus (measured margin 0.4497 vs 0.4501), where
     sign-LSH candidate volume approaches all-pairs — see
-    ``embedding_near_dupes_blocked``'s docstring and SCALING.md. The LSH
-    variant (``embedding_near_dupes``) remains the scale path for
-    high-similarity thresholds."""
+    ``embedding_near_dupes_blocked``'s docstring and SCALING.md. That margin
+    is also why GEMM rounding cannot move a pair across the threshold. The
+    sub-quadratic near-dup path is semantic_dedup's bucket blockers
+    (d11/d11b)."""
     emb = read_table(spark, sf_dir, "embeddings")
     pairs = similarity.embedding_near_dupes_blocked(emb, threshold=0.45)
     return pairs.withColumn("cos", F.round(F.col("cos"), 6))
@@ -3142,7 +3145,7 @@ def d11_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     because this corpus's planted near-dups live at cosine 0.45-0.51 (see
     d5's margin note) — real text embeddings would use ~0.9 and more bits.
     See ``operators/curation.py::semantic_dedup`` (composition of sim2's
-    bucketing, d5's cosine verify, and d6's CC loop)."""
+    bucketing, d5's GEMM pair kernel run per bucket, and d6's CC loop)."""
     from consumer_loans_analysis_spark.operators import curation
 
     emb = read_table(spark, sf_dir, "embeddings")
@@ -3221,9 +3224,10 @@ def d11b_semantic_dedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     PINNED (``operators/semdedup_centroids.py`` — fitted once on sf0.01
     with k=8/seed=42, then frozen; the production shape for a quantizer),
     so assignment is a pure Column expression and the WHOLE query carries
-    a full DuckDB hash oracle with the same centroid literals — r8
-    VERDICT #3, upgrading the former rows-only check. Live-fit recall
-    stays gated by
+    a full DuckDB hash oracle with the same centroid literals. Within each
+    cluster, pairs come from d5's GEMM pair kernel. The live fit (no
+    centroids) is the ANN quantizers' numpy k-means on their fit sample,
+    assigned by the same expression; its recall stays gated by
     tests/test_operators.py::test_semantic_dedup_kmeans_blocker_recall
     (30/30 at k=8) and the pinned-vs-MLlib assignment parity test."""
     from consumer_loans_analysis_spark.operators import curation
@@ -3241,41 +3245,16 @@ def d11b_semantic_dedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _assigned_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings with their pinned-SemDeDup-centroid assignment as a
-    ``_a = (d, bucket)`` struct: the staged norm→unit→assign projection
-    chain (each evaluated once per row; same unit expression as semantic_dedup's pinned blocker, so the d11b
-    oracle's u/dd CTEs restate it exactly)."""
-    from consumer_loans_analysis_spark.operators.curation import kmeans_assign_full
+    ``_a = (d, bucket)`` struct: ``curation.kmeans_assigned``, the staged
+    norm→unit→assign chain d11b's blocker uses, so the d11b oracle's u/dd
+    CTEs restate it exactly."""
+    from consumer_loans_analysis_spark.operators.curation import kmeans_assigned
     from consumer_loans_analysis_spark.operators.semdedup_centroids import (
         SEMDEDUP_CENTROIDS,
     )
 
     emb = read_table(spark, sf_dir, "embeddings")
-    return (
-        emb.select(
-            "vec_id",
-            "embedding",
-            F.sqrt(
-                F.aggregate(
-                    F.transform(F.col("embedding"), lambda y: y * y),
-                    F.lit(0.0),
-                    lambda a, y: a + y,
-                )
-            ).alias("_n"),
-        )
-        .select(
-            "vec_id",
-            F.transform(
-                F.col("embedding"),
-                lambda x: F.coalesce(
-                    F.try_divide(x.cast("double"), F.col("_n")), F.lit(0.0)
-                ),
-            ).alias("_u"),
-        )
-        .select(
-            "vec_id",
-            kmeans_assign_full(F.col("_u"), SEMDEDUP_CENTROIDS).alias("_a"),
-        )
-    )
+    return kmeans_assigned(emb, SEMDEDUP_CENTROIDS, "embedding", ["vec_id"])
 
 
 def _o14_oracle() -> str:

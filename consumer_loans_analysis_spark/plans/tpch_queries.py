@@ -14,7 +14,7 @@ queries). Physical-plan intent, stated per query:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from consumer_loans_analysis_spark.functions.relational import decimal_avg, decimal_sum
@@ -380,8 +380,9 @@ def grouping_sets_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
 def approx_count_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_count_distinct (HyperLogLog++) next to the exact count — the
     oracle pins the exact side; the approximate estimate is asserted
-    in-query to land within the configured rsd (guarded, then dropped so
-    the hash-compare sees only deterministic columns). At 100 TB the HLL
+    in-query to land within 6 sigma of the configured rsd, and a miss fails
+    the query (``_sketch_guard``) rather than dropping the group. Only the
+    deterministic exact side reaches the hash compare. At 100 TB the HLL
     sketch (1.5 KB/group) replaces a count-distinct shuffle of raw user
     ids."""
     e = read_table(spark, sf_dir, "events")
@@ -389,12 +390,27 @@ def approx_count_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("user_id").alias("n_exact"),
         F.approx_count_distinct("user_id", rsd=0.02).alias("n_approx"),
     )
-    # fail loudly if the sketch is off (>6 sigma of the configured rsd)
-    checked = agg.withColumn(
-        "_ok",
-        (F.abs(F.col("n_approx") - F.col("n_exact")) / F.col("n_exact")) < 0.12,
+    err = F.abs(F.col("n_approx") - F.col("n_exact")) / F.col("n_exact")
+    return agg.select(
+        "event_type",
+        _sketch_guard(
+            err < 0.12, F.col("n_exact"), "approx_count_distinct_users",
+            "HLL relative error < 0.12 (6 x rsd 0.02)",
+            event_type=F.col("event_type"), n_approx=F.col("n_approx"),
+            n_exact=F.col("n_exact"),
+        ).alias("n_exact"),
     )
-    return checked.filter(F.col("_ok")).select("event_type", "n_exact")
+
+
+def _sketch_guard(ok: Column, value: Column, query: str, bound: str, **shown: Column) -> Column:
+    """``value`` where the sketch estimate passed its in-query check, else
+    a query failure naming the query, the bound and the ``shown`` columns
+    (the group and the numbers that missed). A miss, or a check that is
+    NULL, fails loudly instead of silently dropping the row."""
+    detail = [F.lit(f"{query}: sketch estimate outside {bound}:")]
+    for name, col in shown.items():
+        detail += [F.lit(f" {name}="), col.cast("string")]
+    return F.when(ok, value).otherwise(F.raise_error(F.concat(*detail)))
 
 
 @query(
@@ -1242,6 +1258,7 @@ def sk1_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.struct(
                 F.lit(metric).alias("metric"),
                 F.col(ex).cast("long").alias("n_exact"),
+                F.col(es).alias("n_est"),
                 (F.abs(F.col(es) - F.col(ex)) / F.col(ex) < 0.05).alias("_ok"),
             )
             for metric, ex, es in [
@@ -1250,11 +1267,20 @@ def sk1_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         ]
     )
-    return (
-        est.select(F.explode(metrics).alias("m"))
-        .filter(F.col("m._ok"))
-        .select(F.col("m.metric").alias("metric"), F.col("m.n_exact").alias("n_exact"))
+    m = est.select(F.explode(metrics).alias("m")).select("m.*")
+    return m.select(
+        "metric",
+        _sketch_guard(
+            F.col("_ok"), F.col("n_exact"), "sk1_theta_set_ops",
+            "theta relative error < 0.05", metric=F.col("metric"),
+            n_est=F.col("n_est"), n_exact=F.col("n_exact"),
+        ).alias("n_exact"),
     )
+
+
+# DataSketches' single-quantile normalized rank error of a KLL sketch at
+# its default k=200 (99% confidence): 2.296 / k^0.9723.
+_KLL_RANK_EPS = 0.0133
 
 
 @query(
@@ -1269,11 +1295,16 @@ def sk1_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sk2_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KLL quantile sketches next to exact percentiles: the mergeable
     one-pass quantile path for 100 TB (a KLL sketch is KBs per group and
-    unions across shards; exact percentile needs a per-group sort). The
-    sketch estimates are guarded in-query against the exact values at 2%
-    relative error (KLL k=200 rank error ≈ 1.6 %, and order totalprice is
-    smooth enough that rank error ≈ value error here), then dropped so
-    the oracle compares only the deterministic exact side."""
+    unions across shards; exact percentile needs a per-group sort).
+
+    A KLL sketch bounds RANK error, not value error, so each estimate is
+    guarded on its exact rank within its group: the estimate e of quantile
+    q passes when some position it holds in the sorted group is within
+    ``_KLL_RANK_EPS`` of q, i.e. #(x < e)/n ≤ q + ε and #(x ≤ e)/n ≥ q − ε.
+    The ranks come from one join of the group's values against its
+    estimates (the estimates are computed once, on the join's broadcast
+    side). A miss fails the query (``_sketch_guard``); only the
+    deterministic exact side reaches the hash compare."""
     o = read_table(spark, sf_dir, "orders")
     agg = o.groupBy("o_orderstatus").agg(
         F.kll_sketch_agg_double("o_totalprice").alias("sk"),
@@ -1286,14 +1317,32 @@ def sk2_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("px")[0].alias("x50"),
         F.col("px")[1].alias("x90"),
     )
-    ok = (F.abs(F.col("e50") - F.col("x50")) / F.col("x50") < 0.02) & (
-        F.abs(F.col("e90") - F.col("x90")) / F.col("x90") < 0.02
-    )
-    return (
-        est.filter(ok)
-        .select(
-            "o_orderstatus",
-            F.round("x50", 6).alias("p50_exact"),
-            F.round("x90", 6).alias("p90_exact"),
+    x = F.col("o_totalprice")
+    ranked = (
+        o.select("o_orderstatus", "o_totalprice")
+        .join(F.broadcast(est), "o_orderstatus")
+        .groupBy("o_orderstatus", "e50", "e90", "x50", "x90")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            *[F.count_if(x < F.col(e)).alias(f"lt{e}") for e in ("e50", "e90")],
+            *[F.count_if(x <= F.col(e)).alias(f"le{e}") for e in ("e50", "e90")],
         )
+    )
+    n = F.col("n")
+
+    def guarded(q: float, e: str, exact: str) -> Column:
+        ok = (F.col(f"lt{e}") <= (q + _KLL_RANK_EPS) * n) & (
+            F.col(f"le{e}") >= (q - _KLL_RANK_EPS) * n
+        )
+        return _sketch_guard(
+            ok, F.round(exact, 6), "sk2_kll_quantiles",
+            f"KLL k=200 normalized rank error {_KLL_RANK_EPS} of q={q}",
+            o_orderstatus=F.col("o_orderstatus"), estimate=F.col(e),
+            rank_lo=F.col(f"lt{e}"), rank_hi=F.col(f"le{e}"), n=n,
+        )
+
+    return ranked.select(
+        "o_orderstatus",
+        guarded(0.5, "e50", "x50").alias("p50_exact"),
+        guarded(0.9, "e90", "x90").alias("p90_exact"),
     )

@@ -117,38 +117,3 @@ def write_orc(df: DataFrame, path: str, mode: str = "overwrite", partition_by: l
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.orc(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    path: str | None = None,
-    mode: str = "overwrite",
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Bucketed parquet table sink (saveAsTable — bucketing metadata lives in
-    the catalog, so this is a managed/external *table*, not a bare path).
-
-    The 100 TB co-location primitive: two tables bucketed into the same
-    ``n_buckets`` on their join key sort-merge-join with NO Exchange on
-    either side — the dominant shuffle of a fact-to-fact join is paid once
-    at write time and amortized over every subsequent join/aggregation on
-    that key. ``sort_cols`` additionally pre-sorts within buckets, letting
-    the join skip its Sort too.
-    """
-    writer = df.write.mode(mode).format("parquet")
-    if path is not None:
-        writer = writer.option("path", path)
-    writer = writer.bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table back through the catalog (spark.table — a plain
-    ``read.parquet(path)`` would drop the bucketing metadata and reintroduce
-    the Exchange the bucketing exists to avoid)."""
-    return spark.table(table)

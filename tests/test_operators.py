@@ -72,34 +72,8 @@ def test_cosine_topk(spark):
     assert out[0]["cos"] == pytest.approx(1.0)
 
 
-def test_embedding_near_dupes(spark):
-    emb = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [1.0, 0.01]), (2, [0.0, 1.0])],
-        schema="vec_id long, embedding array<float>",
-    )
-    pairs = similarity.embedding_near_dupes(emb, threshold=0.99).collect()
-    assert [(p["id_a"], p["id_b"]) for p in pairs] == [(0, 1)]
-
-
 def _pair_set(rows):
     return {(r["id_a"], r["id_b"]): round(r["cos"], 9) for r in rows}
-
-
-def test_embedding_near_dupes_fullprobe_equals_bruteforce(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    exact = _pair_set(
-        similarity.embedding_near_dupes_exact(emb, threshold=0.45).collect()
-    )
-    # rows_per_band=0 → one all-pairs bucket through the SAME candidate/
-    # verify plumbing: provably identical to brute force
-    full_probe = _pair_set(
-        similarity.embedding_near_dupes(emb, threshold=0.45, rows_per_band=0).collect()
-    )
-    assert full_probe == exact
-    # default banded LSH: miss probability ~6e-16 per true pair at the
-    # threshold — expect the identical pair set on real data
-    lsh = _pair_set(similarity.embedding_near_dupes(emb, threshold=0.45).collect())
-    assert lsh == exact
 
 
 def test_embedding_near_dupes_blocked_equals_bruteforce(spark, sf_dir):
@@ -117,6 +91,44 @@ def test_embedding_near_dupes_blocked_equals_bruteforce(spark, sf_dir):
             ).collect()
         )
         assert blocked == exact, n_blocks
+
+
+@pytest.mark.parametrize("shape", ["empty", "zero_norm", "one_vector"])
+@pytest.mark.parametrize("search", ["d5_blocked", "signlsh", "kmeans_live", "kmeans_pinned"])
+def test_near_dupe_search_degenerate_input(spark, sf_dir, search, shape):
+    """Every embedding near-dup search on an empty corpus, three all-zero
+    vectors and a single vector: d5 returns no pair, and semantic_dedup
+    returns every row as its own canonical singleton — no live fit on an
+    empty sample, no pair through an undefined cosine."""
+    from consumer_loans_analysis_spark.operators import curation
+    from consumer_loans_analysis_spark.operators.semdedup_centroids import (
+        SEMDEDUP_CENTROIDS,
+    )
+    from consumer_loans_analysis_spark.sources.readers import read_table
+
+    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = {
+        "empty": emb.limit(0),
+        "zero_norm": spark.createDataFrame(
+            [(i, [0.0] * 64) for i in range(3)], emb.schema
+        ),
+        "one_vector": emb.orderBy("vec_id").limit(1),
+    }[shape]
+    ids = {r["vec_id"] for r in emb.collect()}
+    if search == "d5_blocked":
+        out = similarity.embedding_near_dupes_blocked(emb, threshold=0.45, n_blocks=4)
+        assert out.collect() == []
+        return
+    kw = {
+        "signlsh": {"n_bits": 4},
+        "kmeans_live": {"blocker": "kmeans", "n_clusters": 8},
+        "kmeans_pinned": {"blocker": "kmeans", "centroids": SEMDEDUP_CENTROIDS},
+    }[search]
+    got = {
+        (r["vec_id"], r["cluster_id"], r["is_canonical"])
+        for r in curation.semantic_dedup(emb, threshold=0.45, **kw).collect()
+    }
+    assert got == {(i, i, True) for i in ids}
 
 
 def test_duplicate_clusters(spark):
@@ -2052,17 +2064,31 @@ def test_wordpiece_greedy_hand_fixture(spark):
         "d13_source_overlap",
         "d14_minhash_estimate_audit",
         "d15_dedup_threshold_sweep",
+        "d5_embedding_near_dupes",
+        "d11_semantic_dedup",
+        "d11b_semantic_dedup_kmeans",
+        "o14_cluster_balanced_sample",
+        "dq4_embedding_outliers",
+        "approx_count_distinct_users",
+        "sk1_theta_set_ops",
+        "sk2_kll_quantiles",
     ],
 )
 def test_text_operator_matches_duckdb_oracle(spark, sf_dir, name):
-    """The text operators against their external DuckDB oracles on the
-    sf0.001 corpus: same columns, same order-insensitive rounded values
-    (``verify_local.canon_pdf`` — the gate's compare). The token-id
-    strings, pieces digests and exact BIGINT costs put the segmentation
-    itself under the compare; t15 checks every learned merge rank against
-    a per-rank full recount; the KN cross-entropy checks the driver-built
-    model; the dedup queries check the shingle posting lists, the band
-    posting lists and the streaming index probe against exact Jaccard."""
+    """The text and embedding operators against their external DuckDB
+    oracles on the sf0.001 corpus: same columns, same order-insensitive
+    rounded values (``verify_local.canon_pdf`` — the gate's compare). The
+    token-id strings, pieces digests and exact BIGINT costs put the
+    segmentation itself under the compare; t15 checks every learned merge
+    rank against a per-rank full recount; the KN cross-entropy checks the
+    driver-built model; the dedup queries check the shingle posting lists,
+    the band posting lists and the streaming index probe against exact
+    Jaccard. The embedding queries check the GEMM pair kernel against the
+    ltr all-pairs cosine (d5), its per-bucket use in semantic dedup under
+    the sign-LSH and pinned k-means blockers (d11, d11b), and the pinned
+    centroid assignment's bucket and distance (o14, dq4). The three sketch
+    queries compare their exact side; their in-query guards raise, so a
+    sketch miss fails here instead of dropping a row."""
     import duckdb
 
     from consumer_loans_analysis_spark.plans import registry
@@ -2078,6 +2104,22 @@ def test_text_operator_matches_duckdb_oracle(spark, sf_dir, name):
     assert len(got) > 0
     assert sorted(got.columns) == sorted(want.columns)
     assert canon_pdf(got) == canon_pdf(want)
+
+
+def test_sketch_guard_raises_on_miss(spark):
+    """A sketch estimate outside its bound fails the query, naming the
+    query, the bound and the group, instead of dropping the row."""
+    from consumer_loans_analysis_spark.plans.tpch_queries import _sketch_guard
+
+    df = spark.createDataFrame([("view", 100, 140)], "g string, n_exact long, n_est long")
+    ok = F.col("n_est") <= F.col("n_exact") * 1.1
+    kept = df.select(_sketch_guard(ok | F.lit(True), F.col("n_exact"), "q", "b").alias("n"))
+    assert kept.collect()[0]["n"] == 100
+    missed = df.select(
+        _sketch_guard(ok, F.col("n_exact"), "q_test", "relative error < 0.1", g=F.col("g")).alias("n")
+    )
+    with pytest.raises(Exception, match=r"q_test: sketch estimate outside relative error < 0.1: g=view"):
+        missed.collect()
 
 
 def test_broadcast_encode_large_vocab_smoke(spark):

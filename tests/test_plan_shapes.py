@@ -105,24 +105,52 @@ def test_blocked_gemm_join_is_not_forced_broadcast(spark, sf_dir):
     assert got == want
 
 
-def test_similarity_build_action_free(spark, sf_dir):
-    """Constructing the LSH near-dup plan with an explicit ``dim`` must run
-    ZERO Spark jobs (no first()/count() probes at plan-build time). Jobs
-    triggered on this thread during construction would inherit the job
-    group set here."""
-    emb = read_table(spark, sf_dir, "embeddings")
+def _build_jobs(spark, group, build) -> list:
+    """Spark job ids launched on this thread while ``build()`` runs."""
     sc = spark.sparkContext
-    group = "action_free_probe"
-    sc.setJobGroup(group, "plan construction must not run jobs")
+    sc.setJobGroup(group, "plan construction job count")
     try:
-        df = similarity.embedding_near_dupes(emb, threshold=0.99, dim=64)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        build()
+        return sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setJobGroup(None, None)
-    assert jobs == [], f"plan construction ran jobs: {jobs}"
-    # the plan still executes correctly (dim matches the data)
-    assert df.columns == ["id_a", "id_b", "cos"]
-    df.limit(1).collect()
+
+
+def test_d5_build_runs_no_job(spark, sf_dir):
+    """Building d5 at sf0.01 launches no job beyond those ``read_table``
+    alone launches (its parquet footer read): the block pairs cogroup
+    straight into the GEMM kernel, so nothing is packed or checkpointed
+    while the plan is built."""
+    from consumer_loans_analysis_spark.plans import registry
+
+    registry.load_all()
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    read = _build_jobs(spark, "d5_build_read", lambda: read_table(spark, sf01, "embeddings"))
+    d5 = _build_jobs(
+        spark, "d5_build", lambda: registry.QUERIES["d5_embedding_near_dupes"](spark, sf01)
+    )
+    assert len(d5) == len(read), (d5, read)
+
+
+def test_semantic_dedup_pairs_have_no_join(spark, sf_dir, monkeypatch):
+    """semantic_dedup's pair stage is one per-bucket GEMM
+    (``groupBy(bucket).applyInPandas``), not a bucket self-join, under
+    both blockers."""
+    from consumer_loans_analysis_spark.operators import curation, dedup
+    from consumer_loans_analysis_spark.operators.semdedup_centroids import (
+        SEMDEDUP_CENTROIDS,
+    )
+
+    seen = []
+    monkeypatch.setattr(dedup, "duplicate_clusters", lambda docs, pairs, id_col: seen.append(pairs))
+    emb = read_table(spark, sf_dir, "embeddings")
+    curation.semantic_dedup(emb, threshold=0.45, n_bits=4)
+    curation.semantic_dedup(emb, threshold=0.45, blocker="kmeans", centroids=SEMDEDUP_CENTROIDS)
+    assert len(seen) == 2
+    for pairs in seen:
+        plan = _plan(pairs)
+        assert "Join" not in plan, plan
+        assert "FlatMapGroupsInPandas" in plan, plan
 
 
 @pytest.mark.parametrize("name", ["sim5_pq_topk", "sim3_ivf_topk"])

@@ -10,6 +10,7 @@ import os
 from pyspark.sql import functions as F
 
 from consumer_loans_analysis_spark.sources import readers
+from consumer_loans_analysis_spark.sources.bucketed import write_bucketed
 
 
 def _sorted_rows(df, key):
@@ -35,25 +36,19 @@ def test_orc_round_trip_partitioned(spark, tmp_path):
     assert pruned.count() == src.filter(F.col("c_mktsegment") == "BUILDING").count()
 
 
-def test_bucketed_join_no_exchange(spark, tmp_path):
+def test_bucketed_join_no_exchange(spark):
     """Co-located bucketed join: both sides bucketed by the join key into the
     same bucket count -> sort-merge join with NO Exchange on either side (the
     100 TB fact-to-fact join path; shuffle paid once at write time)."""
     orders = readers.read_table(spark, "/root/testdata/sf0.001", "orders")
     li = readers.read_table(spark, "/root/testdata/sf0.001", "lineitem")
-    readers.write_bucketed(
-        orders, "t_orders_b", ["o_orderkey"], 4,
-        path=os.path.join(str(tmp_path), "orders_b"), sort_cols=["o_orderkey"],
-    )
-    readers.write_bucketed(
-        li, "t_lineitem_b", ["l_orderkey"], 4,
-        path=os.path.join(str(tmp_path), "lineitem_b"), sort_cols=["l_orderkey"],
-    )
+    write_bucketed(orders, "t_orders_b", ["o_orderkey"], 4)
+    write_bucketed(li, "t_lineitem_b", ["l_orderkey"], 4)
     try:
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            ob, lb = readers.read_bucketed(spark, "t_orders_b"), readers.read_bucketed(spark, "t_lineitem_b")
+            ob, lb = spark.table("t_orders_b"), spark.table("t_lineitem_b")
             joined = ob.join(lb, ob.o_orderkey == lb.l_orderkey).select("o_orderkey", "l_quantity")
             plan = joined._jdf.queryExecution().executedPlan().toString()
             assert "SortMergeJoin" in plan
