@@ -112,36 +112,38 @@ def cross_validate(
     ``soft_auc_col`` (e.g. "probability") adds the probability-AUC the
     reference's screening tables use, when the fold predictions carry that
     column."""
-    folded = add_fold(df, k, seed=seed).cache()
-    folded.count()  # materialize once
-
     def run_fold(i: int) -> dict[str, float]:
         train = folded.filter(F.col("_fold") != i)
         test = folded.filter(F.col("_fold") == i)
         model = estimator_factory().fit(train)
         pred = model.transform(test)
-        two_passes = soft_auc_col and soft_auc_col in pred.columns
-        if two_passes:
-            # the soft-AUC evaluator is a second action over the scored
-            # frame — cache so the model transform runs once, not twice
-            pred = pred.cache()
-        m = binary_metrics(pred, label_col=label_col)
-        if two_passes:
-            from consumer_loans_analysis_spark.ml.metrics import soft_auc
+        if not (soft_auc_col and soft_auc_col in pred.columns):
+            return {**binary_metrics(pred, label_col=label_col), "fold": i}
+        from consumer_loans_analysis_spark.ml.metrics import soft_auc
 
-            # soft_auc runs its actions EAGERLY (returns a float), so by
-            # the time we unpersist here both consumers of `pred` have
-            # executed. If soft_auc is ever refactored to return something
-            # lazy, this unpersist must move after its evaluation or the
-            # model transform silently re-runs.
+        # the soft-AUC evaluator is a second action over the scored frame —
+        # cache so the model transform runs once, not twice. soft_auc runs
+        # its actions EAGERLY (returns a float), so by the time we unpersist
+        # both consumers of `pred` have executed. If soft_auc is ever
+        # refactored to return something lazy, this unpersist must move
+        # after its evaluation or the model transform silently re-runs.
+        pred = pred.cache()
+        try:
+            m = binary_metrics(pred, label_col=label_col)
             m["roc_auc_soft"] = soft_auc(pred, label_col, soft_auc_col)
+        finally:
             pred.unpersist()
         m["fold"] = i
         return m
 
     if parallelism is None:
         parallelism = min(k, df.sparkSession.sparkContext.defaultParallelism)
-    if parallelism > 1:
+    # a fold that raises propagates out of here; the caches go either way
+    folded = add_fold(df, k, seed=seed).cache()
+    try:
+        folded.count()  # materialize once
+        if parallelism <= 1:
+            return [run_fold(i) for i in range(k)]
         with ThreadPoolExecutor(max_workers=parallelism) as pool:
             # wrapped here, in the caller's thread, once per fold: each fold
             # gets its own copy of the caller's local properties (job group,
@@ -150,11 +152,9 @@ def cross_validate(
                 pool.submit(inheritable_thread_target(df.sparkSession)(run_fold), i)
                 for i in range(k)
             ]
-            results = [f.result() for f in futures]
-    else:
-        results = [run_fold(i) for i in range(k)]
-    folded.unpersist()
-    return results
+            return [f.result() for f in futures]
+    finally:
+        folded.unpersist()
 
 
 def cv_summary(fold_metrics: list[dict[str, float]]) -> dict[str, float]:

@@ -38,13 +38,54 @@ from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def _doubled(df: DataFrame, cols: list[str]):
+    """``(frame, restore)``: ``df`` with every non-double scalar column of
+    ``cols`` cast to double under its own name, and a function that puts
+    the original columns back into any frame derived from ``frame``.
+
+    A ``VectorAssembler`` over ``frame`` then finds only doubles (and
+    vectors). Given a long or int input, it casts it itself through a column
+    named ``<col>_double_<its uid>``, and a new assembler has a new uid, so
+    every fit and every transform by a newly fitted model generates new
+    source, which Spark compiles again. The names here never change, so
+    that code is compiled once. The vectors are the same, because the
+    assembler casts to double too, and so is their attribute metadata."""
+    cast = [
+        f.name for f in df.schema.fields
+        if f.name in cols
+        and isinstance(f.dataType, (T.NumericType, T.BooleanType))
+        and not isinstance(f.dataType, T.DoubleType)
+    ]
+    if not cast:
+        return df, lambda out: out
+    kept = {c: f"_{c}_uncast" for c in cast}
+    frame = df.withColumns(
+        {**{k: F.col(c) for c, k in kept.items()},
+         **{c: F.col(c).cast("double") for c in cast}}
+    )
+
+    def restore(out: DataFrame) -> DataFrame:
+        return out.withColumns({c: F.col(k) for c, k in kept.items()}).drop(*kept.values())
+
+    return frame, restore
 
 
 def assemble_features(df: DataFrame, label_col: str = "FINALIZED_LOAN") -> DataFrame:
     """Featured table → MLlib convention: `features` vector + double `label`
-    (O6: the label stays a column; no pandas-style X/y split)."""
+    (O6: the label stays a column; no pandas-style X/y split).
+
+    Every other column is a feature. The non-double ones (the long
+    ``SALARY_ACCOUNT``) are cast before the ``VectorAssembler`` under names
+    that do not change (``_doubled``), so the generated code of every stage
+    over the result is the same from call to call and Spark compiles it
+    once. The result's columns keep their types: ``cross_validate`` hashes
+    them into fold ids."""
     feature_cols = [c for c in df.columns if c != label_col]
-    assembled = VectorAssembler(inputCols=feature_cols, outputCol="features").transform(df)
+    doubled, restore = _doubled(df, feature_cols)
+    assembled = restore(VectorAssembler(inputCols=feature_cols, outputCol="features").transform(doubled))
     return assembled.withColumn("label", F.col(label_col).cast("double"))
 
 

@@ -95,7 +95,7 @@ def audit(df: DataFrame, rules: Sequence[Rule]) -> DataFrame:
     n_rows = int(base["__n"])
     out: list[tuple[str, int, int, bool]] = []
     for r in row_local:
-        v = int(base[r.name])
+        v = int(base[r.name] or 0)  # SUM over no rows is null
         out.append((r.name, n_rows, v, v == 0))
     for r in rules:
         if r.kind == "unique":

@@ -10,7 +10,11 @@ The transform path of BOTH pipelines is a pure projection over the scan —
 fit-state enters as literals, so Catalyst collapses every stage into one
 whole-stage-codegen'd select (verified in tests/test_loans_pipeline.py). The
 only shuffling work is in the fits (quantiles, modes, distincts, forest
-training) — exactly the property that makes this run at 100 TB.
+training) — exactly the property that makes this run at 100 TB. No stage
+puts a uid or other per-fit name into its plan, so a refit on the same data
+generates the same source and Spark reuses the compiled code: a second
+fit + score + CV round compiles no class
+(``test_loans_second_round_compiles_nothing``).
 """
 
 from __future__ import annotations

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from consumer_loans_analysis_spark.ml.zoo import _doubled
 from consumer_loans_analysis_spark.pipeline.stages import _JsonParamMixin
 
 
@@ -73,8 +74,11 @@ class ModelImputerModel(Model, MLWritable, MLReadable):
         feature_cols = self.spec["featureCols"]
         bag = int(self.spec.get("bagSize", 1))
         # predict over the full frame; missing feature values can't occur
-        # (features are the already-processed numeric columns)
-        pred = self.inner.transform(df.select(*df.columns))
+        # (features are the already-processed numeric columns). The inner
+        # assembler gets the features as doubles, cast under names that do
+        # not change, so a refitted model reuses the generated code.
+        doubled, restore = _doubled(df.select(*df.columns), feature_cols)
+        pred = restore(self.inner.transform(doubled))
         lab_arr = F.array(*[F.lit(l) for l in labels])
         if bag > 1:
             # seed-bagged soft vote: average the members' per-class
@@ -227,7 +231,8 @@ class ModelImputer(Estimator, _JsonParamMixin, DefaultParamsReadable, DefaultPar
             if c != target and not any(c.startswith(p) for p in excl)
         ]
         cond = F.col(target).isNotNull() if sentinel is None else (F.col(target) != sentinel)
-        train = df.filter(cond).withColumn("_mi_label_src", F.col(target).cast("string"))
+        train, _ = _doubled(df.filter(cond), feature_cols)
+        train = train.withColumn("_mi_label_src", F.col(target).cast("string"))
 
         family = self.getOrDefault(self.classifierFamily)
         n_classes = (

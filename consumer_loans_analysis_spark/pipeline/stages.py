@@ -321,7 +321,9 @@ class ScalarStandardScalerModel(Model, _JsonParamMixin, DefaultParamsReadable, D
     def _transform(self, df: DataFrame) -> DataFrame:
         return df.withColumns(
             {
-                c: (F.col(c) - F.lit(mu)) / F.lit(sd)
+                # a null mean/std (a column with no values at fit) is a
+                # typed null literal, so the column stays double
+                c: (F.col(c) - F.lit(mu).cast("double")) / F.lit(sd).cast("double")
                 for c, (mu, sd) in self._get_json(self.stats).items()
             }
         )
@@ -331,7 +333,11 @@ class ScalarStandardScaler(Estimator, _JsonParamMixin, DefaultParamsReadable, De
     """E4: named-scalar-column standardization (x−μ)/σ. sklearn's
     StandardScaler divides by the POPULATION std (ddof=0) — matched here
     with ``stddev_pop`` for golden parity (eda_processing.ipynb:2201-2217).
-    Fit = one aggregation for all columns."""
+    Fit = one aggregation for all columns.
+
+    A column with no non-null value at fit (an empty frame, or all nulls)
+    fits a null mean and std, as SQL ``AVG`` does, and its transform yields
+    null."""
 
     cols = Param(Params._dummy(), "cols", "JSON [col]", TypeConverters.toString)
 
@@ -348,9 +354,11 @@ class ScalarStandardScaler(Estimator, _JsonParamMixin, DefaultParamsReadable, De
         row = df.agg(*aggs).head()
         # sklearn's _handle_zeros_in_scale: a constant column scales by 1
         # (also keeps the transform's /sd literal ANSI-safe).
-        stats = {
-            c: [float(row[f"mu_{c}"]), float(row[f"sd_{c}"]) or 1.0] for c in cols
-        }
+        stats = {}
+        for c in cols:
+            mu, sd = row[f"mu_{c}"], row[f"sd_{c}"]
+            # both null when the column has no value
+            stats[c] = [None, None] if mu is None else [float(mu), float(sd) or 1.0]
         model = ScalarStandardScalerModel(stats=stats)
         model._resetUid(self.uid)
         return self._copyValues(model)

@@ -61,6 +61,16 @@ DEFAULT_CONFIGS: dict[str, str] = {
     # config: set it back to "true" through ``extra_configs`` (before the
     # session starts) to debug a failing expression.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Generated-code cache entries (Spark's default is 100). An entry is
+    # keyed by classloader and source, and in local mode a stage compiles
+    # twice, once under the planning thread's loader and once under the
+    # task thread's, so the working set is twice the distinct sources. Read
+    # through reflection on a warmed session: one loans pass (fit, score,
+    # 6-fold CV) holds 112 entries, a datapipe pass 81. At 100 the LRU
+    # evicted the loans code every pass, and every pass compiled about 60
+    # classes again. A static config: it sizes the JVM-wide cache when the
+    # first session starts.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 # r12 (guide §2.4: scale-adaptive partitioning, parameterised — not a local

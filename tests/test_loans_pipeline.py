@@ -436,3 +436,101 @@ def test_model_imputer_seed_bag_soft_vote(spark, tmp_path):
     with _pytest.raises(ValueError, match="seedBag"):
         ModelImputer(targetCol="t", sentinel="Missing", seedBag=3,
                      classifierFamily="lr").fit(df)
+
+
+def _compiles(spark) -> int:
+    """Janino compiles so far in this JVM (Spark's codegen metrics)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_loans_second_round_compiles_nothing(spark, loans_paths):
+    """The loans pass (EP1+EP2 fit, scoring, 6-fold gaussian_nb CV) reuses
+    its generated code: a second round compiles no class. It needs both a
+    codegen cache that holds the pass's working set and feature assembly
+    whose generated source does not change from call to call."""
+    from consumer_loans_analysis_spark.ml.cv import cross_validate
+    from consumer_loans_analysis_spark.ml.zoo import assemble_features, model_zoo
+    from consumer_loans_analysis_spark.pipeline.loans import fit_full_pipeline
+
+    def one_round():
+        train = read_loans_csv(spark, loans_paths["train"])
+        processing, features = fit_full_pipeline(train, with_model_imputers=False)
+        valid = read_loans_csv(spark, loans_paths["valid"])
+        features.transform(processing.transform(valid)).toPandas()
+        assembled = assemble_features(features.transform(processing.transform(train)))
+        return cross_validate(model_zoo()["gaussian_nb"], assembled, k=6)
+
+    first = one_round()
+    before = _compiles(spark)
+    second = one_round()
+    assert _compiles(spark) - before == 0
+    assert second == first
+
+
+def test_assemble_features_equals_vector_assembler(spark, loans_train):
+    """``assemble_features`` gives a plain VectorAssembler's vectors, row for
+    row, keeps every column's type, and puts no assembler uid in its plan."""
+    from pyspark.ml.feature import VectorAssembler
+
+    from consumer_loans_analysis_spark.ml.zoo import assemble_features
+    from consumer_loans_analysis_spark.pipeline.loans import fit_full_pipeline
+
+    processing, features = fit_full_pipeline(loans_train, with_model_imputers=False)
+    featured = features.transform(processing.transform(loans_train))
+    assert dict(featured.dtypes)["SALARY_ACCOUNT"] == "bigint"  # a cast is needed
+    ours = assemble_features(featured)
+    feature_cols = [c for c in featured.columns if c != "FINALIZED_LOAN"]
+    plain = VectorAssembler(inputCols=feature_cols, outputCol="features").transform(featured)
+    assert ours.drop("label").dtypes == plain.dtypes
+    assert ours.schema["features"].metadata == plain.schema["features"].metadata
+    assert ours.drop("label").collect() == plain.collect()
+    key = "spark.sql.debug.maxToStringFields"  # else the wide struct is cut
+    spark.conf.set(key, "1000")
+    try:
+        assert "VectorAssembler_" not in ours._jdf.queryExecution().analyzed().toString()
+    finally:
+        spark.conf.unset(key)
+
+
+def test_model_imputer_transform_compiles_once(spark):
+    """A ModelImputerModel assembles its long features uid-free: a second
+    transform, by the same model or by one fitted again, compiles no class,
+    and the imputed values are those of its inner pipeline run on the
+    uncast frame."""
+    from consumer_loans_analysis_spark.pipeline.model_imputer import ModelImputer
+
+    rows = [(i % 3, float((i * 7) % 5), "abc"[i % 3] if i % 5 else "Missing")
+            for i in range(200)]
+    df = spark.createDataFrame(rows, "x long, y double, t string")
+
+    def fit():
+        return ModelImputer(targetCol="t", sentinel="Missing", numTrees=5,
+                            maxDepth=3).fit(df)
+
+    model, refit = fit(), fit()
+    first = model.transform(df).collect()
+    before = _compiles(spark)
+    assert model.transform(df).collect() == first
+    assert refit.transform(df).collect() == first
+    assert _compiles(spark) - before == 0
+    assert model.transform(df).dtypes == df.dtypes
+    assert [r[:2] for r in first] == [r[:2] for r in df.collect()]
+    labels = model.spec["labels"]
+    inner = model.inner.transform(df).select("t", "_mi_prediction").collect()
+    assert [r["t"] for r in first] == [
+        labels[int(p)] if t == "Missing" else t for t, p in inner
+    ]
+
+
+def test_scaler_empty_and_all_null_columns(spark):
+    """A column with no value at fit (an empty frame, or all nulls) fits a
+    null mean and std, and its transform yields null doubles."""
+    df = spark.createDataFrame([(1, 2.0), (3, None)], "x long, y double")
+    for fit_on, cols in ((df.limit(0), ["x", "y"]), (df.filter(F.col("y").isNull()), ["y"])):
+        model = ScalarStandardScaler(cols=cols).fit(fit_on)
+        stats = model._get_json(model.stats)
+        assert all(stats[c] == [None, None] for c in cols)
+        out = model.transform(df)
+        assert all(dict(out.dtypes)[c] == "double" for c in cols)
+        assert out.filter(F.coalesce(*[F.col(c) for c in cols]).isNotNull()).count() == 0

@@ -159,6 +159,28 @@ def test_cv_fold_jobs_stay_in_callers_job_group(spark, toy):
     assert counts[None] == counts[1], counts
 
 
+def test_cv_unpersists_when_a_fold_raises(spark, toy):
+    """A fold whose fit raises propagates its error, and the folded frame
+    and the other folds' cached predictions are released all the same."""
+    import itertools
+
+    class FailsOnFold3(NaiveBayes):
+        def _fit(self, dataset):
+            if next(calls) == 3:
+                raise RuntimeError("fold 3 fit failed")
+            return super()._fit(dataset)
+
+    sc = spark.sparkContext
+    toy.count()  # the fixture's own cache is not the test's to count
+    before = sc._jsc.getPersistentRDDs().size()
+    for parallelism in (1, None):
+        calls = itertools.count()
+        with pytest.raises(RuntimeError, match="fold 3 fit failed"):
+            cross_validate(lambda: FailsOnFold3(modelType="gaussian"), toy, k=6,
+                           parallelism=parallelism, soft_auc_col="probability")
+        assert sc._jsc.getPersistentRDDs().size() == before, parallelism
+
+
 def test_sample_params_respects_space():
     import numpy as np
 

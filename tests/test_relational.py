@@ -156,3 +156,22 @@ def test_e_stage_gate_queries_invariants(spark, sf_dir):
         "s", sum(F.col(c) for c in enc_cols)
     ).filter(F.col("s") != 1.0)
     assert bad.count() == 0
+
+
+def test_constraint_audit_on_empty_input(spark, sf_dir):
+    """dq1's rules over zero orders: every rule sees 0 rows, 0 violations
+    and passes."""
+    from consumer_loans_analysis_spark.operators import quality as dq
+    from consumer_loans_analysis_spark.sources.readers import read_table
+
+    orders = read_table(spark, sf_dir, "orders").limit(0)
+    cust = read_table(spark, sf_dir, "customer")
+    rules = [
+        dq.not_null("o_orderkey"),
+        dq.unique("o_orderkey"),
+        dq.in_set("o_orderstatus", ["O", "F", "P"]),
+        dq.in_range("o_totalprice", 0, 10_000_000),
+        dq.foreign_key("o_custkey", cust, "c_custkey"),
+    ]
+    got = [tuple(r) for r in dq.audit(orders, rules).collect()]
+    assert got == [(r.name, 0, 0, True) for r in rules]

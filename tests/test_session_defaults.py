@@ -83,3 +83,10 @@ def test_top_k_falls_back_to_a_sort_for_large_k(monkeypatch):
     k; beyond it a spilling sort runs instead of a 2k-slot buffer."""
     conf = _build(monkeypatch).conf
     assert int(conf["spark.sql.execution.topKSortFallbackThreshold"]) <= 100_000
+
+
+def test_codegen_cache_holds_the_loans_working_set(monkeypatch):
+    """The generated-code cache is sized well above one loans pass's 112
+    entries; Spark's default of 100 evicts them every pass."""
+    entries = int(_build(monkeypatch).conf["spark.sql.codegen.cache.maxEntries"])
+    assert entries >= 4 * 112
