@@ -17,10 +17,11 @@ table shuffles ONCE per query; skewed whale-users are the one risk
 user and cannot be salted without splitting sessions).
 
 Timestamp discipline: comparisons and gap arithmetic use only RELATIVE
-time (shift-invariant under the TIMESTAMP vs TIMESTAMP_NTZ testdata
-shapes — see sources/readers.read_table); absolute calendar outputs
-(cohort days) use ``to_date`` on the wall-clock value, which is
-timezone-independent for the NTZ shape.
+time, so they hold whether ``ts`` is TIMESTAMP_NTZ (as
+sources/readers.read_table declares it) or TIMESTAMP (as the events
+stream declares it); absolute calendar outputs (cohort days) use
+``to_date`` on the wall-clock value, which is timezone-independent for
+the NTZ batch read.
 """
 
 from __future__ import annotations

@@ -3221,8 +3221,9 @@ def _d11b_oracle() -> str:
 def d11b_semantic_dedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """d11 with the SemDeDup paper's blocker proper: spherical k-means
     assignment instead of the sign-LSH bucket. The blocker's centroids are
-    PINNED (``operators/semdedup_centroids.py`` — fitted once on sf0.01
-    with k=8/seed=42, then frozen; the production shape for a quantizer),
+    PINNED (``operators/semdedup_centroids.py`` — the live fit below, run
+    once on sf0.01 with k=8/seed=42, then frozen; the production shape for
+    a quantizer),
     so assignment is a pure Column expression and the WHOLE query carries
     a full DuckDB hash oracle with the same centroid literals. Within each
     cluster, pairs come from d5's GEMM pair kernel. The live fit (no

@@ -1224,24 +1224,26 @@ def sk1_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "events")
     uid_view = F.when(F.col("event_type") == "view", F.col("user_id"))
     uid_click = F.when(F.col("event_type") == "click", F.col("user_id"))
-    agg = e.agg(
+    sketches = e.agg(
         F.theta_sketch_agg(uid_view).alias("sk_v"),
         F.theta_sketch_agg(uid_click).alias("sk_c"),
-        F.countDistinct(uid_view).alias("x_v"),
-        F.countDistinct(uid_click).alias("x_c"),
-        F.countDistinct(
-            F.when(F.col("event_type").isin("view", "click"), F.col("user_id"))
-        ).alias("x_u"),
     )
-    both = (
-        e.groupBy("user_id")
-        .agg(
-            F.max((F.col("event_type") == "view").cast("int")).alias("v"),
-            F.max((F.col("event_type") == "click").cast("int")).alias("c"),
-        )
-        .agg(F.sum(F.col("v") * F.col("c")).cast("long").alias("x_i"))
+    # the exact side from one row per user; count_if counts 0 on no rows,
+    # as DuckDB does (COUNT(DISTINCT) skips a NULL user, INTERSECT keeps
+    # it). Distinct counts next to the sketches would plan Spark's
+    # multi-distinct rewrite, which returns NULL sketches on empty input.
+    users = e.groupBy("user_id").agg(
+        F.max((F.col("event_type") == "view").cast("int")).alias("v"),
+        F.max((F.col("event_type") == "click").cast("int")).alias("c"),
     )
-    est = agg.crossJoin(F.broadcast(both)).select(
+    known, v, c = F.col("user_id").isNotNull(), F.col("v") == 1, F.col("c") == 1
+    exact = users.agg(
+        F.count_if(known & v).alias("x_v"),
+        F.count_if(known & c).alias("x_c"),
+        F.count_if(known & (v | c)).alias("x_u"),
+        F.count_if(v & c).alias("x_i"),
+    )
+    est = sketches.crossJoin(F.broadcast(exact)).select(
         F.theta_sketch_estimate(F.col("sk_v")).alias("e_v"),
         F.theta_sketch_estimate(F.col("sk_c")).alias("e_c"),
         F.theta_sketch_estimate(F.theta_union(F.col("sk_v"), F.col("sk_c"))).alias("e_u"),
@@ -1257,9 +1259,14 @@ def sk1_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[
             F.struct(
                 F.lit(metric).alias("metric"),
-                F.col(ex).cast("long").alias("n_exact"),
+                F.col(ex).alias("n_exact"),
                 F.col(es).alias("n_est"),
-                (F.abs(F.col(es) - F.col(ex)) / F.col(ex) < 0.05).alias("_ok"),
+                # an exact match passes even at 0 against 0, where the
+                # relative error is undefined
+                (
+                    (F.col(es) == F.col(ex))
+                    | (F.try_divide(F.abs(F.col(es) - F.col(ex)), F.col(ex)) < 0.05)
+                ).alias("_ok"),
             )
             for metric, ex, es in [
                 ("view", "x_v", "e_v"), ("click", "x_c", "e_c"),

@@ -160,10 +160,10 @@ def range_join_followers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stays a hash join at any scale (a raw interval join would fall back to
     broadcast-nested-loop, O(n²))."""
     e = read_table(spark, sf_dir, "events")
-    # ts only feeds RELATIVE arithmetic here; the cast makes unix_micros
-    # accept the TIMESTAMP_NTZ shape newer testdata ships (a no-op for
-    # TIMESTAMP, a uniform session-tz shift for NTZ — bucket and range
-    # comparisons are shift-invariant)
+    # unix_micros takes only TIMESTAMP and read_table declares ts
+    # TIMESTAMP_NTZ, hence the cast; it is a uniform session-tz shift, and
+    # ts only feeds RELATIVE arithmetic here (bucket and range comparisons
+    # are shift-invariant)
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     bucket = F.floor(us / 60_000_000)
     probe = e.select(

@@ -4,7 +4,7 @@ The reference infers schemas with ``pd.read_csv`` (no dtype spec —
 reference notebooks/eda_processing.ipynb:63); we pin them for determinism
 (SURVEY §1.3). ``LOANS_RAW_SCHEMA`` mirrors the 23-column raw loans CSV,
 including the column name ``BUSINESS AGE`` with an embedded space.
-Testdata schemas mirror the driver's parquet tables (TESTDATA.md).
+``TESTDATA_SCHEMAS`` declares the testdata parquet tables (TESTDATA.md).
 """
 
 from __future__ import annotations
@@ -65,15 +65,38 @@ EMPLOYEE_NO_ORDER = [
 ]
 
 # --- driver testdata schemas (TESTDATA.md) ---
-TESTDATA_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+# One DDL per table, in the file's column order, with the types Spark infers
+# from the parquet footer; read_table and stream_events read through these,
+# so no read has to open a footer. Timestamps are TIMESTAMP(MICROS) in the
+# files, which Spark reads as TIMESTAMP_NTZ.
+TESTDATA_SCHEMAS: dict[str, str] = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+        "c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+        "p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+        "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
+        "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, "
+        "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, "
+        "value DOUBLE, props STRING"
+    ),
+    "documents": (
+        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
+    ),
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+TESTDATA_TABLES = list(TESTDATA_SCHEMAS)

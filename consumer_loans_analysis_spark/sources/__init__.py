@@ -1,8 +1,7 @@
 from consumer_loans_analysis_spark.sources.readers import (
-    load_tables,
     read_loans_csv,
     read_table,
     write_parquet,
 )
 
-__all__ = ["load_tables", "read_loans_csv", "read_table", "write_parquet"]
+__all__ = ["read_loans_csv", "read_table", "write_parquet"]

@@ -2,9 +2,10 @@
 
 All readers return lazy DataFrames; no action is triggered here. Parquet is
 the internal interchange format (columnar, splittable, predicate-pushdown
-friendly); CSV is supported with an explicit schema for the loans ingest
-(inferSchema would need an extra full scan and is non-deterministic across
-files — SURVEY §1.3).
+friendly). The loans CSV and the testdata parquet tables are read through
+declared schemas (``schemas.py``): CSV inference would need an extra full
+scan and is non-deterministic across files (SURVEY §1.3), and parquet
+inference runs a footer-read job on every call.
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from consumer_loans_analysis_spark.schemas import LOANS_RAW_SCHEMA, TESTDATA_TABLES
+from consumer_loans_analysis_spark.schemas import LOANS_RAW_SCHEMA, TESTDATA_SCHEMAS
 
 
 def read_loans_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -29,51 +30,12 @@ def read_loans_csv(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver testdata parquet table (TESTDATA.md).
-
-    The events table stores ``ts`` as parquet TIMESTAMP(NANOS), which the
-    Spark vectorized reader rejects; read it as long (legacy flag) and
-    truncate to microsecond timestamps (same value DuckDB yields).
-    """
+    """Read one testdata parquet table (TESTDATA.md) through its
+    declared schema (``schemas.TESTDATA_SCHEMAS``), so no footer is read
+    and no job runs until an action. A file whose types differ from the
+    declaration fails at its first action."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        # Scope the legacy flag to this read: schema resolution happens
-        # eagerly at spark.read.parquet(), so restoring the previous value
-        # afterwards keeps later unrelated parquet reads on this session
-        # from silently surfacing nano-timestamps as bigint. (The resolved
-        # relation keeps working after the restore — execution uses the
-        # schema captured here.)
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "true")
-        try:
-            df = spark.read.parquet(path)
-            df.schema  # force resolution under the flag
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-        if dict(df.dtypes).get("ts") == "bigint":
-            from pyspark.sql import functions as F
-
-            # integer division — double division loses ulps at 1e18 nanos
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df
-    return spark.read.parquet(path)
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    """Load the testdata star schema as a dict of DataFrames."""
-    return {name: read_table(spark, sf_dir, name) for name in (names or TESTDATA_TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+    return spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(path)
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:

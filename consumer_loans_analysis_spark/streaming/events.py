@@ -31,41 +31,13 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
-# events.parquet raw shape when ts is TIMESTAMP(NANOS) (driver testdata has
-# shipped both NANOS and MICROS across rounds — the reader probes): the
-# vectorized reader rejects nanos, so the stream takes ts as long under the
-# legacy flag and truncates to microseconds with integer division (gotcha:
-# double division loses ulps at 1e18 nanos).
-EVENTS_RAW_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", LongType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
+from consumer_loans_analysis_spark.schemas import TESTDATA_SCHEMAS
 
-EVENTS_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
+# The declared events table with ts as TIMESTAMP, not the file's (and the
+# batch read's) TIMESTAMP_NTZ: withWatermark rejects an NTZ event-time
+# column (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE on Spark 4.1).
+EVENTS_SCHEMA = TESTDATA_SCHEMAS["events"].replace("ts TIMESTAMP_NTZ", "ts TIMESTAMP")
 
 
 def stream_events(
@@ -80,41 +52,15 @@ def stream_events(
     one-line change (``format("kafka")`` + from_json) because everything
     downstream only sees the typed schema.
 
-    The physical ``ts`` type is probed first (a metadata-only batch schema
-    resolution): TIMESTAMP(MICROS) files stream directly under the typed
-    schema; TIMESTAMP(NANOS) files — which the vectorized reader rejects —
-    stream as long under the legacy flag and truncate to microseconds.
-    In the nanos case the flag is session-wide and deliberately NOT
-    restored: micro-batches execute for the stream's whole lifetime and
-    need it live (``read_table`` handles either shape for batch reads).
+    The schema is declared (``EVENTS_SCHEMA``), so starting the stream
+    reads no footer and runs no job.
     """
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
-        probed = (
-            spark.read.option("pathGlobFilter", glob).parquet(sf_dir).schema
-        )
-        ts_is_nanos = dict(
-            (f.name, f.dataType.simpleString()) for f in probed
-        ).get("ts") == "bigint"
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     # the file stream source lists a DIRECTORY; testdata ships events as a
     # single file, so stream the dir with a glob filter selecting it
-    reader = spark.readStream.schema(
-        EVENTS_RAW_SCHEMA if ts_is_nanos else EVENTS_SCHEMA
-    ).option("pathGlobFilter", glob)
+    reader = spark.readStream.schema(EVENTS_SCHEMA).option("pathGlobFilter", glob)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if not ts_is_nanos:
-        return reader.parquet(sf_dir)
-    spark.conf.set(key, "true")  # live for the stream's lifetime
-    raw = reader.parquet(sf_dir)
-    return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return reader.parquet(sf_dir)
 
 
 def tumbling_counts(

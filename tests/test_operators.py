@@ -2122,6 +2122,31 @@ def test_sketch_guard_raises_on_miss(spark):
         missed.collect()
 
 
+def test_theta_set_ops_on_empty_events(spark, sf_dir, tmp_path):
+    """On a zero-row events table sk1 matches its DuckDB oracle under ANSI:
+    every estimate is 0 against an exact 0, which its guard accepts, and
+    the intersection count is 0, not NULL."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from consumer_loans_analysis_spark.plans import registry
+    from verify_local import canon_pdf
+
+    registry.load_all()
+    events = str(tmp_path / "events.parquet")
+    pq.write_table(pq.read_table(f"{sf_dir}/events.parquet").slice(0, 0), events)
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got = registry.QUERIES["sk1_theta_set_ops"](spark, str(tmp_path)).toPandas()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{events}'")
+    want = con.execute(registry.ORACLES["sk1_theta_set_ops"]).df()
+    assert canon_pdf(got) == canon_pdf(want)
+
+
 def test_broadcast_encode_large_vocab_smoke(spark):
     """A synthetic 5k-piece vocabulary — far past any literal-plan size —
     encodes through the closure-broadcast path losslessly (concat of

@@ -117,19 +117,17 @@ def _build_jobs(spark, group, build) -> list:
 
 
 def test_d5_build_runs_no_job(spark, sf_dir):
-    """Building d5 at sf0.01 launches no job beyond those ``read_table``
-    alone launches (its parquet footer read): the block pairs cogroup
+    """Building d5 at sf0.01 launches no job: the block pairs cogroup
     straight into the GEMM kernel, so nothing is packed or checkpointed
     while the plan is built."""
     from consumer_loans_analysis_spark.plans import registry
 
     registry.load_all()
     sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
-    read = _build_jobs(spark, "d5_build_read", lambda: read_table(spark, sf01, "embeddings"))
     d5 = _build_jobs(
         spark, "d5_build", lambda: registry.QUERIES["d5_embedding_near_dupes"](spark, sf01)
     )
-    assert len(d5) == len(read), (d5, read)
+    assert d5 == [], d5
 
 
 def test_semantic_dedup_pairs_have_no_join(spark, sf_dir, monkeypatch):
@@ -155,10 +153,10 @@ def test_semantic_dedup_pairs_have_no_join(spark, sf_dir, monkeypatch):
 
 @pytest.mark.parametrize("name", ["sim5_pq_topk", "sim3_ivf_topk"])
 def test_live_ann_build_jobs(spark, sf_dir, name):
-    """Building a live-fit ANN query at sf0.01 runs exactly three Spark
-    jobs: the parquet footer read, the fit-sample collect and the query
-    collect — no checkpoint of the corpus and no count (the default list
-    count and the auto re-rank budget both read the fit sample's size)."""
+    """Building a live-fit ANN query at sf0.01 runs exactly two Spark
+    jobs: the fit-sample collect and the query collect — no checkpoint of
+    the corpus and no count (the default list count and the auto re-rank
+    budget both read the fit sample's size)."""
     from consumer_loans_analysis_spark.plans import registry
 
     registry.load_all()
@@ -171,7 +169,7 @@ def test_live_ann_build_jobs(spark, sf_dir, name):
         jobs = sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setJobGroup(None, None)
-    assert len(jobs) == 3, jobs
+    assert len(jobs) == 2, jobs
 
 
 def test_dedup_build_action_free(spark, sf_dir):

@@ -2,15 +2,44 @@
 
 Round-trip = write with the sink, read with the reader, compare the full
 sorted row multiset — covers schema fidelity (incl. timestamp and double
-columns) rather than just row counts.
+columns) rather than just row counts. The declared testdata schemas are
+pinned against the files' own footers.
 """
 
+import glob
+import importlib.util
 import os
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
+from consumer_loans_analysis_spark.schemas import TESTDATA_SCHEMAS
 from consumer_loans_analysis_spark.sources import readers
 from consumer_loans_analysis_spark.sources.bucketed import write_bucketed
+
+
+DATAGEN = Path(__file__).resolve().parents[1] / "perfbench" / "datagen.py"
+
+
+def test_declared_schemas_match_files(spark, sf_dir, tmp_path):
+    """Every table of every testdata scale, and every table the benchmark
+    generates (``perfbench/datagen.py``, seed 1, sf 0.001), reads through
+    its declared schema with exactly the types (and column order) Spark
+    infers from the file. After a data regen, a changed type fails here
+    rather than deep inside a query."""
+    spec = importlib.util.spec_from_file_location("datagen", DATAGEN)
+    datagen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(datagen)
+    dirs = sorted(glob.glob(os.path.join(os.path.dirname(sf_dir), "sf*")))
+    dirs.append(datagen.write_tables(str(tmp_path), 1, 0.001))
+    mismatched = []
+    for d in dirs:
+        for name, ddl in TESTDATA_SCHEMAS.items():
+            path = os.path.join(d, f"{name}.parquet")
+            inferred = spark.read.parquet(path).schema
+            if spark.read.schema(ddl).parquet(path).schema != inferred:
+                mismatched.append((d, name, inferred.simpleString()))
+    assert not mismatched, mismatched
 
 
 def _sorted_rows(df, key):
