@@ -240,25 +240,6 @@ def quantile_bounds(
     )
 
 
-def corr_pairs(df: DataFrame, cols: list[str]) -> DataFrame:
-    """A12: Pearson correlation for every unordered column pair, long format
-    (col_a, col_b, corr) — all pairs in ONE aggregation pass."""
-    aggs = []
-    pairs = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1 :]]
-    for a, b in pairs:
-        aggs.append(
-            F.struct(
-                F.lit(a).alias("col_a"),
-                F.lit(b).alias("col_b"),
-                F.corr(F.col(a), F.col(b)).alias("corr"),
-            ).alias(f"_c_{a}_{b}")
-        )
-    row = df.agg(*aggs)
-    return row.select(
-        F.explode(F.array(*[F.col(f"_c_{a}_{b}") for a, b in pairs])).alias("s")
-    ).select("s.*")
-
-
 def mutual_information(df: DataFrame, x: str, y: str) -> DataFrame:
     """A14: mutual information I(X;Y) between two discrete columns, in nats.
 

@@ -64,20 +64,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
-def sq_l2(a: Column, b: Column) -> Column:
-    """Squared euclidean distance between two float arrays."""
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _ltr_dot(A, B):
     """Left-to-right dot product over the LAST axis of two broadcastable
     numpy arrays — explicit elementwise multiply + add chain, NO BLAS and

@@ -539,7 +539,12 @@ def e11_stream_stateful_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp compare); sum_value follows e4's convention — the stream's
     Python-float accumulation is arrival-order dependent, so the exact
     decimal sum is recomputed in one batch pass and joined (the stream's
-    own sum is tolerance-asserted in tests/test_streaming.py)."""
+    own sum is tolerance-asserted in tests/test_streaming.py).
+
+    The operator evicts idle users by event time, so the drain ends by
+    itself: the data batch, then one empty batch in which the final
+    watermark evicts users idle > 24 h. An eviction emits no row, so each
+    user's last emitted row is its final state."""
     from consumer_loans_analysis_spark.functions.relational import decimal_sum
     from consumer_loans_analysis_spark.streaming.events import (
         run_to_memory,

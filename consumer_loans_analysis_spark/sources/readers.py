@@ -46,12 +46,6 @@ def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_b
     writer.parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """CSV sink with header (S2; reference ``to_csv`` at
-    notebooks/eda_processing.ipynb:2765-2768)."""
-    df.write.mode(mode).option("header", True).csv(path)
-
-
 def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
     """JSON-lines scan. An explicit schema skips the inference pre-scan and
     pins types (same determinism argument as the CSV reader); without one,

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from consumer_loans_analysis_spark.operators import dedup
+from consumer_loans_analysis_spark.schemas import TESTDATA_SCHEMAS
 from consumer_loans_analysis_spark.streaming.events import run_foreach_batch
 
 # Explicit state-table schemas. Partitioned dynamic-overwrite writes of an
@@ -131,10 +132,11 @@ def stream_dedup_corpus(
 ) -> DataFrame:
     """Stream a directory of document parquet files (one micro-batch per
     file via maxFilesPerTrigger) through ``ingest_batch``; returns the
-    cumulative verified near-dup pairs after the drain."""
-    schema = spark.read.parquet(docs_dir).schema
+    cumulative verified near-dup pairs after the drain. The files hold
+    the documents table's declared schema, so starting the stream reads
+    no footer and runs no job."""
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(TESTDATA_SCHEMAS["documents"])
         .option("maxFilesPerTrigger", 1)
         .parquet(docs_dir)
     )

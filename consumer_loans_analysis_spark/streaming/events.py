@@ -7,7 +7,10 @@ e1/e2/e3 run (plans/window_queries.py) are expressed on an unbounded
 DataFrame with ``withWatermark`` for late data. Batch/stream parity is the
 design invariant, tested by running each stream on the static events
 parquet with ``trigger(availableNow=True)`` and comparing to the batch
-result.
+result. Every such drained stream ends by itself once its source is
+consumed; a stateful operator that keeps scheduling empty batches (a
+processing-time timeout) never does, and ``_drain`` raises for it at the
+deadline instead of returning a partial sink.
 
 Scale notes: streaming window aggs shuffle on (window, keys) exactly like
 batch; state is bounded by the watermark horizon (old windows evict), so a
@@ -114,20 +117,11 @@ def run_to_memory(
 ) -> StreamingQuery:
     """Drain an availableNow stream into an in-memory table `name`
     (complete mode for aggregations; append for joins/dedup) — the
-    test/debug sink. Returns the stopped query.
+    test/debug sink. Returns the ended query.
 
     The state partition count is fixed at one per core when the query
     first starts, and is read from the checkpoint after that (see
-    ``_drain``).
-
-    Most availableNow queries self-terminate once the source is exhausted.
-    Stateful queries with a ProcessingTimeTimeout do NOT: after the data
-    batches, the engine keeps scheduling empty "no new data but cleaning up
-    state" batches waiting for timers that may be hours away, so a plain
-    ``awaitTermination(timeout)`` silently burns the whole timeout. Detect
-    the drained condition instead — all input consumed AND a completed
-    zero-row trigger — and stop the query explicitly (update-mode output
-    for the data batches is already in the sink at that point)."""
+    ``_drain``)."""
     writer = stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
     return _drain(stream_df.sparkSession, writer, timeout_sec)
 
@@ -137,7 +131,7 @@ def run_foreach_batch(
 ) -> StreamingQuery:
     """Production-shaped sink: per-microbatch callable (e.g. upsert to a
     warehouse, or PipelineModel.transform for streaming serving) with
-    exactly-once bookkeeping via the checkpoint. Returns the stopped query.
+    exactly-once bookkeeping via the checkpoint. Returns the ended query.
 
     A fresh checkpoint starts with one state partition per core; resuming
     an existing one keeps the count it was first written with."""
@@ -158,14 +152,19 @@ _START_LOCK = threading.Lock()
 def _drain(
     spark: SparkSession, writer: DataStreamWriter, timeout_sec: int
 ) -> StreamingQuery:
-    """Start ``writer`` as an availableNow query and wait until it drains.
+    """Start ``writer`` as an availableNow query and wait until it ends.
 
     The query copies the session's conf once, at ``start()``, and a fresh
     query records ``spark.sql.shuffle.partitions`` in its checkpoint as its
     state partition count. So it starts with the count set to one per core,
     and the session's own value (the batch queries' shuffle width) is put
     back at once. A restart from an existing checkpoint takes the count from
-    the checkpoint's offset log instead, so existing state keeps its layout."""
+    the checkpoint's offset log instead, so existing state keeps its layout.
+
+    An availableNow query ends by itself once its source is consumed, and
+    ``awaitTermination`` re-raises a query that failed. One still running
+    at ``timeout_sec`` is stopped, and ``TimeoutError`` is raised: its sink
+    may be incomplete."""
     key = "spark.sql.shuffle.partitions"
     with _START_LOCK:
         prev = spark.conf.get(key)
@@ -174,60 +173,10 @@ def _drain(
             q = writer.trigger(availableNow=True).start()
         finally:
             spark.conf.set(key, prev)
-    _await_drained(q, timeout_sec)
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(f"stream {q.name or q.id} did not end within {timeout_sec} s")
     return q
-
-
-def _between_batches(status: dict) -> bool:
-    """True while no micro-batch is being planned or run: no trigger is
-    active, or the active one is still writing its offsets to the log.
-
-    A stop interrupts the query's thread and cancels its jobs: during a
-    batch's planning a broadcast being stored fails (``ERROR
-    TorrentBroadcast``), during its jobs the sink and state-store commits
-    abort with ERRORs. A drained query with a processing-time timeout runs
-    its empty batches back to back, so ``isTriggerActive`` never reads
-    false; the offset-log write that opens each trigger is the gap."""
-    return not status["isTriggerActive"] or status["message"] == "Writing offsets to log"
-
-
-def _await_drained(q, timeout_sec: int) -> None:
-    """Wait until an availableNow query has consumed its source, then stop it.
-
-    Self-terminating queries exit via the ``isActive`` check, as soon as
-    they end; the stateful ProcessingTimeTimeout case (see
-    ``run_to_memory``) is detected as all input consumed + one completed
-    zero-row trigger, and is stopped between batches (see
-    ``_between_batches``), or at the deadline."""
-    import time as _time
-
-    deadline = _time.monotonic() + timeout_sec
-    seen_data = False
-    zero_row_batches = 0
-    last_batch = -1
-    while _time.monotonic() < deadline:
-        if not q.isActive:
-            q.awaitTermination()  # raises the query's failure, if it failed
-            return
-        lp = q.lastProgress
-        if lp is not None and lp["batchId"] != last_batch:
-            last_batch = lp["batchId"]
-            if lp["numInputRows"] > 0:
-                seen_data = True
-                zero_row_batches = 0
-            else:
-                zero_row_batches += 1
-        # drained = input consumed + an empty trigger that found no new
-        # data; an entirely EMPTY source never sets seen_data, so accept a
-        # longer all-empty streak too instead of burning the whole timeout
-        if (seen_data and zero_row_batches >= 1) or zero_row_batches >= 5:
-            if not q.status["isDataAvailable"]:
-                break
-        q.awaitTermination(0.2)  # returns as soon as the query ends
-    while q.isActive and not _between_batches(q.status) and _time.monotonic() < deadline:
-        _time.sleep(0.005)
-    q.stop()
-    q.awaitTermination(30)
 
 
 def view_click_attribution(

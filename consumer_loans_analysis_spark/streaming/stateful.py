@@ -5,8 +5,11 @@ for operators Spark's built-in windows can't express).
 value sum / last-seen timestamp across micro-batches — the shape of a
 feature-store freshness pipeline (running aggregates served to a model).
 State is one tiny row per user, hash-partitioned on the grouping key, so
-it scales horizontally; a processing-time timeout evicts idle users to
-bound state size.
+it scales horizontally; an event-time timeout evicts users idle for 24 h of
+event time to bound state size. Eviction follows the data, not the clock:
+a replay evicts the same users every time, and a drained availableNow run
+ends after its data batches plus one empty batch that applies the final
+watermark.
 """
 
 from __future__ import annotations
@@ -58,7 +61,8 @@ def _update_user(
         batch_max_us = int(pdf["ts"].astype("int64").max()) // 1000
         last_us = max(last_us, batch_max_us)
     state.update((n, total, last_us))
-    state.setTimeoutDuration(24 * 3600 * 1000)  # evict users idle >24h wall time
+    # evict users idle > 24 h of event time
+    state.setTimeoutTimestamp(last_us // 1000 + 24 * 3600 * 1000)
     yield pd.DataFrame(
         {
             "user_id": [user_id],
@@ -73,14 +77,18 @@ def user_running_totals(events: DataFrame) -> DataFrame:
     """Per-user running (count, sum, last_ts) across the whole stream.
 
     Arrow-batched per group; output emits the updated row for every user
-    seen in the micro-batch (update semantics).
+    seen in the micro-batch (update semantics). The watermark trails the
+    latest event by 24 h, and a user is evicted (no row emitted) once the
+    watermark passes its last event by another 24 h; a user that comes
+    back later starts from zero. Once the watermark is set, a later
+    micro-batch drops rows older than it.
     """
-    return events.groupBy("user_id").applyInPandasWithState(
+    return events.withWatermark("ts", "24 hours").groupBy("user_id").applyInPandasWithState(
         _update_user,
         outputStructType=RUNNING_TOTALS_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 

@@ -18,7 +18,7 @@ from consumer_loans_analysis_spark.streaming import events
 ALLOWED = {
     "ccnet1_perplexity_buckets": (2, "reference bigram counts checkpointed"),
     "d6_dup_clusters": (32, "min-label rounds, each checkpointed"),
-    "d10_stream_dedup_drained": (5, "3 chunk writes + chunk schema inference + result checkpoint"),
+    "d10_stream_dedup_drained": (4, "3 chunk writes + result checkpoint"),
     "d11_semantic_dedup": (18, "min-label rounds, each checkpointed"),
     "d11b_semantic_dedup_kmeans": (18, "min-label rounds, each checkpointed"),
     "d12_bloom_incremental_dedup": (3, "Bloom filter bits collected"),

@@ -107,6 +107,60 @@ def test_stateful_running_totals(spark, sf_dir, batch_events, tmp_path):
         assert gs == pytest.approx(s, rel=1e-9)
 
 
+def test_running_totals_stream_ends_by_itself(spark, sf_dir):
+    """The running-totals operator evicts idle users by event time, so its
+    availableNow run ends by itself: the data batch, then at most one empty
+    batch that applies the final watermark."""
+    q = (
+        user_running_totals(stream_events(spark, sf_dir))
+        .writeStream.format("memory")
+        .queryName("t_totals_ends")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(60)
+    finally:
+        q.stop()
+    assert len(q.recentProgress) <= 2
+
+
+def test_stream_that_cannot_drain_raises_timeout(spark, sf_dir, tmp_path):
+    """A processing-time timeout schedules empty batches back to back, so
+    its availableNow run never ends: the drain raises at its deadline and
+    leaves no stream running, instead of returning a sink that may be
+    incomplete."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def count_user(key, pdfs, state):
+        n = sum(len(pdf) for pdf in pdfs)
+        state.update((n,))
+        state.setTimeoutDuration(3600 * 1000)
+        yield pd.DataFrame({"user_id": [key[0]], "n": [n]})
+
+    endless = (
+        stream_events(spark, sf_dir)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            count_user,
+            outputStructType="user_id long, n long",
+            stateStructType="n long",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        )
+    )
+    with pytest.raises(TimeoutError):
+        run_foreach_batch(
+            endless,
+            lambda batch_df, batch_id: batch_df.count(),
+            checkpoint_dir=str(tmp_path / "ckpt_endless"),
+            timeout_sec=5,
+        )
+    assert not spark.streams.active
+
+
 def test_foreach_batch_serving_shape(spark, sf_dir, tmp_path):
     """Streaming serving path: a transform applied per micro-batch."""
     seen = []
@@ -309,7 +363,7 @@ def test_concurrent_starts_restore_the_session_shuffle_width(spark):
         isActive = False
 
         def awaitTermination(self, timeout=None):
-            return None
+            return True
 
     class _Writer:
         def trigger(self, **kw):
@@ -624,91 +678,3 @@ def test_stream_c4_gate_equals_batch(spark, sf_dir):
         .collect()
     }
     assert got == batch and len(got) >= 2
-
-
-class _SpinningQuery:
-    """Stands in for a drained stateful query whose empty batches run back
-    to back. Its status cycles through ``schedule``, one step per read of
-    ``isActive``, ``lastProgress`` or ``status``: a (isTriggerActive,
-    message) pair per step. Batch 0 carries rows, later batches are empty."""
-
-    def __init__(self, schedule, phase: int):
-        self.schedule = schedule
-        self.clock = phase
-        self.batch = -1
-        self.stops: list[str] = []  # the status message at each stop()
-
-    def _now(self):
-        return self.schedule[self.clock % len(self.schedule)]
-
-    @property
-    def isActive(self) -> bool:
-        self.clock += 1
-        return not self.stops
-
-    @property
-    def lastProgress(self) -> dict:
-        self.clock += 1
-        self.batch += 1
-        return {"batchId": self.batch, "numInputRows": 10 if self.batch == 0 else 0}
-
-    @property
-    def status(self) -> dict:
-        self.clock += 1
-        active, message = self._now()
-        return {"isDataAvailable": False, "isTriggerActive": active, "message": message}
-
-    def stop(self) -> None:
-        self.stops.append(self._now()[1])
-
-    def awaitTermination(self, timeout=None) -> None:
-        pass
-
-
-_WORK = (True, "No new data but cleaning up state")
-_OFFSETS = (True, "Writing offsets to log")
-_IDLE = (False, "Waiting for next trigger")
-
-
-@pytest.mark.parametrize("gap", [_OFFSETS, _IDLE], ids=["back_to_back", "idle_gap"])
-@pytest.mark.parametrize("phase", range(5))
-def test_drained_stream_stops_between_batches(monkeypatch, gap, phase):
-    """``_await_drained`` stops a drained query only while no batch is
-    planned or run: stopping one mid-batch fails its broadcasts or aborts
-    its commits. Back-to-back empty batches never show an inactive trigger;
-    their offset-log write is the gap."""
-    import time
-
-    from consumer_loans_analysis_spark.streaming import events
-
-    monkeypatch.setattr(time, "sleep", lambda s: None)
-    q = _SpinningQuery([gap] + [_WORK] * 4, phase)
-    events._await_drained(q, timeout_sec=60)
-    assert q.stops == [gap[1]]
-
-
-def test_drained_stream_stop_keeps_the_deadline(monkeypatch):
-    """A batch that never ends does not hold the stop past the deadline."""
-    import time
-
-    from consumer_loans_analysis_spark.streaming import events
-
-    monkeypatch.setattr(time, "sleep", lambda s: None)
-    q = _SpinningQuery([_WORK], phase=0)
-    events._await_drained(q, timeout_sec=0)
-    assert q.stops == [_WORK[1]]
-
-
-def test_drained_stream_stops_after_one_empty_batch(monkeypatch):
-    """Once the data is in and no new data is available, the first
-    completed zero-row batch ends the drain: a drained stateful query's
-    empty batches re-scan all of its state, so a second one is waste."""
-    import time
-
-    from consumer_loans_analysis_spark.streaming import events
-
-    monkeypatch.setattr(time, "sleep", lambda s: None)
-    q = _SpinningQuery([_OFFSETS], phase=0)
-    events._await_drained(q, timeout_sec=60)
-    assert q.batch == 1  # batch 0 carried rows, batch 1 was the empty one
-    assert q.stops == [_OFFSETS[1]]
