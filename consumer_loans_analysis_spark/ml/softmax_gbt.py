@@ -265,13 +265,8 @@ def _leaves_udf(structs: list[dict]):
     return leaves
 
 
-def _scores_udf(rounds: list[list[dict]], priors: list[float], lr: float,
-                weights: list[float] | None = None):
-    """Arrow-batched: features array → F_k = log prior_k + w_m·Σ γ.
-
-    ``weights`` is the per-round tree weight (DART); None means the
-    uniform shrinkage ``lr`` for every round (plain boosting — bit-equal
-    to the pre-DART implementation since ``w_m == lr`` exactly).
+def _scores_udf(rounds: list[list[dict]], priors: list[float], lr: float):
+    """Arrow-batched: features array → F_k = log prior_k + lr·Σ γ.
 
     Fully vectorized: per (round, class) tree, one ``_walk_batch`` descent
     over the whole Arrow batch and one gather of baked leaf gammas —
@@ -282,7 +277,6 @@ def _scores_udf(rounds: list[list[dict]], priors: list[float], lr: float,
 
     arrs = [[_tree_arrays(tr) for tr in trees] for trees in rounds]
     base = np.asarray(priors, dtype=np.float64)
-    w = [lr] * len(rounds) if weights is None else list(weights)
 
     @pandas_udf("array<double>")
     def scores(vecs: pd.Series) -> pd.Series:
@@ -290,9 +284,9 @@ def _scores_udf(rounds: list[list[dict]], priors: list[float], lr: float,
             return pd.Series([], dtype=object)
         X = _as_matrix(vecs)
         Fm = np.tile(base, (X.shape[0], 1))
-        for wm, trees in zip(w, arrs):
+        for trees in arrs:
             for k, ta in enumerate(trees):
-                Fm[:, k] += wm * ta[6][_walk_batch(ta, X)]
+                Fm[:, k] += lr * ta[6][_walk_batch(ta, X)]
         return pd.Series(list(Fm))
 
     return scores
@@ -331,28 +325,15 @@ class SoftmaxGBTModel(Model, DefaultParamsReadable, DefaultParamsWritable):
         (pinned bit-equal in tests). One long fit + prefix evaluation
         therefore yields the whole iteration-saturation curve — the
         engine's early-stopping idiom, at 1× fit cost instead of one fit
-        per candidate iteration count.
-
-        DART models stay exact too: later rounds RESCALE earlier trees'
-        weights, so the fit records a per-round snapshot of the weight
-        vector (``weight_history[m]`` = weights after round m, O(M²/2)
-        floats total — tiny) and truncation restores snapshot
-        ``n_rounds − 1`` rather than slicing the final weights."""
+        per candidate iteration count."""
         state = json.loads(self.getOrDefault(self.modelJson))
         state["rounds"] = state["rounds"][:n_rounds]
-        if "weight_history" in state:
-            hist = state["weight_history"][:n_rounds]
-            state["weight_history"] = hist
-            state["weights"] = hist[-1] if hist else []
-        elif "weights" in state:
-            state["weights"] = state["weights"][:n_rounds]
-        out = SoftmaxGBTModel(
+        return SoftmaxGBTModel(
             modelJson=json.dumps(state),
             featuresCol=self.getOrDefault(self.featuresCol),
             predictionCol=self.getOrDefault(self.predictionCol),
             scoresCol=self.getOrDefault(self.scoresCol),
         )
-        return out
 
     def _transform(self, df: DataFrame) -> DataFrame:
         from pyspark.ml.functions import vector_to_array
@@ -364,10 +345,7 @@ class SoftmaxGBTModel(Model, DefaultParamsReadable, DefaultParamsWritable):
             if dict(df.dtypes).get(fcol) == "vector"
             else F.col(fcol)
         )
-        scores = _scores_udf(
-            state["rounds"], state["priors"], state["lr"],
-            weights=state.get("weights"),
-        )
+        scores = _scores_udf(state["rounds"], state["priors"], state["lr"])
         staged = df.withColumn("_sgbt_F", scores(farr))
         pred = (
             F.array_position(
@@ -407,9 +385,8 @@ class SoftmaxGBTClassifier(Estimator, DefaultParamsReadable, DefaultParamsWritab
     parallelism = Param(Params._dummy(), "parallelism", "concurrent per-class tree fits", TypeConverters.toInt)
     regLambda = Param(Params._dummy(), "regLambda", "L2 leaf regularization (XGBoost lambda): Newton gamma = (K-1)/K * sum(r) / (sum|r|(1-|r|) + lambda)", TypeConverters.toFloat)
     featureSubsetStrategy = Param(Params._dummy(), "featureSubsetStrategy", "per-NODE feature subsampling for the residual trees ('all' = off; else any MLlib RandomForest strategy, e.g. '0.84', 'sqrt'). MLlib resamples the subset at every node — a stronger regularizer than XGBoost's per-tree colsample_bytree, closer to colsample_bynode.", TypeConverters.toString)
-    dropoutRate = Param(Params._dummy(), "dropoutRate", "DART per-tree dropout probability (0.0 = plain boosting). Each round drops every prior tree-round independently with this probability before computing residuals; weights follow XGBoost dart normalize_type='tree': new round weight 1/(k+lr), dropped rounds scaled by k/(k+lr), k = #dropped (k=0 falls back to a standard shrinkage-lr round).", TypeConverters.toFloat)
     validationFraction = Param(Params._dummy(), "validationFraction", "held-out fraction for out-of-fold deviance tracking (0.0 = off). The split is a DETERMINISTIC feature-hash (xxhash64 of the feature array + seed): identical feature rows land on the same side (no twin leakage) and the split replays under any partitioning. Held-out rows are excluded from tree fits AND Newton gammas; priors use all rows.", TypeConverters.toFloat)
-    earlyStoppingRounds = Param(Params._dummy(), "earlyStoppingRounds", "stop when the held-out validationMetric has not improved for this many consecutive rounds, then truncate the model to the best round (XGBoost early_stopping_rounds semantics; prefix-nesting makes the truncation exact). 0 = never stop (validationFraction alone just tracks/holds out). Requires validationFraction > 0; incompatible with dropoutRate > 0.", TypeConverters.toInt)
+    earlyStoppingRounds = Param(Params._dummy(), "earlyStoppingRounds", "stop when the held-out validationMetric has not improved for this many consecutive rounds, then truncate the model to the best round (XGBoost early_stopping_rounds semantics; prefix-nesting makes the truncation exact). 0 = never stop (validationFraction alone just tracks/holds out). Requires validationFraction > 0.", TypeConverters.toInt)
     validationMetric = Param(Params._dummy(), "validationMetric", "'deviance' (multinomial NLL) or 'error' (1 - holdout accuracy, argmax F vs label). Deviance is the boosting objective but bottoms out EARLY on overfit-prone configs while accuracy still climbs (over-confidence inflates NLL without flipping argmaxes — measured on the ECON imputer: deviance stops at ~24 rounds and costs 0.028 micro-F1); use 'error' when the downstream metric is accuracy-like.", TypeConverters.toString)
 
     @keyword_only
@@ -420,7 +397,6 @@ class SoftmaxGBTClassifier(Estimator, DefaultParamsReadable, DefaultParamsWritab
                  subsamplingRate: float = 1.0, seed: int = 42,
                  parallelism: int = 16, regLambda: float = 0.0,
                  featureSubsetStrategy: str = "all",
-                 dropoutRate: float = 0.0,
                  validationFraction: float = 0.0,
                  earlyStoppingRounds: int = 0,
                  validationMetric: str = "deviance"):
@@ -432,7 +408,6 @@ class SoftmaxGBTClassifier(Estimator, DefaultParamsReadable, DefaultParamsWritab
                   subsamplingRate=subsamplingRate, seed=seed,
                   parallelism=parallelism, regLambda=regLambda,
                   featureSubsetStrategy=featureSubsetStrategy,
-                  dropoutRate=dropoutRate,
                   validationFraction=validationFraction,
                   earlyStoppingRounds=earlyStoppingRounds,
                   validationMetric=validationMetric)
@@ -467,9 +442,6 @@ class SoftmaxGBTClassifier(Estimator, DefaultParamsReadable, DefaultParamsWritab
         )
 
         rounds: list[list[dict]] = []
-        weights: list[float] = []
-        weight_history: list[list[float]] = []
-        dropout = g(self.dropoutRate)
         fss = g(self.featureSubsetStrategy)
         n_fit_threads = min(K, g(self.parallelism))
         vf = g(self.validationFraction)
@@ -479,11 +451,6 @@ class SoftmaxGBTClassifier(Estimator, DefaultParamsReadable, DefaultParamsWritab
             raise ValueError(f"validationMetric must be deviance | error, got {es_metric!r}")
         if es_rounds > 0 and vf <= 0.0:
             raise ValueError("earlyStoppingRounds requires validationFraction > 0")
-        if vf > 0.0 and dropout > 0.0:
-            raise ValueError(
-                "early stopping is incompatible with DART (dropout rescales "
-                "prior rounds, so the incremental holdout F is invalid)"
-            )
         extra = ["_holdout"] if vf > 0.0 else []
         if vf > 0.0:
             # deterministic feature-hash holdout: replays under any
@@ -496,29 +463,6 @@ class SoftmaxGBTClassifier(Estimator, DefaultParamsReadable, DefaultParamsWritab
             )
         best_dev, best_round = float("inf"), -1
         for m in range(g(self.maxIter)):
-            # 0. DART (Rashmi & Gilad-Bachrach 2015, XGBoost dart booster):
-            # drop each prior round independently w.p. dropoutRate, then
-            # REBUILD _F from the kept rounds' weighted trees (weights are
-            # rescaled by later rounds, so the incremental _F of plain
-            # boosting is invalid under DART). One map-only vectorized
-            # UDF pass — O(m) tree walks per round; at cluster scale an
-            # incremental F with a per-round correction term for the
-            # dropped/rescaled trees would cap this at O(#dropped), but
-            # the walks are in-batch numpy and the K distributed tree
-            # fits dominate wall time at every size probed.
-            drop: list[int] = []
-            if dropout > 0.0 and rounds:
-                import random
-
-                rng = random.Random(seed * 1000003 + m)
-                drop = [i for i in range(len(rounds)) if rng.random() < dropout]
-                keep = [i for i in range(len(rounds)) if i not in set(drop)]
-                rebuild = _scores_udf(
-                    [rounds[i] for i in keep], priors, lr,
-                    weights=[weights[i] for i in keep],
-                )
-                frame = frame.withColumn("_F", rebuild(F.col("_farr")))
-
             # 1. softmax + residuals, staged (lambda arrays are not CSE'd)
             mx = F.array_max(F.col("_F"))
             exps = F.transform(F.col("_F"), lambda v: F.exp(v - mx))
@@ -600,29 +544,12 @@ class SoftmaxGBTClassifier(Estimator, DefaultParamsReadable, DefaultParamsWritab
                 ]
             rounds.append(structs)
 
-            # 4a. DART weight bookkeeping (XGBoost normalize_type="tree"):
-            # k dropped → new round weight 1/(k+lr), each dropped round
-            # rescaled by k/(k+lr); k=0 (incl. every plain-boosting round)
-            # → standard shrinkage lr, no rescale
-            kd = len(drop)
-            if kd == 0:
-                weights.append(lr)
-            else:
-                factor = kd / (kd + lr)
-                for i in drop:
-                    weights[i] *= factor
-                weights.append(1.0 / (kd + lr))
-            weight_history.append(list(weights))
-
-            # 4b. F += lr·γ via one scoring pass over just this round's
-            # trees (plain boosting only — DART rebuilds _F each round
-            # from the rescaled weights, so the increment would be stale)
-            if dropout == 0.0:
-                step = _scores_udf([structs], [0.0] * K, lr)
-                frame = frame.select(
-                    "_feat", "_farr", "_y", *extra,
-                    F.zip_with("_F", step(F.col("_farr")), lambda a, b: a + b).alias("_F"),
-                )
+            # 4. F += lr·γ via one scoring pass over just this round's trees
+            step = _scores_udf([structs], [0.0] * K, lr)
+            frame = frame.select(
+                "_feat", "_farr", "_y", *extra,
+                F.zip_with("_F", step(F.col("_farr")), lambda a, b: a + b).alias("_F"),
+            )
 
             # 5. OOF deviance on the held-out slice (one small agg per
             # round); XGBoost early_stopping_rounds semantics — stop when
@@ -667,8 +594,6 @@ class SoftmaxGBTClassifier(Estimator, DefaultParamsReadable, DefaultParamsWritab
             # maxIter=best_round+1 with the same params (prefix-nesting;
             # pinned by test_early_stopping_equals_truncated_fit)
             rounds = rounds[: best_round + 1]
-            weights = weights[: best_round + 1]
-            weight_history = weight_history[: best_round + 1]
         state = {
             "rounds": [
                 [
@@ -680,11 +605,6 @@ class SoftmaxGBTClassifier(Estimator, DefaultParamsReadable, DefaultParamsWritab
             "priors": priors,
             "lr": lr,
         }
-        if dropout > 0.0:
-            # absent for plain boosting: state (and persisted JSON) stays
-            # byte-identical to the pre-DART format, scored with uniform lr
-            state["weights"] = weights
-            state["weight_history"] = weight_history
         model = SoftmaxGBTModel(
             modelJson=json.dumps(state),
             featuresCol=fcol,

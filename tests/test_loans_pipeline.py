@@ -383,7 +383,7 @@ def test_target_mean_encoder_closed_form(spark, tmp_path):
 
 def test_model_imputer_seed_bag_soft_vote(spark, tmp_path):
     """seedBag > 1: the imputer fits k members at deterministic seed
-    offsets and soft-averages their probabilities at transform time (the
+    offsets and sums their probabilities at transform time (the
     EMPLOYEE_NO-bar-winning protocol as a first-class capability). The
     bagged model must impute every sentinel row, leave present rows
     untouched, add no working columns, transform deterministically, and
@@ -402,9 +402,6 @@ def test_model_imputer_seed_bag_soft_vote(spark, tmp_path):
     for family, extra in [
         ("rf", {"numTrees": 8, "maxDepth": 3}),
         ("gbt_softmax", {"maxDepth": 3, "maxIter": 4, "stepSize": 0.3}),
-        # mlp is the most divergent bag path (StandardScaler prep stage,
-        # _mi_scaled featuresCol, vector probabilityCol) — keep it tiny
-        ("mlp", {"hiddenLayers": [4], "maxIter": 15}),
     ]:
         model = ModelImputer(
             targetCol="t", sentinel="Missing", seedBag=3,
@@ -431,11 +428,63 @@ def test_model_imputer_seed_bag_soft_vote(spark, tmp_path):
                     key=lambda r: (r["x"], r["y"], r["t"]))
         assert re == got, family
 
+
+def _single_model_labels(df, classifier, target="t", sentinel="Missing"):
+    """The target imputed by an explicit MLlib
+    ``Pipeline([StringIndexer, VectorAssembler, classifier])`` fitted on the
+    present rows: each missing row gets the label of the classifier's
+    ``prediction``, and present rows keep theirs."""
+    from pyspark.ml import Pipeline, PipelineModel
+    from pyspark.ml.feature import StringIndexer, VectorAssembler
+
+    features = [c for c, t in df.dtypes if c != target and t in ("bigint", "double")]
+    fitted = Pipeline(stages=[
+        StringIndexer(inputCol=target, outputCol="label", stringOrderType="alphabetAsc"),
+        VectorAssembler(inputCols=features, outputCol="features"),
+        classifier,
+    ]).fit(df.filter(F.col(target) != sentinel))
+    labels = fitted.stages[0].labelsArray[0]
+    # the indexer fails on the sentinel, so serve through the other stages
+    pred = PipelineModel(fitted.stages[1:]).transform(df).select(target, "prediction")
+    return [labels[int(p)] if t == sentinel else t for t, p in pred.collect()]
+
+
+def test_model_imputer_bag_of_one_is_the_single_model(spark):
+    """A single model is a bag of one: the default imputer imputes what an
+    explicit StringIndexer → VectorAssembler → RandomForestClassifier
+    pipeline with the same seed predicts, and a one-member gbt_softmax
+    imputer imputes SoftmaxGBTModel's prediction."""
+    import random
+
+    from pyspark.ml.classification import RandomForestClassifier
+
+    from consumer_loans_analysis_spark.ml.softmax_gbt import SoftmaxGBTClassifier
+    from consumer_loans_analysis_spark.pipeline.model_imputer import ModelImputer
+
+    rng = random.Random(5)
+    rows = [(i % 4, rng.random(), rng.choice("abc") if i % 6 else "Missing")
+            for i in range(300)]
+    df = spark.createDataFrame(rows, "x long, y double, t string")
+    rf = ModelImputer(targetCol="t", sentinel="Missing", numTrees=7, maxDepth=4).fit(df)
+    assert [r["t"] for r in rf.transform(df).collect()] == _single_model_labels(
+        df, RandomForestClassifier(numTrees=7, maxDepth=4, seed=42))
+    gbt = ModelImputer(targetCol="t", sentinel="Missing", classifierFamily="gbt_softmax",
+                       maxDepth=3, maxIter=4, stepSize=0.3).fit(df)
+    assert [r["t"] for r in gbt.transform(df).collect()] == _single_model_labels(
+        df, SoftmaxGBTClassifier(maxDepth=3, maxIter=4, stepSize=0.3, seed=42))
+
+
+def test_model_imputer_rejects_unknown_family(spark):
+    """classifierFamily is rf or gbt_softmax; any other name raises before
+    a Spark job runs, lr, mlp and gbt_ovr included."""
     import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="seedBag"):
-        ModelImputer(targetCol="t", sentinel="Missing", seedBag=3,
-                     classifierFamily="lr").fit(df)
+    from consumer_loans_analysis_spark.pipeline.model_imputer import ModelImputer
+
+    df = spark.createDataFrame([(1.0, "a"), (2.0, "Missing")], "x double, t string")
+    for family in ("nope", "lr", "mlp", "gbt_ovr"):
+        with _pytest.raises(ValueError, match="classifierFamily"):
+            ModelImputer(targetCol="t", classifierFamily=family).fit(df)
 
 
 def _compiles(spark) -> int:
@@ -496,8 +545,10 @@ def test_assemble_features_equals_vector_assembler(spark, loans_train):
 def test_model_imputer_transform_compiles_once(spark):
     """A ModelImputerModel assembles its long features uid-free: a second
     transform, by the same model or by one fitted again, compiles no class,
-    and the imputed values are those of its inner pipeline run on the
-    uncast frame."""
+    and the imputed values are those of an explicit MLlib pipeline fitted
+    on the uncast frame."""
+    from pyspark.ml.classification import RandomForestClassifier
+
     from consumer_loans_analysis_spark.pipeline.model_imputer import ModelImputer
 
     rows = [(i % 3, float((i * 7) % 5), "abc"[i % 3] if i % 5 else "Missing")
@@ -516,11 +567,8 @@ def test_model_imputer_transform_compiles_once(spark):
     assert _compiles(spark) - before == 0
     assert model.transform(df).dtypes == df.dtypes
     assert [r[:2] for r in first] == [r[:2] for r in df.collect()]
-    labels = model.spec["labels"]
-    inner = model.inner.transform(df).select("t", "_mi_prediction").collect()
-    assert [r["t"] for r in first] == [
-        labels[int(p)] if t == "Missing" else t for t, p in inner
-    ]
+    assert [r["t"] for r in first] == _single_model_labels(
+        df, RandomForestClassifier(numTrees=5, maxDepth=3, seed=42))
 
 
 def test_scaler_empty_and_all_null_columns(spark):

@@ -392,42 +392,10 @@ def test_imputer_eval_beats_mode_baseline(spark):
 
 
 @requires_files(ORIG_TRAIN, ORIG_VALID)
-def test_imputer_classifier_families(spark):
-    """classifierFamily swaps the inner model (rf | lr | mlp) behind the
-    same impute semantics: every family recovers hidden EDUCATION values
-    above the mode floor, and unknown families raise."""
-    import pytest as _pytest
-
-    from consumer_loans_analysis_spark.ml.imputer_eval import evaluate_imputer, mode_baseline
-    from consumer_loans_analysis_spark.pipeline.model_imputer import ModelImputer
-    from consumer_loans_analysis_spark.sources.readers import read_loans_csv
-
-    train = read_loans_csv(spark, "/root/reference/data/orig_train.csv").cache()
-    valid = read_loans_csv(spark, "/root/reference/data/orig_valid.csv").cache()
-    floor = mode_baseline(train, valid, "EDUCATION")
-    for family, extra in [
-        ("lr", {"regParam": 0.01, "maxIter": 40}),
-        ("mlp", {"hiddenLayers": [32], "maxIter": 120}),
-        ("gbt_ovr", {"maxDepth": 3, "maxIter": 8}),
-    ]:
-        imp = ModelImputer(
-            targetCol="EDUCATION", sentinel="Missing",
-            classifierFamily=family, **extra,
-        )
-        f1 = evaluate_imputer(imp.fit(train), valid, "EDUCATION")
-        assert f1 > floor, (family, f1, floor)
-    with _pytest.raises(ValueError, match="classifierFamily"):
-        ModelImputer(targetCol="EDUCATION", classifierFamily="nope").fit(train)
-
-
-@requires_files(ORIG_TRAIN, ORIG_VALID)
-def test_imputer_forwards_dart_and_colsample(spark):
-    """ModelImputer forwards dropoutRate / featureSubsetStrategy to the
-    gbt_softmax family (the r5 tuning waves depend on this): the fitted
-    inner SoftmaxGBTModel must carry DART weights, and the imputer still
+def test_imputer_forwards_colsample(spark):
+    """ModelImputer forwards featureSubsetStrategy to the gbt_softmax
+    family (the r5 tuning waves depend on this), and the imputer still
     recovers hidden values above the mode floor."""
-    import json
-
     from consumer_loans_analysis_spark.ml.imputer_eval import evaluate_imputer, mode_baseline
     from consumer_loans_analysis_spark.pipeline.model_imputer import ModelImputer
     from consumer_loans_analysis_spark.sources.readers import read_loans_csv
@@ -437,12 +405,10 @@ def test_imputer_forwards_dart_and_colsample(spark):
     imp = ModelImputer(
         targetCol="EDUCATION", sentinel="Missing",
         classifierFamily="gbt_softmax", maxDepth=3, maxIter=6,
-        stepSize=0.3, dropoutRate=0.5, featureSubsetStrategy="0.5",
+        stepSize=0.3, featureSubsetStrategy="0.5",
     )
+    assert imp._member("gbt_softmax", 0).getOrDefault("featureSubsetStrategy") == "0.5"
     fitted = imp.fit(train)
-    sgbt = fitted.inner.stages[-1]
-    st = json.loads(sgbt.getOrDefault(sgbt.modelJson))
-    assert len(st["weights"]) == 6  # DART reached the inner estimator
     floor = mode_baseline(train, valid, "EDUCATION")
     assert evaluate_imputer(fitted, valid, "EDUCATION") > floor
 
@@ -793,51 +759,6 @@ def _sgbt_toy(spark, n=400, seed=3):
         label = float((a + 0.5 * b > 0) + (a - b > 1))
         rows.append((Vectors.dense([a, b, a * b]), label))
     return spark.createDataFrame(rows, ["features", "label"]).cache()
-
-
-def test_softmax_gbt_dart(spark):
-    """DART dropout (XGBoost normalize_type='tree' weights):
-
-    (a) dropoutRate=0.0 keeps the serialized state byte-identical to the
-        pre-DART format (no 'weights' key — old persisted models and the
-        plain-boosting bit-equality tests are untouched);
-    (b) a DART fit records per-round weights that actually deviate from
-        uniform shrinkage, and total weight mass is conserved by the
-        tree-normalization identity (k·k/(k+lr) + 1/(k+lr) = k — each
-        dropout round preserves the dropped mass while adding lr-worth);
-    (c) withMaxRounds(n) on a DART fit equals a fresh maxIter=n DART fit
-        bit-for-bit — the weight_history snapshot restores the rescaled
-        weights as they stood at round n (the dropout draw at round m
-        depends only on (seed, m), so prefixes are nested)."""
-    import json
-
-    from consumer_loans_analysis_spark.ml.softmax_gbt import SoftmaxGBTClassifier
-
-    df = _sgbt_toy(spark)
-    plain = SoftmaxGBTClassifier(maxIter=3, maxDepth=3).fit(df)
-    st_plain = json.loads(plain.getOrDefault(plain.modelJson))
-    assert "weights" not in st_plain and "weight_history" not in st_plain
-
-    dart = SoftmaxGBTClassifier(
-        maxIter=6, maxDepth=3, stepSize=0.2, dropoutRate=0.6, scoresCol="probs"
-    ).fit(df)
-    st = json.loads(dart.getOrDefault(dart.modelJson))
-    assert len(st["weights"]) == 6
-    assert len(st["weight_history"]) == 6
-    assert st["weight_history"][-1] == st["weights"]
-    # with rate 0.6 over 6 rounds some draw must have fired → weights
-    # cannot all equal the uniform shrinkage
-    assert any(abs(w - 0.2) > 1e-12 for w in st["weights"])
-
-    short = SoftmaxGBTClassifier(
-        maxIter=4, maxDepth=3, stepSize=0.2, dropoutRate=0.6, scoresCol="probs"
-    ).fit(df)
-    trunc = dart.withMaxRounds(4)
-    got = trunc.transform(df).select("prediction", "probs").collect()
-    want = short.transform(df).select("prediction", "probs").collect()
-    assert [r["prediction"] for r in got] == [r["prediction"] for r in want]
-    for g, w in zip(got, want):
-        assert list(g["probs"]) == list(w["probs"])
 
 
 def test_softmax_gbt_feature_subset(spark):
@@ -1199,10 +1120,6 @@ def test_early_stopping_equals_truncated_fit(spark):
 
     with _pytest.raises(ValueError, match="validationFraction"):
         SoftmaxGBTClassifier(earlyStoppingRounds=3).fit(data)
-    with _pytest.raises(ValueError, match="DART"):
-        SoftmaxGBTClassifier(
-            validationFraction=0.2, dropoutRate=0.5
-        ).fit(data)
 
 
 def test_early_stopping_error_metric(spark):

@@ -71,7 +71,8 @@ def test_model_imputer_pipeline_roundtrip_synthetic(spark, tmp_path):
     """A ModelImputer fitted inside a Pipeline must reload through
     ``PipelineModel.load``: the stage writes MLlib ``metadata/`` (the
     class name the pipeline reader dispatches on) next to its spec and
-    inner model. Synthetic frame, so this runs on any host."""
+    inner model. The default single forest and a two-member seed bag both
+    round-trip. Synthetic frame, so this runs on any host."""
     from pyspark.ml import Pipeline
 
     rows = []
@@ -80,19 +81,21 @@ def test_model_imputer_pipeline_roundtrip_synthetic(spark, tmp_path):
         label = "lo" if x < 5 else "hi"
         rows.append((i, x, float(i % 3), "Missing" if i % 7 == 0 else label))
     df = spark.createDataFrame(rows, "id long, x double, z double, cat string")
-    fitted = Pipeline(
-        stages=[
-            ModelImputer(
-                targetCol="cat", sentinel="Missing", classifierFamily="lr",
-                maxIter=20,
-            )
-        ]
-    ).fit(df)
-    path = str(tmp_path / "imp_pipe")
-    fitted.write().overwrite().save(path)
-    loaded = PipelineModel.load(path)
-    assert type(loaded.stages[0]).__name__ == "ModelImputerModel"
-    a = fitted.transform(df)
-    b = loaded.transform(df)
-    _frame_equal(a, b)
-    assert b.filter(F.col("cat") == "Missing").count() == 0
+    for bag in (1, 2):
+        fitted = Pipeline(
+            stages=[
+                ModelImputer(
+                    targetCol="cat", sentinel="Missing", numTrees=5, maxDepth=3,
+                    seedBag=bag,
+                )
+            ]
+        ).fit(df)
+        path = str(tmp_path / f"imp_pipe_{bag}")
+        fitted.write().overwrite().save(path)
+        loaded = PipelineModel.load(path)
+        assert type(loaded.stages[0]).__name__ == "ModelImputerModel"
+        assert loaded.stages[0].spec == fitted.stages[0].spec
+        a = fitted.transform(df)
+        b = loaded.transform(df)
+        _frame_equal(a, b)
+        assert b.filter(F.col("cat") == "Missing").count() == 0
